@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components → `(id, component)` with component = min node id
@@ -19,15 +20,14 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** Min-label propagation. Convergence via an order-independent
-    * (count, bit_xor(xxhash64)) fingerprint of the label assignment —
-    * overflow-free under ANSI mode even for arbitrary 64-bit ids
-    * (a plain `sum(component)` can overflow and throw). */
+    * bit_xor(xxhash64) fingerprint of the label assignment — overflow-free
+    * under ANSI mode even for arbitrary 64-bit ids (a plain
+    * `sum(component)` can overflow and throw). */
   def labelProp(g: PropertyGraph, maxIter: Int = 100): DataFrame = {
     val adj = g.adjacency.select("src", "dst")
     val init = g.vertices.select(col("id"), col("id").as("component"))
     Fixpoint.loopUntilStableFingerprint(init, maxIter,
-      df => df.agg(bit_xor(xxhash64(col("id"), col("component"))))
-        .head.getLong(0),
+      df => Fixpoint.hashFingerprint(df, "id", "component")._2,
       checkpointEvery = 4) { (labels, _) =>
       val viaNbr = labels.join(adj, labels("id") === adj("src"))
         .select(col("dst").as("id"), col("component"))
@@ -48,52 +48,43 @@ object ConnectedComponents {
     def sym(e: DataFrame): DataFrame =
       e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
 
-    // each star pays ONE exchange: the symmetric view is hash-partitioned
-    // by u up front, so the min-aggregate AND the star join both reuse
-    // that partitioning (groupBy needs only clustering on u; the join's
-    // other side derives from the same exchange) — 3 exchanges per round
-    // (largeStar, smallStar, dedup) instead of 5
-    def symByU(e: DataFrame): DataFrame = sym(e).repartition(col("u"))
+    // m = min(N(u) ∪ {u}) attached to every pair of the symmetric view
+    // by a window over u. The stars' `v > u` / `v <= u` filters reference
+    // v, so they stay ABOVE the window and both of a star's consumers
+    // read the one hash(u) exchange below it: 3 exchanges per round
+    // (largeStar, smallStar, dedup). Not a groupBy(u) min joined back:
+    // Catalyst pushes each star's filter into the join side only, which
+    // then plans an exchange of its own instead of sharing the
+    // aggregate's.
+    def withNbrMin(e: DataFrame): DataFrame =
+      sym(e).withColumn("m",
+        least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
 
-    // min(N(u) ∪ {u}) per node over a symmetric pair set
-    def nbrMin(s: DataFrame): DataFrame =
-      s.groupBy("u").agg(min(col("v")).as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = symByU(e)
-      val m = nbrMin(s)
-      s.join(m, "u").filter(col("v") > col("u"))
+    def largeStar(e: DataFrame): DataFrame =
+      withNbrMin(e).filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
-    }
 
+    // every pair of u carries the same m, so `self` repeats (u, m) once
+    // per neighbour; the distinct that dedups the round removes them
     def smallStar(e: DataFrame): DataFrame = {
-      val s = symByU(e)
-      val m = nbrMin(s)
-      val moved = s.join(m, "u").filter(col("v") <= col("u"))
+      val s = withNbrMin(e)
+      val moved = s.filter(col("v") <= col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-      val self = m.select(col("u"), col("m").as("v"))
+      val self = s.select(col("u"), col("m").as("v"))
       moved.unionAll(self).filter(col("u") =!= col("v")).distinct()
     }
 
-    // order-independent, overflow-free edge-set fingerprint (ANSI mode
-    // forbids a plain sum of xxhash64 values)
-    def checksum(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-
-    // lineage cut every round: each round references its input ~16×
-    // (sym, nbrMin, both stars), so the plan grows 16^k without
-    // truncation. Fused loop: the (count, xor) checksum IS the
-    // materializing action — one job per round.
+    // lineage cut every round: each round references its input several
+    // times (sym, both stars), so the plan grows exponentially without
+    // truncation. Fused loop: the one-job (count, xor) edge-set
+    // fingerprint IS the materializing action.
     val stars = Fixpoint.loopFusedFingerprint(base, maxIter) {
       (e, i) =>
         val round = smallStar(largeStar(e))
         if (i > 0) Fixpoint.dumpLoopPlan("cc_star_round", round)
         round
-    } { e => checksum(e) }
+    } { e => Fixpoint.hashFingerprint(e, "u", "v") }
 
     // star forest: every non-root points at its root. Roots and isolated
     // vertices are covered by seeding EVERY vertex with itself as a

@@ -200,7 +200,7 @@ object GraphOps {
       g.adjacency.filter(col("src") =!= col("dst"))).select("src", "dst")
     // checkpointEvery = 1: the peel step references e three times
     val fin = Fixpoint.loopUntilStableScalar(start, maxIter,
-      df => df.count().toDouble, checkpointEvery = 1) { (e, i) =>
+      df => Fixpoint.materialize(df).toDouble, checkpointEvery = 1) { (e, i) =>
       val deg = e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select("id")

@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** PageRank by power iteration (reference:
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Each iteration = one shuffle (join ranks→adjacency on src, groupBy
   * dst) plus two scalar aggregations (sink mass, L1 diff). The adjacency
   * with out-degree attached is computed once, repartitioned by `src` and
-  * persisted, so every iteration's join reuses the same partitioning —
+  * checkpointed, so every iteration's join reuses the same partitioning —
   * at cluster scale this is the difference between one and two shuffles
   * per round.
   */
@@ -36,36 +37,39 @@ object PageRank {
     // probe jobs (a distinct over the full edge table each) entirely
     val structurallyCovered = !g.directed && g.verticesOpt.isEmpty
 
-    // ONE exchange of the edge table; out-degree agg and the share join
-    // both reuse hash(src) partitioning, so setup is a single wide job
-    val adjRep = g.adjacency.repartition(shufflePartitions, col("src"))
-    val outW =
-      if (weighted) adjRep.groupBy("src").agg(sum("weight").as("out"))
-      else adjRep.groupBy("src").agg(count(lit(1)).cast("double").as("out"))
-    val adj = adjRep.join(outW, "src")
+    // ONE exchange of the edge table: the out-degree is a window over
+    // src on that same repartition (a groupBy(src) joined back has its
+    // input pruned to `src` alone and plans a second exchange). The loop
+    // invariants (adj, nodes, sinks) are eager localCheckpoints, not
+    // persists: AQE does not reuse a broadcast across separate
+    // TableCacheQueryStages, so a persisted adj is re-broadcast at every
+    // step of a span, while the broadcasts of one checkpointed RDD in a
+    // span are one exchange plus ReusedExchanges. An edge with a null
+    // endpoint joins nothing; dropping it up front keeps each step from
+    // inferring its own `isnotnull` filter over adj (the last step of a
+    // span infers a different one and would broadcast adj again).
+    val bySrc = Window.partitionBy("src")
+    val adj = g.adjacency.filter(col("src").isNotNull && col("dst").isNotNull)
+      .repartition(shufflePartitions, col("src"))
       .select(col("src"), col("dst"),
-        (if (weighted) col("weight") / col("out") else lit(1.0) / col("out")).as("share"))
-      .persist()
+        (if (weighted) col("weight") / sum("weight").over(bySrc)
+         else lit(1.0) / count(lit(1)).over(bySrc)).as("share"))
+      .localCheckpoint(true)
 
-    // pre-partitioned like the per-iteration contrib (hash on id) so the
-    // in-coverage completion join never re-exchanges the node table; for
-    // the structurally-covered case the distinct over `src` of the
-    // persisted adj reuses its partitioning — no extra exchange. The
-    // nodes count is also what materializes adj (its scan populates the
-    // persist) — one setup job instead of a separate adj.count() pass.
     val nodes = (
       if (structurallyCovered) adj.select(col("src").as("id")).distinct()
-      else g.vertices.select("id").repartition(shufflePartitions, col("id"))
-    ).persist()
-    val n = nodes.count().toDouble
+      else g.vertices.select("id")
+    ).localCheckpoint(true)
+    val n = Fixpoint.materialize(nodes).toDouble
     dbg("adj+nodes materialized")
     val init = nodes.select(col("id"), lit(1.0 / n).as("rank"))
 
     // nodes with no out-edges: their rank is redistributed uniformly
     val sinks =
       if (structurallyCovered) null
-      else nodes.join(outW.select(col("src").as("id")), Seq("id"), "left_anti").persist()
-    val nSinks = if (structurallyCovered) 0L else sinks.count()
+      else nodes.join(adj.select(col("src").as("id")), Seq("id"), "left_anti")
+        .localCheckpoint(true)
+    val nSinks = if (structurallyCovered) 0L else Fixpoint.materialize(sinks)
     val hasSinks = nSinks > 0
     // a sink with no in-edges (every sink of an undirected graph is an
     // isolated vertex) receives only teleport + sink share, so the total
@@ -107,8 +111,7 @@ object PageRank {
     // per span — materializing init separately would be pure overhead
     var cur =
       if (tol > 0) {
-        val c = init.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count(); dbg("init materialized"); c
+        val c = init.localCheckpoint(true); dbg("init materialized"); c
       } else init
     // isolated-sink mass recurrence: s₀ = nSinks/n (initial uniform rank),
     // s_{k+1} = nSinks·((1−d)/n + d·s_k/n)
@@ -136,7 +139,7 @@ object PageRank {
           .join(cur.select(col("id"), col("rank").as("prev")), "id")
           .agg(sum(abs(col("rank") - col("prev")))).head.getDouble(0)
         done = diff < tol
-      } else next.count()
+      } else Fixpoint.materialize(next)
       if (debug) System.err.println(
         f"[pagerank] iters $i..${i + span} ${(System.nanoTime() - t0) / 1e9}%.2fs")
       Fixpoint.free(cur) // checkpoint blocks — Dataset.unpersist misses them
@@ -144,9 +147,12 @@ object PageRank {
       i += span
     }
     dbg("loop done")
+    // after a step, cur is a materialized checkpoint that reads none of
+    // these; with maxIter = 0 it is still init, a projection of nodes
     val result = cur.select("id", "rank")
-    adj.unpersist(false); nodes.unpersist(false)
-    if (sinks != null) sinks.unpersist(false)
+    Fixpoint.free(adj)
+    if (i > 0) Fixpoint.free(nodes)
+    if (sinks != null) Fixpoint.free(sinks)
     result
   }
 
@@ -184,15 +190,18 @@ object PageRank {
         .select(col("id"), coalesce(col("raw"), lit(0.0)).as("raw"))
       val norm = math.sqrt(full.agg(sum(col("raw") * col("raw"))).head.getDouble(0))
       full.select(col("id"), (col("raw") / lit(if (norm == 0.0) 1.0 else norm)).as("score"))
-    } { (prev, next, _) =>
-      val diff = prev.select(col("id"), col("score").as("s0"))
-        .join(next.select(col("id"), col("score").as("s1")), "id")
-        .agg(sum(abs(col("s1") - col("s0")))).head.getDouble(0)
-      diff < tol
-    }
+    } { (prev, next, _) => tol > 0 && l1Diff(prev, next) < tol }
     adj.unpersist(false)
     result
   }
+
+  // L1 distance between two `(id, score)` states. A diff is never
+  // negative, so with `tol <= 0` the callers skip it and run `maxIter`
+  // rounds without the per-round join + aggregate.
+  private def l1Diff(prev: DataFrame, next: DataFrame): Double =
+    prev.select(col("id"), col("score").as("s0"))
+      .join(next.select(col("id"), col("score").as("s1")), "id")
+      .agg(sum(abs(col("s1") - col("s0")))).head.getDouble(0)
 
   /** Katz centrality: x ← α·Aᵀx + β iterated (reference
     * `centrality/KatzCentrality.hpp:29`). */
@@ -224,12 +233,7 @@ object PageRank {
       nodes.join(nxt, Seq("id"), "left")
         .select(col("id"),
           (lit(alpha) * coalesce(col("raw"), lit(0.0)) + lit(beta)).as("score"))
-    } { (prev, next, _) =>
-      val diff = prev.select(col("id"), col("score").as("s0"))
-        .join(next.select(col("id"), col("score").as("s1")), "id")
-        .agg(sum(abs(col("s1") - col("s0")))).head.getDouble(0)
-      diff < tol
-    }
+    } { (prev, next, _) => tol > 0 && l1Diff(prev, next) < tol }
     adj.unpersist(false)
     result
   }
