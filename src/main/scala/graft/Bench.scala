@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main (driver contract): runs the headline
   * queries on `SPARK_GRAFT_SF_DIR` and prints one JSON line
   * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
@@ -22,48 +20,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // optional comma-separated subset for local profiling; driver sets nothing
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
-    val selected = headline.filter(n => only.forall(_.contains(n)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = headline.filter(Tool.selected)
+    val spark = Tables.session(Tool.cpus)
 
     // one tiny warmup action so JVM/codegen startup isn't billed to q1
     spark.range(1000).count()
+
+    /** Wall seconds of `runs` runs of `name`, None for a failed run. */
+    def times(name: String, runs: Int): Seq[Option[Double]] = {
+      val fn = SparkEntry.queries(name)
+      (1 to runs).map(_ => Tool.attempt(spark, "bench", name)(Tool.timed(fn(spark, sfDir).count())._2))
+    }
 
     // medians of `runs` (default 3) so single-run noise (JIT, GC, page
     // cache) doesn't masquerade as a regression; min is reported too so
     // best-case cost stays visible
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    var anyFailed = false
-    val results = selected.map { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to runs).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
-          case t: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${t.getMessage}")
-            anyFailed = true; false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // housekeeping OUTSIDE the timed section: drop caches left by
-        // the query and collect garbage so GC pauses aren't billed to
-        // the next measurement
-        spark.catalog.clearCache()
-        System.gc()
-        if (ok) Some(dt) else None
-      }
-      val sorted = times.sorted
-      val median = if (sorted.isEmpty) -1.0 else sorted(sorted.length / 2)
-      val minT = if (sorted.isEmpty) -1.0 else sorted.head
-      (name, median, minT)
+    val headRuns = selected.map(name => name -> times(name, runs))
+    val results = headRuns.map { case (name, ts) =>
+      val sorted = ts.flatten.sorted
+      (name, sorted.lift(sorted.length / 2).getOrElse(-1.0), sorted.headOption.getOrElse(-1.0))
     }
     def fmt(sel: ((String, Double, Double)) => Double) = results
       .map { r => "\"" + r._1 + "\":" + f"${sel(r)}%.3f" }.mkString("{", ",", "}")
@@ -82,24 +58,13 @@ object Bench {
         "g7_pagerank", "ev2_sessions"))
       .filter(selected.contains)
     val floorRuns = sys.env.getOrElse("SPARK_GRAFT_FLOOR_RUNS", "5").toInt
-    val floors = floorNames.map { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to floorRuns).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
-          case _: Throwable => false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        System.gc()
-        if (ok) Some(dt) else None
-      }
-      (name, if (times.isEmpty) -1.0 else times.min)
-    }
-    val fl = floors
-      .map { case (n, v) => "\"" + n + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val fl = floorNames
+      .map { n => "\"" + n + "\":" + f"${times(n, floorRuns).flatten.minOption.getOrElse(-1.0)}%.3f" }
+      .mkString("{", ",", "}")
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$runs,"queries":$qs,"queries_min":$qsMin,"floors":$fl,"floor_runs":$floorRuns,"sf":"$sfDir"}""")
     spark.stop()
-    if (anyFailed) sys.exit(1)
+    // a failed headline run fails the benchmark; a failed floor run only
+    // drops out of its minimum
+    if (headRuns.exists(_._2.contains(None))) sys.exit(1)
   }
 }

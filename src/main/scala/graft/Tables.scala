@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Loaders for the driver-generated parquet tables (TESTDATA.md). */
+/** Loaders for the generated parquet tables (TESTDATA.md), and the one
+  * factory for the SparkSession they are read with. */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -60,5 +61,19 @@ object Tables {
       "spark.sql.join.preferSortMergeJoin" -> "false")
     if (sys.env.contains("GRAFT_DISABLE_CLAMP")) base
     else base + ("spark.sql.extensions" -> "graft.GraftExtensions")
+  }
+
+  /** The only place a SparkSession is built: `local[cpus]` with
+    * `cpus` shuffle partitions, no UI, [[sessionConfigs]], then
+    * `overrides` (applied last, so they win over [[sessionConfigs]]).
+    * Adaptive execution is on by Spark's default. */
+  def session(cpus: Int, overrides: (String, String)*): SparkSession = {
+    val b = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+    (sessionConfigs.toSeq ++ overrides).foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

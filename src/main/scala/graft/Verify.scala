@@ -1,38 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query's
+  * directory is deleted before it runs, so a failed query leaves no
+  * output from an earlier run for the compare to pass. Ends with one
+  * `[verify] ok=N failed=M: <names>` line on stderr; exits 0 either way. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(Tool.cpus)
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated filter for local iteration; driver sets nothing
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries persist intermediates; drop them between queries so a
-      // 50-query run doesn't accumulate cached blocks + broadcasts
-      spark.catalog.clearCache()
-      System.gc()
+    val queries = SparkEntry.queries.filter(q => Tool.selected(q._1))
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      val dir = s"$outDir/$name"
+      FileUtils.deleteDirectory(new java.io.File(dir))
+      Tool.attempt(spark, "verify", name) {
+        val dt = Tool.timed(fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(dir))._2
+        System.err.println(f"[verify] $name ok $dt%.1fs")
+      }.fold(Option(name))(_ => None)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -50,5 +36,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    System.err.println(s"[verify] ok=${queries.size - failed.size} failed=${failed.size}: ${failed.sorted.mkString(",")}")
   }
 }

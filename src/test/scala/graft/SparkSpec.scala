@@ -11,14 +11,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+    val s = Tables.session(8)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
