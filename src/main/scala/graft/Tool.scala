@@ -177,17 +177,16 @@ object Tool {
   private def planProbe(spark: SparkSession, args: Seq[String]): Boolean = {
     val points = args.headOption.fold(Seq(5000L))(_.split(",").map(_.trim.toLong).toSeq)
     def hashed(seed: Long, mod: Long) = pmod(xxhash64(lit(seed), col("id")), lit(mod))
-    points.flatMap { n =>
-      val coords = spark.range(n).select(col("id"),
+    points.flatMap { n => Fixpoint.scope { st =>
+      val coords = st.cut(spark.range(n).select(col("id"),
           (hashed(1L, 1000000L).cast("double") / 1000000.0).as("c0"),
-          (hashed(2L, 1000000L).cast("double") / 1000000.0).as("c1"))
-        .localCheckpoint(true)
+          (hashed(2L, 1000000L).cast("double") / 1000000.0).as("c1")))
       val checks = Seq(
         ("gini", Coloring.gini(spark.range(n).select(hashed(9L, 1000L).as("deg")), "deg"), false),
         ("octree_bh", Octree.repulsion(coords, dim = 2, qSign = 1.0, q2 = 1.0, exactBelow = 0), true),
         ("srp_occupancy", Similarity.srpBuckets(hashVectors(spark, n, 16), "vec_id", "embedding",
           Similarity.srpBits(n)).groupBy("bucket").agg(count(lit(1)).as("s")), true))
-      val oks = checks.map { case (name, df, banSinglePartition) =>
+      checks.map { case (name, df, banSinglePartition) =>
         // runs df's own executed plan, so the checked plan is the final (AQE-resolved) one
         val (rows, sec) = timed(Fixpoint.materialize(df))
         val hits = violations(df, banSinglePartition)
@@ -195,9 +194,7 @@ object Tool {
           hits.map("\"" + _ + "\"").mkString(",")}],"ok":${hits.isEmpty},"rows":$rows,"sec":$sec%.1f}""")
         hits.isEmpty
       }
-      Fixpoint.free(coords)
-      oks
-    }.forall(identity)
+    }}.forall(identity)
   }
 
   private val kernels = sys.env.get("SPARK_GRAFT_KERNELS").map(_.split(",").toSet)
@@ -325,14 +322,13 @@ object Tool {
         .groupBy("bucket").agg(count(lit(1)).as("s"))
         .agg(coalesce(sum(expr("(s * (s - 1)) div 2")), lit(0L)))
         .head().getLong(0)
-    points.foreach { n =>
-      val df = hashVectors(spark, n, dim).localCheckpoint(true)
+    points.foreach { n => Fixpoint.scope { st =>
+      val df = st.cut(hashVectors(spark, n, dim))
       val autoBits = Similarity.srpBits(n)
       val (auto, tAuto) = timed(pairVolume(df, autoBits))
       val frozen = if (autoBits == baseBits) auto else pairVolume(df, baseBits)
       println(f"""{"n":$n,"auto_bits":$autoBits,"auto_pair_volume":$auto,"auto_sec":$tAuto%.1f,"frozen_bits":$baseBits,"frozen_pair_volume":$frozen}""")
-      Fixpoint.free(df)
-    }
+    }}
     true
   }
 

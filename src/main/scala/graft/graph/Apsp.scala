@@ -55,28 +55,17 @@ object Apsp {
         struct(col("w").as("d"), lit(1L).as("h")).as("v"))
     val diag = g.vertices.select(col("id").as("i"), col("id").as("j"),
       struct(lit(0.0).as("d"), lit(0L).as("h")).as("v"))
-    var d = edges.unionAll(diag).groupBy("i", "j").agg(min("v").as("v"))
-      .localCheckpoint(true)
-    var it = 0
-    var done = false
-    var prev = Option.empty[(Long, Long)]
-    while (it < rounds && !done) {
-      val sq = d.select(col("i"), col("j").as("k"), col("v").as("av"))
-        .join(d.select(col("i").as("k"), col("j"), col("v").as("bv")), "k")
+    val init = edges.unionAll(diag).groupBy("i", "j").agg(min("v").as("v"))
+    // the one-job fingerprint materializes each squaring's lazy cut; a
+    // repeat means the closure is reached (no negative cycle)
+    val d = Fixpoint.loopFusedFingerprint(init, rounds) { (cur, _) =>
+      cur.select(col("i"), col("j").as("k"), col("v").as("av"))
+        .join(cur.select(col("i").as("k"), col("j"), col("v").as("bv")), "k")
         .groupBy("i", "j")
         .agg(min(struct(
           (col("av.d") + col("bv.d")).as("d"),
           (col("av.h") + col("bv.h")).as("h"))).as("v"))
-        .localCheckpoint(false) // lazy: the fingerprint materializes it
-      val r = sq.agg(count(lit(1)),
-        bit_xor(xxhash64(col("i"), col("j"), col("v.d"), col("v.h")))).head
-      val f = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      done = prev.contains(f) // fixpoint ⇒ closure reached (no neg cycle)
-      prev = Some(f)
-      Fixpoint.free(d)
-      d = sq
-      it += 1
-    }
+    } { cur => Fixpoint.hashFingerprint(cur, "i", "j", "v.d", "v.h") }
     d.select(col("i").as("src"), col("j").as("dst"),
       col("v.d").as("dist"), col("v.h").as("hops"))
   }

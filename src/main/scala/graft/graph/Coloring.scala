@@ -93,9 +93,9 @@ object Coloring {
     * vector. */
   private[graph] def smallestEigenvectors(matrix0: DataFrame,
       vertices: DataFrame, k: Int, iters: Int, seed: Long,
-      projectOutConstant: Boolean): DataFrame = {
-    val mat = matrix0.persist()
-    val nodes = vertices.select("id").persist()
+      projectOutConstant: Boolean): DataFrame = Fixpoint.scope { st =>
+    val mat = st.persist(matrix0)
+    val nodes = st.persist(vertices.select("id"))
     // Gershgorin: |lambda| <= max_i sum_j |v_ij|
     val sigma = mat.groupBy("i").agg(sum(abs(col("v"))).as("s"))
       .agg(coalesce(max(col("s")), lit(0.0))).head.getDouble(0) + 1.0
@@ -163,14 +163,13 @@ object Coloring {
       v.select(col("id"), expr(s"array(${combos.mkString(", ")})").as("xs"))
     }
 
-    var v = center(nodes.select(col("id"), expr(
+    var v = st.cut(center(nodes.select(col("id"), expr(
       s"""transform(sequence(0, ${k - 1}),
          |  j -> cast(pmod(xxhash64($seed + j, id), 1048576) as double)
-         |       / 1048576.0 - 0.5)""".stripMargin).as("xs")))
-      .localCheckpoint(true)
+         |       / 1048576.0 - 0.5)""".stripMargin).as("xs"))))
     for (_ <- 1 to iters) {
-      val v2 = orthonormalize(center(shiftMul(v))).localCheckpoint(true)
-      Fixpoint.free(v)
+      val v2 = st.cut(orthonormalize(center(shiftMul(v))))
+      st.retire(v)
       v = v2
     }
     // Rayleigh–Ritz: H = Xᵀ(σI−M)X, rotate X by H's eigenvectors,
@@ -192,9 +191,8 @@ object Coloring {
     val rotCombos = order.map { col0 =>
       (0 until k).map(i => s"(xs[$i] * ${q(i)(col0)})").mkString(" + ")
     }
-    val rotated = v.select(col("id"),
-      expr(s"array(${rotCombos.mkString(", ")})").as("xs"))
-      .localCheckpoint(true)
+    val rotated = st.cut(v.select(col("id"),
+      expr(s"array(${rotCombos.mkString(", ")})").as("xs")))
     // deterministic sign per depth: smallest id with |value| > eps positive
     val leads = rotated.select(col("id"), posexplode(col("xs")).as(Seq("depth", "value")))
       .filter(abs(col("value")) > 1e-9)
@@ -202,7 +200,6 @@ object Coloring {
       .collect().map(r => r.getInt(0) -> (if (r.getDouble(1) < 0) -1.0 else 1.0))
       .toMap
     val signs = (0 until k).map(d => leads.getOrElse(d, 1.0))
-    mat.unpersist(false); nodes.unpersist(false)
     rotated.select(col("id"), posexplode(col("xs")).as(Seq("depth", "value")))
       .select(col("depth"), col("id"),
         (col("value") * element_at(typedLit(signs), col("depth") + 1)).as("value"))
@@ -212,45 +209,26 @@ object Coloring {
     * 0..C−1. `k` bounds the spectrum depth; classes still invalid at
     * the bound split to singletons (documented fallback). */
   def spectralColoring(g: PropertyGraph, k: Int = 8, iters: Int = 30,
-      seed: Long = 42): DataFrame = {
-    val spark = g.edges.sparkSession
-    val vecs = smallestAdjacencyEigenvectors(g, k, iters, seed)
-      .persist()
-    val edges = g.adjacency.select("src", "dst")
-      .filter(col("src") =!= col("dst")).persist()
+      seed: Long = 42): DataFrame = Fixpoint.scope { st =>
+    val vecs = st.persist(smallestAdjacencyEigenvectors(g, k, iters, seed))
+    val edges = st.persist(g.adjacency.select("src", "dst")
+      .filter(col("src") =!= col("dst")))
+    // the colors some edge has at both ends
+    def invalidIn(state: DataFrame): DataFrame = st.cut(edges
+      .join(state.select(col("id").as("src"), col("color").as("cs")), "src")
+      .join(state.select(col("id").as("dst"), col("color").as("cd")), "dst")
+      .filter(col("cs") === col("cd"))
+      .select(col("cs").as("color")).distinct())
+    def splittableIn(invalid: DataFrame, state: DataFrame): DataFrame = invalid
+      .join(state.select("color", "depth").distinct(), "color")
+      .filter(col("depth") < k)
     // state: (id, color, depth) — depth = next eigenvector this class
     // would split on (the reference's split(color, depth) argument)
-    var state = g.vertices.select(col("id"),
-      lit(0L).as("color"), lit(0).as("depth")).localCheckpoint(true)
-    var remaining = true
-    while (remaining) {
-      val invalid = edges
-        .join(state.select(col("id").as("src"), col("color").as("cs")), "src")
-        .join(state.select(col("id").as("dst"), col("color").as("cd")), "dst")
-        .filter(col("cs") === col("cd"))
-        .select(col("cs").as("color")).distinct()
-        .localCheckpoint(true)
-      val splittable = invalid
-        .join(state.select("color", "depth").distinct(), "color")
-        .filter(col("depth") < k)
-      if (splittable.isEmpty) {
-        // spectrum exhausted for whatever is left: singleton fallback
-        val bad = state.join(invalid, Seq("color"), "left_semi")
-        val done = state.join(invalid, Seq("color"), "left_anti")
-        // an explicit fallback flag keeps singleton colors disjoint from
-        // trie labels at ANY id range (an arithmetic id-offset would
-        // collide or overflow for ids ≥ 2⁶³−2⁴⁰); densified via the
-        // distributed zipRank, ordered (trie first, fallbacks after)
-        val fixed = done.select(col("id"), lit(0L).as("fb"), col("color"))
-          .unionAll(bad.select(col("id"), lit(1L).as("fb"), col("id").as("color")))
-        val dense = Ranks.zipRank(
-          fixed.select(col("fb"), col("color")).distinct(),
-          Seq(col("fb"), col("color")), "c2", base = 0L)
-        val out = fixed.join(dense, Seq("fb", "color"))
-          .select(col("id"), col("c2").as("color"))
-        vecs.unpersist(false); edges.unpersist(false)
-        return out
-      }
+    var state = st.cut(g.vertices.select(col("id"),
+      lit(0L).as("color"), lit(0).as("depth")))
+    var invalid = invalidIn(state)
+    var splittable = splittableIn(invalid, state)
+    while (!splittable.isEmpty) {
       // split every invalid class on the sign of its depth's eigenvector
       // (trie labels 2c+1 / 2c+2 for the >=0 / <0 halves)
       val toSplit = state.join(splittable.select("color"), Seq("color"), "left_semi")
@@ -262,12 +240,26 @@ object Coloring {
           (col("depth") + 1).as("depth"))
       val untouched = state.join(splittable.select("color"), Seq("color"), "left_anti")
         .select("id", "color", "depth")
-      val state2 = untouched.unionAll(toSplit).localCheckpoint(true)
-      Fixpoint.free(state)
+      val state2 = st.cut(untouched.unionAll(toSplit))
+      st.retire(state, invalid)
       state = state2
-      remaining = true
+      invalid = invalidIn(state)
+      splittable = splittableIn(invalid, state)
     }
-    state.select("id", "color") // unreachable; loop exits via return
+    // spectrum exhausted for whatever is left: singleton fallback
+    val bad = state.join(invalid, Seq("color"), "left_semi")
+    val done = state.join(invalid, Seq("color"), "left_anti")
+    // an explicit fallback flag keeps singleton colors disjoint from
+    // trie labels at ANY id range (an arithmetic id-offset would
+    // collide or overflow for ids ≥ 2⁶³−2⁴⁰); densified via the
+    // distributed zipRank, ordered (trie first, fallbacks after)
+    val fixed = done.select(col("id"), lit(0L).as("fb"), col("color"))
+      .unionAll(bad.select(col("id"), lit(1L).as("fb"), col("id").as("color")))
+    val dense = Ranks.zipRank(
+      fixed.select(col("fb"), col("color")).distinct(),
+      Seq(col("fb"), col("color")), "c2", base = 0L)
+    fixed.join(dense, Seq("fb", "color"))
+      .select(col("id"), col("c2").as("color"))
   }
 
   /** Gini coefficient of a value column (reference `stats.pyx:16`):

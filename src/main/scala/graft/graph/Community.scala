@@ -296,17 +296,16 @@ object Community {
     * Returns `(id, community)`. */
   def louvainLocalMove(g: PropertyGraph, maxRounds: Int = 24,
       gamma: Double = 1.0, initPartition: Option[DataFrame] = None,
-      minMovesFrac: Double = 0.0): DataFrame = {
+      minMovesFrac: Double = 0.0): DataFrame = Fixpoint.scope { st =>
     val debugT0 = System.nanoTime()
     def dbg(what: String): Unit = if (sys.env.contains("GRAFT_FIXPOINT_DEBUG"))
       System.err.println(f"[plm] $what ${(System.nanoTime() - debugT0) / 1e9}%.2fs")
-    val adj = sym(g).persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = st.persist(sym(g))
     val m2 = adj.agg(sum("weight")).head.getDouble(0) // = 2m
     val ku = adj.groupBy(col("src").as("id")).agg(sum("weight").as("ku"))
-    var cur = initPartition.getOrElse(
+    var cur = st.persist(initPartition.getOrElse(
         g.vertices.select(col("id"), col("id").as("community")))
-      .withColumn("moved", lit(1L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("moved", lit(1L)))
     // relative convergence, like the reference PLM's moved-nodes
     // threshold: rounds that move ≲ minMovesFrac·n nodes shift
     // modularity negligibly but each costs full shuffle rounds — the
@@ -356,19 +355,16 @@ object Community {
           (col("newCommunity").isNotNull &&
             col("newCommunity") =!= col("community")).cast("long").as("moved"))
       val next =
-        if ((round + 1) % 2 == 0) stepped.localCheckpoint(false)
-        else stepped.persist(StorageLevel.MEMORY_AND_DISK)
+        if ((round + 1) % 2 == 0) st.cutLazy(stepped) else st.persist(stepped)
       // one action: materializes the round AND reads the moved count
       val moved = next.agg(sum("moved")).head.getLong(0)
       dbg(s"round $round moved=$moved")
       quietRounds = if (moved <= quietBar) quietRounds + 1 else 0
-      Fixpoint.free(cur) // handles both the persisted and checkpointed rounds
+      st.retire(cur)
       cur = next
       round += 1
     }
-    val res = cur.select("id", "community")
-    adj.unpersist(false)
-    res
+    cur.select("id", "community")
   }
 
   /** Full PLM: local moving, coarsen, recurse while modularity improves,
@@ -906,99 +902,91 @@ object Community {
     * improves. Same per-step shape as [[expandSeed]]: one join +
     * aggregate, one-row argmax to the driver. Returns `(id)`. */
   def lfmLocal(g: PropertyGraph, seed: Long, alpha: Double = 1.0,
-      maxSize: Int = 50): DataFrame = {
+      maxSize: Int = 50): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val adj = sym(g).filter(col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val degs = adj.groupBy(col("src").as("id")).agg(sum("weight").as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = st.persist(sym(g).filter(col("src") =!= col("dst")))
+    val degs = st.persist(adj.groupBy(col("src").as("id")).agg(sum("weight").as("d")))
     val seedDeg = degs.filter(col("id") === seed).head(1)
-    if (seedDeg.isEmpty) { adj.unpersist(false); degs.unpersist(false); return Seq(seed).toDF("id") }
-
-    def fitness(kin: Double, kout: Double): Double =
-      if (kin + kout <= 0) 0.0 else kin / math.pow(kin + kout, alpha)
     var members = Set(seed)
-    var kin = 0.0
-    var kout = seedDeg(0).getDouble(1)
+    if (seedDeg.nonEmpty) {
+      def fitness(kin: Double, kout: Double): Double =
+        if (kin + kout <= 0) 0.0 else kin / math.pow(kin + kout, alpha)
+      var kin = 0.0
+      var kout = seedDeg(0).getDouble(1)
 
-    // Incremental neighborhood state — ONE Spark job per greedy step.
-    // One row per node inside or adjacent to the community:
-    // (id, wIn = weight into members\{id}, d = total degree, member).
-    // Each step updates the state with ONE node's edge deltas (a pushed
-    // filter on the persisted adjacency) instead of re-aggregating the
-    // boundary from the full adjacency, and the add/delete decision is
-    // one collect of two top-1 rankings over the same lazily-
-    // checkpointed state (the collect materializes it). The former code
-    // paid ≥2 full-adjacency aggregation jobs per added member (insert
-    // ranking + deletion sweep); for integer-valued weights the
-    // incremental sums are exact, so the greedy sequence — deletions to
-    // exhaustion after each improving add, same tie-breaks — and the
-    // resulting member set are identical.
-    def deltaOf(v: Long): DataFrame = adj.filter(col("src") === v)
-      .groupBy(col("dst").as("id")).agg(sum("weight").as("dw"))
-    def applyDelta(prev: DataFrame, v: Long, sign: Double,
-        nowMember: Boolean): DataFrame =
-      prev.join(deltaOf(v), Seq("id"), "full")
-        .join(degs.withColumnRenamed("d", "d2"), Seq("id"), "left")
-        .select(col("id"),
-          (coalesce(col("wIn"), lit(0.0)) +
-            lit(sign) * coalesce(col("dw"), lit(0.0))).as("wIn"),
-          coalesce(col("d"), col("d2")).as("d"),
-          when(col("id") === v, lit(nowMember))
-            .otherwise(coalesce(col("member"), lit(false))).as("member"))
-        // positive weights: adjacent-to-C ⟺ wIn > 0, so pruning keeps
-        // exactly the original candidate set
-        .filter(col("member") || col("wIn") > 0)
-        .localCheckpoint(false) // lazy: the decision collect materializes it
-    var state: DataFrame = deltaOf(seed)
-      .join(degs, Seq("id"), "left")
-      .select(col("id"), col("dw").as("wIn"), col("d"), lit(false).as("member"))
-      .unionAll(degs.filter(col("id") === seed)
-        .select(col("id"), lit(0.0).as("wIn"), col("d"), lit(true).as("member")))
-      .localCheckpoint(false)
-    var prevState: DataFrame = null
-    var done = false
-    while (!done) {
-      val addTop = state.filter(!col("member"))
-        .withColumn("nkin", lit(kin) + lit(2.0) * col("wIn"))
-        .withColumn("nkout", lit(kout) + col("d") - lit(2.0) * col("wIn"))
-        .orderBy((col("nkin") / pow(col("nkin") + col("nkout"), lit(alpha))).desc,
-          col("id").asc)
-        .limit(1)
-        .select(lit("add").as("act"), col("id"),
-          col("nkin").as("ki"), col("nkout").as("ko"))
-      val delTop = state.filter(col("member") && col("id") =!= seed)
-        .withColumn("rkin", lit(kin) - lit(2.0) * col("wIn"))
-        .withColumn("rkout", lit(kout) - col("d") + lit(2.0) * col("wIn"))
-        .orderBy((col("rkin") / pow(col("rkin") + col("rkout"), lit(alpha))).desc,
-          col("id").asc)
-        .limit(1)
-        .select(lit("del").as("act"), col("id"),
-          col("rkin").as("ki"), col("rkout").as("ko"))
-      val top = addTop.unionAll(delTop).collect()
-      if (prevState != null) { Fixpoint.free(prevState); prevState = null }
-      val f0 = fitness(kin, kout)
-      // deletions first: one can only improve right after an add, and the
-      // original swept them to exhaustion before the next add — same order
-      val del = top.find(r => r.getString(0) == "del" &&
-        fitness(r.getDouble(2), r.getDouble(3)) > f0 + 1e-12)
-      val add = top.find(r => r.getString(0) == "add" &&
-        fitness(r.getDouble(2), r.getDouble(3)) > f0 + 1e-12)
-      if (del.isDefined) {
-        val r = del.get; val v = r.getLong(1)
-        members -= v; kin = r.getDouble(2); kout = r.getDouble(3)
-        prevState = state
-        state = applyDelta(state, v, -1.0, nowMember = false)
-      } else if (members.size < maxSize && add.isDefined) {
-        val r = add.get; val v = r.getLong(1)
-        members += v; kin = r.getDouble(2); kout = r.getDouble(3)
-        prevState = state
-        state = applyDelta(state, v, 1.0, nowMember = true)
-      } else done = true
+      // Incremental neighborhood state — ONE Spark job per greedy step.
+      // One row per node inside or adjacent to the community:
+      // (id, wIn = weight into members\{id}, d = total degree, member).
+      // Each step updates the state with ONE node's edge deltas (a pushed
+      // filter on the persisted adjacency) instead of re-aggregating the
+      // boundary from the full adjacency, and the add/delete decision is
+      // one collect of two top-1 rankings over the same lazily-
+      // checkpointed state (the collect materializes it). The former code
+      // paid ≥2 full-adjacency aggregation jobs per added member (insert
+      // ranking + deletion sweep); for integer-valued weights the
+      // incremental sums are exact, so the greedy sequence — deletions to
+      // exhaustion after each improving add, same tie-breaks — and the
+      // resulting member set are identical.
+      def deltaOf(v: Long): DataFrame = adj.filter(col("src") === v)
+        .groupBy(col("dst").as("id")).agg(sum("weight").as("dw"))
+      def applyDelta(prev: DataFrame, v: Long, sign: Double,
+          nowMember: Boolean): DataFrame = st.cutLazy(
+        prev.join(deltaOf(v), Seq("id"), "full")
+          .join(degs.withColumnRenamed("d", "d2"), Seq("id"), "left")
+          .select(col("id"),
+            (coalesce(col("wIn"), lit(0.0)) +
+              lit(sign) * coalesce(col("dw"), lit(0.0))).as("wIn"),
+            coalesce(col("d"), col("d2")).as("d"),
+            when(col("id") === v, lit(nowMember))
+              .otherwise(coalesce(col("member"), lit(false))).as("member"))
+          // positive weights: adjacent-to-C ⟺ wIn > 0, so pruning keeps
+          // exactly the original candidate set
+          .filter(col("member") || col("wIn") > 0)) // the decision collect materializes it
+      var state: DataFrame = st.cutLazy(deltaOf(seed)
+        .join(degs, Seq("id"), "left")
+        .select(col("id"), col("dw").as("wIn"), col("d"), lit(false).as("member"))
+        .unionAll(degs.filter(col("id") === seed)
+          .select(col("id"), lit(0.0).as("wIn"), col("d"), lit(true).as("member"))))
+      var done = false
+      while (!done) {
+        val addTop = state.filter(!col("member"))
+          .withColumn("nkin", lit(kin) + lit(2.0) * col("wIn"))
+          .withColumn("nkout", lit(kout) + col("d") - lit(2.0) * col("wIn"))
+          .orderBy((col("nkin") / pow(col("nkin") + col("nkout"), lit(alpha))).desc,
+            col("id").asc)
+          .limit(1)
+          .select(lit("add").as("act"), col("id"),
+            col("nkin").as("ki"), col("nkout").as("ko"))
+        val delTop = state.filter(col("member") && col("id") =!= seed)
+          .withColumn("rkin", lit(kin) - lit(2.0) * col("wIn"))
+          .withColumn("rkout", lit(kout) - col("d") + lit(2.0) * col("wIn"))
+          .orderBy((col("rkin") / pow(col("rkin") + col("rkout"), lit(alpha))).desc,
+            col("id").asc)
+          .limit(1)
+          .select(lit("del").as("act"), col("id"),
+            col("rkin").as("ki"), col("rkout").as("ko"))
+        val top = addTop.unionAll(delTop).collect()
+        val f0 = fitness(kin, kout)
+        // deletions first: one can only improve right after an add, and the
+        // original swept them to exhaustion before the next add — same order
+        val del = top.find(r => r.getString(0) == "del" &&
+          fitness(r.getDouble(2), r.getDouble(3)) > f0 + 1e-12)
+        val add = top.find(r => r.getString(0) == "add" &&
+          fitness(r.getDouble(2), r.getDouble(3)) > f0 + 1e-12)
+        if (del.isDefined) {
+          val r = del.get; val v = r.getLong(1)
+          members -= v; kin = r.getDouble(2); kout = r.getDouble(3)
+          val next = applyDelta(state, v, -1.0, nowMember = false)
+          st.retire(state); state = next
+        } else if (members.size < maxSize && add.isDefined) {
+          val r = add.get; val v = r.getLong(1)
+          members += v; kin = r.getDouble(2); kout = r.getDouble(3)
+          val next = applyDelta(state, v, 1.0, nowMember = true)
+          st.retire(state); state = next
+        } else done = true
+      }
     }
-    Fixpoint.free(state)
-    adj.unpersist(false); degs.unpersist(false)
     members.toSeq.sorted.toDF("id")
   }
 

@@ -26,14 +26,13 @@ object ConnectedComponents {
   def labelProp(g: PropertyGraph, maxIter: Int = 100): DataFrame = {
     val adj = g.adjacency.select("src", "dst")
     val init = g.vertices.select(col("id"), col("id").as("component"))
-    Fixpoint.loopUntilStableFingerprint(init, maxIter,
-      df => Fixpoint.hashFingerprint(df, "id", "component")._2,
-      checkpointEvery = 4) { (labels, _) =>
+    // span 1: the step reads `labels` twice
+    Fixpoint.loopFusedFingerprint(init, maxIter) { (labels, _) =>
       val viaNbr = labels.join(adj, labels("id") === adj("src"))
         .select(col("dst").as("id"), col("component"))
       labels.select("id", "component").unionAll(viaNbr)
         .groupBy("id").agg(min("component").as("component"))
-    }
+    } { df => Fixpoint.hashFingerprint(df, "id", "component") }
   }
 
   /** Alternating large-star / small-star. State is a symmetric pair set;

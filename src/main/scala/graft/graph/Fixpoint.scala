@@ -1,8 +1,12 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Iterative fixpoint driver — the engine's real "execution engine"
   * (SURVEY.md §7.1). BFS/SSSP/PageRank/label-propagation/Louvain all loop
@@ -12,11 +16,13 @@ import org.apache.spark.storage.StorageLevel
   * shuffle (join on src + groupBy dst); under AQE every shuffle stage is
   * its own Spark job, so a round costs its stage count plus one. Two
   * things make this survive at scale (SURVEY.md §4.2.1):
-  *   - persist each state and materialize it before dropping the parent,
-  *     so a state is computed exactly once;
-  *   - cut lineage with `localCheckpoint` every `checkpointEvery` rounds,
-  *     otherwise the logical plan (and task closures) grow per iteration
-  *     and stage submission eventually dominates.
+  *   - cut lineage with `localCheckpoint` every round, otherwise the
+  *     logical plan (and task closures) grow per iteration and stage
+  *     submission eventually dominates;
+  *   - materialize each state before dropping its parent, so a state is
+  *     computed exactly once. [[scope]] owns that release: a kernel
+  *     registers what it stores and retires what it stops reading, and
+  *     the scope frees each block once nothing pending reads it.
   */
 object Fixpoint {
 
@@ -51,9 +57,151 @@ object Fixpoint {
     * every cached entry of the session, and that probe throws when any
     * entry's input has become unreadable. */
   def free(df: DataFrame): Unit = df.queryExecution.logical match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+    case lr: LogicalRDD => lr.rdd.unpersist(false)
     case _ if df.storageLevel != StorageLevel.NONE => df.unpersist(false)
     case _ =>
+  }
+
+  /** The storage one call creates, and its release. Every `cut`,
+    * `cutLazy` and `persist` of the body registers here; `retire` marks a
+    * registered state the body no longer reads. Release rules:
+    *   - a retired state is freed once no registered state that is not
+    *     yet computed (a lazy cut before its materializing action, a
+    *     persist before its first scan) still reads it — the caller
+    *     retires a state as soon as it moves on, the scope holds the
+    *     blocks until the next round's action has consumed them;
+    *   - on exit, normal or by a throw, everything registered is freed,
+    *     except the storage the returned value's plan still reads (a
+    *     `cur.select(…)`, a single leg). That storage passes to the
+    *     enclosing scope, if any, so it is freed when that call ends.
+    * A registered state counts as computed once its own blocks are all
+    * stored, or once a computed state has read it. */
+  final class Scope private[Fixpoint] () {
+    private var entries = Vector.empty[Entry]
+
+    /** Eager `localCheckpoint`: stored when this returns. */
+    def cut(df: DataFrame): DataFrame = checkpoint(df, eager = true)
+
+    /** Lazy `localCheckpoint`: stored by the first action that reads it. */
+    def cutLazy(df: DataFrame): DataFrame = checkpoint(df, eager = false)
+
+    /** `MEMORY_AND_DISK` cache: stored by the first action that scans it. */
+    def persist(df: DataFrame): DataFrame = {
+      val reads = storageRead(df)
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      withCache(p).collectFirst { case im: InMemoryRelation =>
+        register(new Entry(p, im.cacheBuilder, reads,
+          () => im.cacheBuilder.isCachedColumnBuffersLoaded))
+      }
+      p
+    }
+
+    /** Marks registered states the body no longer reads. */
+    def retire(dfs: DataFrame*): Unit = {
+      entries.foreach(e => if (dfs.exists(_ eq e.df)) e.retired = true)
+      sweep()
+    }
+
+    private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
+      val c = df.localCheckpoint(eager)
+      val rdd = c.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+      // the cut ran df's own plan, so its cache substitution is at hand
+      register(new Entry(c, rdd, storageIn(df.queryExecution.withCachedData),
+        () => rdd.isCheckpointed))
+      c
+    }
+
+    private def register(e: Entry): Unit = { entries :+= e; sweep() }
+
+    /** A state reads only states registered before it, so one pass
+      * from the newest settles whether each is computed. */
+    private def settle(): Unit = entries.reverseIterator.foreach { e =>
+      e.computed ||= e.stored() ||
+        entries.exists(r => r.computed && r.reads.exists(_ eq e.key))
+    }
+
+    private def sweep(): Unit = {
+      settle()
+      val pending = entries.filterNot(_.computed)
+      val (dead, live) = entries.partition(e =>
+        e.retired && !pending.exists(_.reads.exists(_ eq e.key)))
+      entries = live
+      dead.foreach(e => free(e.df))
+    }
+
+    /** Frees all but what `result` reads; returns the kept entries. */
+    private[Fixpoint] def close(result: Any): Vector[Entry] = {
+      settle()
+      var keep = framesIn(result).flatMap(storageRead).toSeq
+      var grown = true
+      while (grown) {
+        val more = entries.filter(e => keep.exists(_ eq e.key) && !e.computed)
+          .flatMap(_.reads).filterNot(k => keep.exists(_ eq k))
+        grown = more.nonEmpty
+        keep ++= more
+      }
+      val (kept, dead) = entries.partition(e => keep.exists(_ eq e.key))
+      entries = Vector.empty
+      dead.foreach(e => free(e.df))
+      kept.foreach(_.retired = false)
+      kept
+    }
+
+    private[Fixpoint] def adopt(kept: Vector[Entry]): Unit = entries ++= kept
+
+    /** Frees everything; cleanup failures ride on `cause`. */
+    private[Fixpoint] def abort(cause: Throwable): Unit = {
+      entries.foreach(e => try free(e.df) catch { case NonFatal(t) => cause.addSuppressed(t) })
+      entries = Vector.empty
+    }
+  }
+
+  /** One registered state: `key` is its storage (checkpointed RDD or
+    * cache builder), `reads` the storage its plan scans. */
+  private final class Entry(val df: DataFrame, val key: AnyRef,
+      val reads: Seq[AnyRef], val stored: () => Boolean) {
+    var retired = false
+    var computed = false
+  }
+
+  private val current = new ThreadLocal[Scope]
+
+  /** Runs `body` with a fresh [[Scope]] and releases its storage on
+    * exit by the scope's rules. Nested calls (a kernel inside a kernel)
+    * hand what their result reads to the enclosing scope. */
+  def scope[T](body: Scope => T): T = {
+    val outer = current.get
+    val st = new Scope
+    current.set(st)
+    val result =
+      try body(st)
+      catch { case t: Throwable => st.abort(t); throw t }
+      finally current.set(outer)
+    val kept = st.close(result)
+    if (outer != null) outer.adopt(kept)
+    result
+  }
+
+  /** `df`'s plan after the session's cache substitution, on a fresh
+    * alias so `df`'s own query execution is left as it is. */
+  private def withCache(df: Dataset[_]): LogicalPlan =
+    df.alias("scope").queryExecution.withCachedData
+
+  /** The storage a plan scans: checkpointed RDDs and cache builders. */
+  private def storageIn(plan: LogicalPlan): Seq[AnyRef] =
+    plan.collectWithSubqueries {
+      case lr: LogicalRDD => lr.rdd
+      case im: InMemoryRelation => im.cacheBuilder
+    }
+
+  private def storageRead(df: Dataset[_]): Seq[AnyRef] = storageIn(withCache(df))
+
+  /** The frames in a returned value: the value itself, or the fields of
+    * a tuple or case class (`(flow, cut)`, a `PropertyGraph`). */
+  private def framesIn(x: Any): Iterator[Dataset[_]] = x match {
+    case d: Dataset[_] => Iterator(d)
+    case p: Product => p.productIterator.flatMap(framesIn)
+    case _ => Iterator.empty
   }
 
   /** Materialize `df` and return its row count, with one job over the
@@ -77,60 +225,38 @@ object Fixpoint {
         (a, b) => (a._1 + b._1, a._2 ^ b._2))
 
   /** Run `step` until `stop(prev, next, i)` is true or `maxIter` reached.
-    * Returns the final (persisted) state. Every state is materialized
-    * before `stop` judges it and before its parent is freed: a
-    * checkpointed state by its eager `localCheckpoint`, a persisted one
-    * by [[materialize]] — no second count of either. */
-  def loop(init: DataFrame, maxIter: Int, checkpointEvery: Int = 1)(
+    * Returns the final state. The initial state is persisted and
+    * materialized; every later one is an eager checkpoint, stored before
+    * `stop` judges it and before its parent is freed. */
+  def loop(init: DataFrame, maxIter: Int)(
       step: (DataFrame, Int) => DataFrame)(
-      stop: (DataFrame, DataFrame, Int) => Boolean): DataFrame = {
+      stop: (DataFrame, DataFrame, Int) => Boolean): DataFrame = scope { st =>
     val debug = sys.env.contains("GRAFT_FIXPOINT_DEBUG")
-    def persisted(df: DataFrame): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      materialize(p)
-      p
-    }
-    var cur = persisted(init)
+    var cur = st.persist(init)
+    materialize(cur)
     var i = 0
     var done = false
     while (i < maxIter && !done) {
       val t0 = System.nanoTime()
-      val stepped = step(cur, i)
-      val next =
-        if ((i + 1) % checkpointEvery == 0) stepped.localCheckpoint(true)
-        else persisted(stepped)
+      val next = st.cut(step(cur, i))
       val t1 = System.nanoTime()
       done = stop(cur, next, i)
       if (debug) System.err.println(
         f"[fixpoint] iter $i step=${(t1 - t0) / 1e9}%.2fs stop=${(System.nanoTime() - t1) / 1e9}%.2fs")
-      free(cur)
+      st.retire(cur)
       cur = next
       i += 1
     }
     cur
   }
 
-  /** Convergence via a monotone scalar: stop when `metric` (e.g. sum of
-    * labels, sum of distances) stops changing between iterations. */
-  def loopUntilStableScalar(init: DataFrame, maxIter: Int,
-      metric: DataFrame => Double, checkpointEvery: Int = 1)(
-      step: (DataFrame, Int) => DataFrame): DataFrame = {
-    var prevMetric = Double.NaN
-    loop(init, maxIter, checkpointEvery)(step) { (_, next, _) =>
-      val m = metric(next)
-      val stable = !prevMetric.isNaN && m == prevMetric
-      prevMetric = m
-      stable
-    }
-  }
-
   /** The state is lineage-cut lazily and the fingerprint action doubles
     * as the materializing action, so a round costs no separate count
     * job: one job per shuffle stage of the step plus the fingerprint's
     * own. That is one job when the fingerprint folds partitions
-    * ([[hashFingerprint]]); a global `agg` fingerprint is two under AQE.
-    * `fingerprint` may return any equality-comparable value (a Long, a
-    * tuple…).
+    * ([[hashFingerprint]], [[materialize]]); a global `agg` fingerprint
+    * is two under AQE. `fingerprint` may return any equality-comparable
+    * value (a Long, a tuple…); the loop stops when it repeats.
     *
     * `span` > 1 chains that many lazy steps between fingerprints — one
     * job per span instead of per round. Only safe when `step` references
@@ -139,9 +265,9 @@ object Fixpoint {
     * it are idempotent), at most span−1 idempotent rounds run extra. */
   def loopFusedFingerprint(init: DataFrame, maxIter: Int, span: Int = 1)(
       step: (DataFrame, Int) => DataFrame)(
-      fingerprint: DataFrame => Any): DataFrame = {
+      fingerprint: DataFrame => Any): DataFrame = scope { st =>
     val debug = sys.env.contains("GRAFT_FIXPOINT_DEBUG")
-    var cur = init.localCheckpoint(true)
+    var cur = st.cut(init)
     var prev = Option.empty[Any]
     var i = 0
     var done = false
@@ -150,32 +276,16 @@ object Fixpoint {
       val w = math.min(span, maxIter - i)
       var stepped = cur
       for (k <- 0 until w) stepped = step(stepped, i + k)
-      val next = stepped.localCheckpoint(false) // lazy cut
+      val next = st.cutLazy(stepped)
       val f = fingerprint(next) // materializes the checkpoint + aggregates
       if (debug) System.err.println(
         f"[fixpoint-fused] iter $i span=$w ${(System.nanoTime() - t0) / 1e9}%.2fs")
       done = prev.contains(f)
       prev = Some(f)
-      free(cur) // next is fully materialized by the fingerprint action
+      st.retire(cur)
       cur = next
       i += w
     }
     cur
-  }
-
-  /** Convergence via an exact 64-bit fingerprint (e.g. an
-    * order-independent `bit_xor(xxhash64(...))` of the state): stop when
-    * the fingerprint repeats. Unlike [[loopUntilStableScalar]] this keeps
-    * all 64 bits (a Double comparison would only keep 53). */
-  def loopUntilStableFingerprint(init: DataFrame, maxIter: Int,
-      fingerprint: DataFrame => Long, checkpointEvery: Int = 1)(
-      step: (DataFrame, Int) => DataFrame): DataFrame = {
-    var prev = Option.empty[Long]
-    loop(init, maxIter, checkpointEvery)(step) { (_, next, _) =>
-      val m = fingerprint(next)
-      val stable = prev.contains(m)
-      prev = Some(m)
-      stable
-    }
   }
 }

@@ -333,7 +333,7 @@ object Generators {
   def lfr(spark: SparkSession, n: Long, mu: Double, tau1: Double = 2.5,
       tau2: Double = 1.5, minDeg: Int = 5, maxDeg: Int = 50,
       minComm: Int = 20, maxComm: Int = 100,
-      seed: Long = 42): (PropertyGraph, DataFrame) = {
+      seed: Long = 42): (PropertyGraph, DataFrame) = Fixpoint.scope { st =>
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // 1. power-law inverse-CDF degree sample
@@ -342,7 +342,7 @@ object Generators {
       pow(lit(math.pow(a, e)) + u * lit(math.pow(b, e) - math.pow(a, e)), 1.0 / e)
     }
     // 2. internal degree: stochastic rounding of (1−μ)·deg, min 1
-    val nodes = spark.range(n)
+    val nodes = st.cut(spark.range(n)
       .select(col("id"),
         plaw(u01(seed, lit(1L), col("id")), minDeg, maxDeg, tau1)
           .cast("long").as("deg"))
@@ -350,8 +350,7 @@ object Generators {
       .withColumn("intDeg", greatest(lit(1L),
         (floor(col("intT")) + when(u01(seed + 5, col("id")) <
           col("intT") - floor(col("intT")), 1L).otherwise(0L)).cast("long")))
-      .select(col("id"), col("deg"), least(col("intDeg"), col("deg")).as("intDeg"))
-      .localCheckpoint(true)
+      .select(col("id"), col("deg"), least(col("intDeg"), col("deg")).as("intDeg")))
     // 3. community sizes: draw until the next one doesn't fit, pad the
     //    smallest with the remainder (reference semantics)
     val sizes = {
@@ -382,10 +381,9 @@ object Generators {
     val slots0 = commDf
       .select(col("community"), col("size"),
         explode(sequence(lit(1L), col("size"))).as("slot"))
-    var unassigned = nodes.select("id", "intDeg").localCheckpoint(true)
-    var openSlots = slots0.localCheckpoint(true)
-    var assignedAcc = Seq.empty[(Long, Long, Long)].toDF("id", "community", "size")
-      .localCheckpoint(true)
+    var unassigned = st.cut(nodes.select("id", "intDeg"))
+    var openSlots = st.cut(slots0)
+    var assignedAcc = st.cut(Seq.empty[(Long, Long, Long)].toDF("id", "community", "size"))
     var roundA = 0
     val maxRoundsA = 25
     var nLeft = unassigned.count()
@@ -404,25 +402,22 @@ object Generators {
       // take any slot (their intDeg is capped by step 5's size−1 cap)
       val ok = if (roundA == maxRoundsA - 1) pairedA
         else pairedA.filter(col("size") > col("intDeg"))
-      val newAssign = ok.select(col("id"), col("community"), col("size"))
-        .localCheckpoint(true)
-      val acc2 = assignedAcc.unionAll(newAssign).localCheckpoint(true)
-      val un2 = unassigned.join(newAssign.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      val sl2 = openSlots.join(
+      val newAssign = st.cut(ok.select(col("id"), col("community"), col("size")))
+      val acc2 = st.cut(assignedAcc.unionAll(newAssign))
+      val un2 = st.cut(unassigned.join(newAssign.select("id"), Seq("id"), "left_anti"))
+      val sl2 = st.cut(openSlots.join(
         ok.select(col("community"), col("slot")), Seq("community", "slot"),
-        "left_anti").localCheckpoint(true)
-      Fixpoint.free(assignedAcc); Fixpoint.free(unassigned); Fixpoint.free(openSlots)
+        "left_anti"))
+      st.retire(assignedAcc, unassigned, openSlots, newAssign)
       assignedAcc = acc2; unassigned = un2; openSlots = sl2
       nLeft = unassigned.count()
       roundA += 1
     }
-    val assigned = nodes.join(assignedAcc.select("id", "community"), "id")
-      .localCheckpoint(true)
+    val assigned = st.cut(nodes.join(assignedAcc.select("id", "community"), "id"))
     val planted = assigned.select(col("id"), col("community"))
     // 5. per-community configuration model (HH + switching) — the
     //    parallelism axis is the community count
-    val intra = assigned.select(col("community"), col("id"),
+    val intra = st.cut(assigned.select(col("community"), col("id"),
         col("intDeg").cast("int").as("d"))
       .as[(Long, Long, Int)]
       .groupByKey(_._1)
@@ -430,8 +425,7 @@ object Generators {
         val members = it.map(t => (t._2, t._3)).toVector.sortBy(_._1)
         localDegreeRealize(members, seed + 7 + c).iterator
       }
-      .toDF("src", "dst")
-      .localCheckpoint(true)
+      .toDF("src", "dst"))
     // 6. external degrees from what was actually realized internally
     val realizedInt = intra.select(col("src").as("id"))
       .unionAll(intra.select(col("dst").as("id")))
@@ -452,11 +446,9 @@ object Generators {
     // distributed stub matching with rejection-recycling (the rewiring
     // loop re-expressed): pair hash-ranked stubs, keep simple
     // inter-community edges, recycle the rest with a fresh hash
-    var stubs = ext.select(col("id"), col("community"),
-        explode(sequence(lit(1L), col("ext"))).as("k"))
-      .localCheckpoint(true)
-    var interAcc = Seq.empty[(Long, Long)].toDF("src", "dst")
-      .localCheckpoint(true)
+    var stubs = st.cut(ext.select(col("id"), col("community"),
+        explode(sequence(lit(1L), col("ext"))).as("k")))
+    var interAcc = st.cut(Seq.empty[(Long, Long)].toDF("src", "dst"))
     var roundB = 0
     val maxRoundsB = 30
     var nStubs = stubs.count()
@@ -477,17 +469,15 @@ object Generators {
           least(col("u"), col("v")).as("src"),
           greatest(col("u"), col("v")).as("dst"))
       // simple graph: one pair per (src,dst) this round, none already kept
-      val kept = cand.withColumn("rn",
+      val kept = st.cut(cand.withColumn("rn",
           row_number().over(Window.partitionBy("src", "dst").orderBy("p")))
         .filter(col("rn") === 1)
-        .join(interAcc, Seq("src", "dst"), "left_anti")
-        .localCheckpoint(true)
-      val acc2 = interAcc.unionAll(kept.select("src", "dst")).localCheckpoint(true)
+        .join(interAcc, Seq("src", "dst"), "left_anti"))
+      val acc2 = st.cut(interAcc.unionAll(kept.select("src", "dst")))
       val used = kept.select(col("u").as("id"), col("ku").as("k"))
         .unionAll(kept.select(col("v").as("id"), col("kv").as("k")))
-      val stubs2 = stubs.join(used, Seq("id", "k"), "left_anti")
-        .localCheckpoint(true)
-      Fixpoint.free(interAcc); Fixpoint.free(stubs); Fixpoint.free(kept)
+      val stubs2 = st.cut(stubs.join(used, Seq("id", "k"), "left_anti"))
+      st.retire(interAcc, stubs, kept)
       interAcc = acc2; stubs = stubs2
       nStubs = stubs.count()
       roundB += 1

@@ -198,9 +198,9 @@ object GraphOps {
   def kCore(g: PropertyGraph, k: Int, maxIter: Int = 100): PropertyGraph = {
     val start = PropertyGraph.canonicalizeUndirected(
       g.adjacency.filter(col("src") =!= col("dst"))).select("src", "dst")
-    // checkpointEvery = 1: the peel step references e three times
-    val fin = Fixpoint.loopUntilStableScalar(start, maxIter,
-      df => Fixpoint.materialize(df).toDouble, checkpointEvery = 1) { (e, i) =>
+    // a cut every round: the peel step references e three times. Stop
+    // when the edge count repeats; the count is the cut's materializing job
+    val fin = Fixpoint.loopFusedFingerprint(start, maxIter) { (e, i) =>
       val deg = e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select("id")
@@ -209,7 +209,7 @@ object GraphOps {
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
       if (i > 0) Fixpoint.dumpLoopPlan("kcore_peel_round", round)
       round
-    }
+    }(Fixpoint.materialize)
     PropertyGraph(fin.withColumn("weight", lit(1.0)), directed = false)
   }
 
@@ -243,20 +243,19 @@ object GraphOps {
     * under `broadcastHLimit` vertices; above it phase 1 falls back to
     * a shuffle join, which is the right plan on a real cluster anyway. */
   def coreDecomposition(g: PropertyGraph, maxIter: Int = 100,
-      broadcastHLimit: Long = 50000000L): DataFrame = {
+      broadcastHLimit: Long = 50000000L): DataFrame = Fixpoint.scope { st =>
     val adj0 = PropertyGraph.canonicalizeUndirected(
       g.adjacency.filter(col("src") =!= col("dst"))).select("src", "dst")
     val adjFlat = adj0.unionAll(adj0.select(col("dst").as("src"), col("src").as("dst")))
-    val nbrs = adjFlat.repartition(col("src"))
-      .groupBy("src").agg(collect_list(col("dst")).as("vs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nbrs = st.persist(adjFlat.repartition(col("src"))
+      .groupBy("src").agg(collect_list(col("dst")).as("vs")))
     val nVerts = nbrs.count()
     // H-index of a value multiset: sort desc, count ranks i with a[i] >= i+1
     val hIndexExpr = expr(
       "size(filter(transform(sort_array(hs, false), (x, i) -> x >= i + 1), b -> b))")
     val debug = sys.env.contains("GRAFT_FIXPOINT_DEBUG")
-    var h = nbrs.select(col("src").as("id"), size(col("vs")).cast("long").as("h"))
-      .withColumn("chg", lit(true)).localCheckpoint(true)
+    var h = st.cut(nbrs.select(col("src").as("id"), size(col("vs")).cast("long").as("h"))
+      .withColumn("chg", lit(true)))
     var nChanged = nVerts
     var iter = 0
     // wide/narrow crossover: a narrow round's explode volume is
@@ -286,13 +285,12 @@ object GraphOps {
         .join(nh, "dst")
         .groupBy("src").agg(collect_list(col("nh")).as("hs"))
         .select(col("src").as("id"), hIndexExpr.cast("long").as("h2"))
-      val hPrev = h
-      h = h.join(upd, Seq("id"), "left")
+      val next = st.cut(h.join(upd, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("h2"), col("h")).as("h"),
-          (col("h2").isNotNull && col("h2") < col("h")).as("chg"))
-        .localCheckpoint(true)
-      Fixpoint.free(hPrev) // eager checkpoint above — prev blocks now dead
+          (col("h2").isNotNull && col("h2") < col("h")).as("chg")))
+      st.retire(h)
+      h = next
       // measured NOT worth fusing into one lazy-checkpoint + aggregate
       // job: the fused variant re-plans the full round chain per action
       // and ran 327 s vs 187 s at RMAT-21 — the extra count on cached
@@ -305,12 +303,8 @@ object GraphOps {
     }
     val cores = h.select(col("id"), col("h").cast("int").as("core"))
     // isolated / zero-degree vertices keep core 0
-    val out = g.vertices.select("id").join(cores, Seq("id"), "left")
-      .select(col("id"), coalesce(col("core"), lit(0)).as("core"))
-      .localCheckpoint(true)
-    Fixpoint.free(h)
-    nbrs.unpersist(blocking = false)
-    out
+    st.cut(g.vertices.select("id").join(cores, Seq("id"), "left")
+      .select(col("id"), coalesce(col("core"), lit(0)).as("core")))
   }
 
   /** Seeded uniform sample of nodes (reference `randomNodes`,

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -26,15 +26,12 @@ object Matching {
     * endpoints only — edges incident to earlier rounds' matches were
     * already removed in their own round, so pruning against the full
     * matched set (the former code) was redundant work growing per round. */
-  def suitor(g: PropertyGraph, maxIter: Int = 50): DataFrame = {
+  def suitor(g: PropertyGraph, maxIter: Int = 50): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
-    import spark.implicits._
-    var remaining = g.adjacency
+    var remaining = st.cut(g.adjacency
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("weight"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst"), col("weight")))
     val legs = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var pendingFree: List[DataFrame] = Nil
     var done = false
     var i = 0
     val debugT0 = System.nanoTime()
@@ -44,45 +41,48 @@ object Matching {
       // best proposal per node via max(struct): (weight desc, dst asc)
       // — a hash agg, no per-partition sort, and avoids a Spark 4
       // analyzer bug self-joining window outputs ("key not found: #N")
-      val best = remaining
+      val best = st.cutLazy(remaining
         .groupBy("src")
         .agg(max(struct(col("weight"), (-col("dst")).as("negDst"), col("dst"))).as("b"))
-        .select(col("src"), col("b.dst").as("dst"), col("b.weight").as("weight"))
-        .localCheckpoint(false)
-      val mutual = best.as("a")
-        .join(best.as("b"),
-          col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-        .filter(col("a.src") < col("a.dst"))
-        .select(col("a.src").as("u"), col("a.dst").as("v"),
-          col("a.weight").as("weight"))
-        .localCheckpoint(false)
+        .select(col("src"), col("b.dst").as("dst"), col("b.weight").as("weight")))
+      val mutual = mutualOf(st, best)
       val nMutual = mutual.count()
-      pendingFree.foreach(Fixpoint.free); pendingFree = Nil
-      Fixpoint.free(best)
-      if (nMutual == 0) { Fixpoint.free(mutual); done = true }
+      st.retire(best)
+      if (nMutual == 0) done = true
       else {
         legs += mutual
         val taken = mutual.select(col("u").as("id"))
           .unionAll(mutual.select(col("v").as("id")))
-        val prevRemaining = remaining
-        remaining = remaining
+        val next = st.cutLazy(remaining
           .join(taken.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
           .join(taken.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-          .select("src", "dst", "weight")
-          .localCheckpoint(false)
-        pendingFree = List(prevRemaining)
+          .select("src", "dst", "weight"))
+        st.retire(remaining)
+        remaining = next
       }
       i += 1
     }
-    pendingFree.foreach(Fixpoint.free)
-    Fixpoint.free(remaining)
+    unionOfLegs(st, spark, legs)
+  }
+
+  /** The locally dominant edges of a round: proposals that are mutual,
+    * as `(u, v, weight)` with u < v, lazily cut. */
+  private def mutualOf(st: Fixpoint.Scope, best: DataFrame): DataFrame =
+    st.cutLazy(best.as("a")
+      .join(best.as("b"),
+        col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
+      .filter(col("a.src") < col("a.dst"))
+      .select(col("a.src").as("u"), col("a.dst").as("v"),
+        col("a.weight").as("weight")))
+
+  /** The matched pairs of all rounds: a single leg as is, more legs
+    * unioned into one cut. */
+  private def unionOfLegs(st: Fixpoint.Scope, spark: SparkSession,
+      legs: collection.Seq[DataFrame]): DataFrame = {
+    import spark.implicits._
     if (legs.isEmpty) Seq.empty[(Long, Long, Double)].toDF("u", "v", "weight")
     else if (legs.size == 1) legs.head
-    else {
-      val out = legs.reduce(_ unionAll _).localCheckpoint(true)
-      legs.foreach(Fixpoint.free)
-      out
-    }
+    else st.cut(legs.reduce(_ unionAll _))
   }
 
   /** b-matching via rounds of mutual-best proposals with residual
@@ -92,15 +92,13 @@ object Matching {
     * capacities. Same tie-break discipline as [[suitor]]
     * (weight desc, partner id asc). Returns matched pairs `(u, v,
     * weight)`, u < v, at most `b` per node. */
-  def bSuitor(g: PropertyGraph, b: Int, maxIter: Int = 60): DataFrame = {
+  def bSuitor(g: PropertyGraph, b: Int, maxIter: Int = 60): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
-    import spark.implicits._
-    var remaining = g.adjacency
+    var remaining = st.cut(g.adjacency
       .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("weight"))
-      .localCheckpoint(true)
-    var cap = remaining.select(col("src").as("id")).distinct()
-      .withColumn("cap", lit(b.toLong)).localCheckpoint(true)
+      .select(col("src"), col("dst"), col("weight")))
+    var cap = st.cut(remaining.select(col("src").as("id")).distinct()
+      .withColumn("cap", lit(b.toLong)))
     // ONE Spark job per round: best/mutual and the next round's
     // cap/remaining are LAZY localCheckpoints; the mutual-size count is
     // the action that materializes the whole chained round (the former
@@ -108,7 +106,6 @@ object Matching {
     // matched set is accumulated as per-round legs and unioned once at
     // exit instead of re-checkpointing a growing table every round.
     val legs = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var pendingFree: List[DataFrame] = Nil
     var done = false
     var i = 0
     while (!done && i < maxIter) {
@@ -116,50 +113,32 @@ object Matching {
       val eligible = remaining
         .join(capPos.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(capPos.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      val best = eligible.groupBy("src")
+      val best = st.cutLazy(eligible.groupBy("src")
         .agg(max(struct(col("weight"), (-col("dst")).as("negDst"), col("dst"))).as("b"))
-        .select(col("src"), col("b.dst").as("dst"), col("b.weight").as("weight"))
-        .localCheckpoint(false)
-      val mutual = best.as("a")
-        .join(best.as("b"),
-          col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-        .filter(col("a.src") < col("a.dst"))
-        .select(col("a.src").as("u"), col("a.dst").as("v"),
-          col("a.weight").as("weight"))
-        .localCheckpoint(false)
+        .select(col("src"), col("b.dst").as("dst"), col("b.weight").as("weight")))
+      val mutual = mutualOf(st, best)
       val nMutual = mutual.count() // materializes best + mutual and the
         // lazy cap/remaining checkpoints created last round beneath them
-      pendingFree.foreach(Fixpoint.free); pendingFree = Nil
-      Fixpoint.free(best) // mutual is materialized; best no longer needed
-      if (nMutual == 0) { Fixpoint.free(mutual); done = true }
+      st.retire(best)
+      if (nMutual == 0) done = true
       else {
         legs += mutual
         val used = mutual.select(col("u").as("id"))
           .unionAll(mutual.select(col("v").as("id")))
           .groupBy("id").agg(count(lit(1)).as("used"))
-        val prevCap = cap; val prevRemaining = remaining
-        cap = cap.join(used, Seq("id"), "left")
-          .select(col("id"), (col("cap") - coalesce(col("used"), lit(0L))).as("cap"))
-          .localCheckpoint(false)
-        remaining = remaining
+        val nextCap = st.cutLazy(cap.join(used, Seq("id"), "left")
+          .select(col("id"), (col("cap") - coalesce(col("used"), lit(0L))).as("cap")))
+        val nextRemaining = st.cutLazy(remaining
           .join(mutual.select(col("u").as("src"), col("v").as("dst")),
             Seq("src", "dst"), "left_anti")
           .join(mutual.select(col("v").as("src"), col("u").as("dst")),
-            Seq("src", "dst"), "left_anti")
-          .localCheckpoint(false)
-        pendingFree = List(prevCap, prevRemaining)
+            Seq("src", "dst"), "left_anti"))
+        st.retire(cap, remaining)
+        cap = nextCap; remaining = nextRemaining
       }
       i += 1
     }
-    pendingFree.foreach(Fixpoint.free)
-    Fixpoint.free(cap); Fixpoint.free(remaining)
-    if (legs.isEmpty) Seq.empty[(Long, Long, Double)].toDF("u", "v", "weight")
-    else if (legs.size == 1) legs.head
-    else {
-      val out = legs.reduce(_ unionAll _).localCheckpoint(true)
-      legs.foreach(Fixpoint.free)
-      out
-    }
+    unionOfLegs(st, spark, legs)
   }
 
   /** Dynamic b-suitor: fold a batch of edge INSERTIONS into an existing
@@ -176,10 +155,10 @@ object Matching {
     * sort. `matching` is the pre-insertion `(u, v, weight)` pair set;
     * `g` must already CONTAIN the inserted edges. */
   def bSuitorInsert(g: PropertyGraph, matching: DataFrame, b: Int,
-      maxIter: Int = 60): DataFrame = {
-    var matched = matching.select("u", "v", "weight").localCheckpoint(true)
-    val adj = g.adjacency.filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"), col("weight")).localCheckpoint(true)
+      maxIter: Int = 60): DataFrame = Fixpoint.scope { st =>
+    var matched = st.cut(matching.select("u", "v", "weight"))
+    val adj = st.cut(g.adjacency.filter(col("src") =!= col("dst"))
+      .select(col("src"), col("dst"), col("weight")))
     // two jobs per round (mutual-size count + repaired-matching count);
     // the former eager checkpoints and isEmpty probe cost ~5
     var done = false
@@ -209,18 +188,11 @@ object Matching {
             struct(col("weight"), (-col("dst")).as("negP")) > col("ws")) &&
           (coalesce(col("nd"), lit(0L)) < b ||
             struct(col("weight"), (-col("src")).as("negP")) > col("wd")))
-      val best = cand.groupBy("src")
+      val best = st.cutLazy(cand.groupBy("src")
         .agg(max(struct(col("weight"), (-col("dst")).as("negDst"), col("dst"))).as("b"))
-        .select(col("src"), col("b.dst").as("dst"), col("b.weight").as("weight"))
-        .localCheckpoint(false)
-      val mutual = best.as("a")
-        .join(best.as("b"),
-          col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-        .filter(col("a.src") < col("a.dst"))
-        .select(col("a.src").as("u"), col("a.dst").as("v"),
-          col("a.weight").as("weight"))
-        .localCheckpoint(false)
-      if (mutual.count() == 0) { Fixpoint.free(mutual); Fixpoint.free(best); done = true }
+        .select(col("src"), col("b.dst").as("dst"), col("b.weight").as("weight")))
+      val mutual = mutualOf(st, best)
+      if (mutual.count() == 0) done = true
       else {
         // admit, then evict each over-capacity node's worst matches
         val all = matched.unionAll(mutual)
@@ -232,12 +204,10 @@ object Matching {
             Window.partitionBy("id").orderBy(col("pref").desc)))
         val evicted = ranked.filter(col("rk") > b)
           .select("u", "v").distinct()
-        val prevMatched = matched
-        matched = all
-          .join(evicted, Seq("u", "v"), "left_anti")
-          .localCheckpoint(false)
-        matched.count() // materializes matched (and consumes best/mutual)
-        Fixpoint.free(prevMatched); Fixpoint.free(mutual); Fixpoint.free(best)
+        val next = st.cutLazy(all.join(evicted, Seq("u", "v"), "left_anti"))
+        next.count() // materializes next (and consumes best/mutual)
+        st.retire(matched, mutual, best)
+        matched = next
       }
       i += 1
     }

@@ -102,18 +102,16 @@ object MaxFlow {
     * this is the path for graphs beyond one machine's memory, where the
     * sequential residual walk stops being an option. */
   def pushRelabel(g: PropertyGraph, s: Long, t: Long,
-      maxRounds: Int = 4000): (Double, DataFrame) = {
-    val spark = g.edges.sparkSession
+      maxRounds: Int = 4000): (Double, DataFrame) = Fixpoint.scope { st =>
     import org.apache.spark.sql.expressions.Window
     val eps = 1e-12
     val n = g.vertices.count()
     val fwd = g.adjacency.filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(sum("weight").as("cap"))
-    var res = fwd
+    var res = st.cut(fwd
       .unionAll(fwd.select(col("dst").as("src"), col("src").as("dst"),
         lit(0.0).as("cap")))
-      .groupBy("src", "dst").agg(sum("cap").as("cap"))
-      .localCheckpoint(true)
+      .groupBy("src", "dst").agg(sum("cap").as("cap")))
     // global relabel: h(u) = BFS distance to t over reversed residual
     // arcs (= forward arcs into u's side), unreachable → n; h(s) = n
     val toT = ShortestPaths.bfs(
@@ -122,27 +120,23 @@ object MaxFlow {
           lit(1.0).as("weight")), directed = true),
       ShortestPaths.sourcesOf(g, Seq(t)))
       .select(col("id"), col("dist").as("h"))
-    var heights = g.vertices.select("id")
+    var heights = st.cut(g.vertices.select("id")
       .join(toT, Seq("id"), "left")
       .select(col("id"),
         when(col("id") === s, lit(n))
-          .otherwise(coalesce(col("h"), lit(n))).as("h"))
-      .localCheckpoint(true)
+          .otherwise(coalesce(col("h"), lit(n))).as("h")))
     // saturate s's out-arcs: cap(s,v) → 0, cap(v,s) += cap(s,v),
     // excess(v) = cap(s,v) — one delta union, same mechanism as pushes
-    val sOut = res.filter(col("src") === s && col("cap") > eps)
-      .select(col("dst").as("v"), col("cap").as("pushed"))
-      .localCheckpoint(true)
+    val sOut = st.cut(res.filter(col("src") === s && col("cap") > eps)
+      .select(col("dst").as("v"), col("cap").as("pushed")))
     val initDeltas = sOut
       .select(lit(s).as("src"), col("v").as("dst"), (-col("pushed")).as("d"))
       .unionAll(sOut.select(col("v").as("src"), lit(s).as("dst"),
         col("pushed").as("d")))
-    res = res.join(initDeltas, Seq("src", "dst"), "left")
+    res = st.cut(res.join(initDeltas, Seq("src", "dst"), "left")
       .select(col("src"), col("dst"),
-        (col("cap") + coalesce(col("d"), lit(0.0))).as("cap"))
-      .localCheckpoint(true)
-    var excess = sOut.select(col("v").as("id"), col("pushed").as("ex"))
-      .localCheckpoint(true)
+        (col("cap") + coalesce(col("d"), lit(0.0))).as("cap")))
+    var excess = st.cut(sOut.select(col("v").as("id"), col("pushed").as("ex")))
 
     var round = 0
     var nActive = 1L
@@ -151,58 +145,49 @@ object MaxFlow {
         col("id") =!= s && col("id") =!= t)
       nActive = active.count()
       if (nActive > 0) {
-        val adm = res.filter(col("cap") > eps)
+        val adm = st.cut(res.filter(col("cap") > eps)
           .join(active.select(col("id").as("src"), col("ex")), "src")
           .join(heights.select(col("id").as("src"), col("h").as("hu")), "src")
           .join(heights.select(col("id").as("dst"), col("h").as("hv")), "dst")
-          .filter(col("hu") === col("hv") + 1)
-          .localCheckpoint(true)
+          .filter(col("hu") === col("hv") + 1))
         val w = Window.partitionBy("src").orderBy("dst")
           .rowsBetween(Window.unboundedPreceding, -1)
-        val pushes = adm
+        val pushes = st.cut(adm
           .withColumn("cum", coalesce(sum("cap").over(w), lit(0.0)))
           .withColumn("amt", greatest(lit(0.0),
             least(col("cap"), col("ex") - col("cum"))))
           .filter(col("amt") > eps)
-          .select(col("src"), col("dst"), col("amt"))
-          .localCheckpoint(true)
+          .select(col("src"), col("dst"), col("amt")))
         // relabel actives with no admissible arc at all
-        val relabels = active
+        val relabels = st.cut(active
           .join(adm.select(col("src").as("id")).distinct(),
             Seq("id"), "left_anti")
           .join(res.filter(col("cap") > eps).select(col("src").as("id"),
             col("dst").as("nbr")), "id")
           .join(heights.select(col("id").as("nbr"), col("h").as("hn")), "nbr")
-          .groupBy("id").agg((min("hn") + 1).as("newH"))
-          .localCheckpoint(true)
+          .groupBy("id").agg((min("hn") + 1).as("newH")))
         // apply pushes to the residual graph (both directions)
         val deltas = pushes.select(col("src"), col("dst"), (-col("amt")).as("d"))
           .unionAll(pushes.select(col("dst").as("src"), col("src").as("dst"),
             col("amt").as("d")))
           .groupBy("src", "dst").agg(sum("d").as("d"))
-        val res2 = res.join(deltas, Seq("src", "dst"), "left")
+        val res2 = st.cut(res.join(deltas, Seq("src", "dst"), "left")
           .select(col("src"), col("dst"),
-            (col("cap") + coalesce(col("d"), lit(0.0))).as("cap"))
-          .localCheckpoint(true)
-        graft.graph.Fixpoint.free(res)
+            (col("cap") + coalesce(col("d"), lit(0.0))).as("cap")))
+        st.retire(res)
         res = res2
         val exDelta = pushes.select(col("src").as("id"), (-col("amt")).as("d"))
           .unionAll(pushes.select(col("dst").as("id"), col("amt").as("d")))
           .groupBy("id").agg(sum("d").as("d"))
-        val excess2 = excess.join(exDelta, Seq("id"), "full")
+        val excess2 = st.cut(excess.join(exDelta, Seq("id"), "full")
           .select(col("id"),
-            (coalesce(col("ex"), lit(0.0)) + coalesce(col("d"), lit(0.0))).as("ex"))
-          .localCheckpoint(true)
-        graft.graph.Fixpoint.free(excess)
+            (coalesce(col("ex"), lit(0.0)) + coalesce(col("d"), lit(0.0))).as("ex")))
+        st.retire(excess)
         excess = excess2
-        val heights2 = heights.join(relabels, Seq("id"), "left")
-          .select(col("id"), coalesce(col("newH"), col("h")).as("h"))
-          .localCheckpoint(true)
-        graft.graph.Fixpoint.free(heights)
+        val heights2 = st.cut(heights.join(relabels, Seq("id"), "left")
+          .select(col("id"), coalesce(col("newH"), col("h")).as("h")))
+        st.retire(heights, adm, pushes, relabels)
         heights = heights2
-        graft.graph.Fixpoint.free(adm)
-        graft.graph.Fixpoint.free(pushes)
-        graft.graph.Fixpoint.free(relabels)
       }
       round += 1
     }
@@ -243,19 +228,17 @@ object MaxFlow {
   /** Distributed Flake cuts: one [[pushRelabel]] per discovered
     * community on the α-augmented graph; between flows only the
     * unassigned frontier (one id column) is state. */
-  private def cutClusteringDistributed(g: PropertyGraph, alpha: Double): DataFrame = {
+  private def cutClusteringDistributed(g: PropertyGraph, alpha: Double): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
     val sink = g.vertices.agg(max(col("id"))).head.getLong(0) + 1
-    val augEdges = g.edges.select(col("src"), col("dst"), col("weight"))
+    val augEdges = st.persist(g.edges.select(col("src"), col("dst"), col("weight"))
       .unionAll(g.vertices.select(col("id").as("src"),
-        lit(sink).as("dst"), lit(alpha).as("weight")))
-      .persist()
+        lit(sink).as("dst"), lit(alpha).as("weight"))))
     val aug = PropertyGraph(augEdges, g.directed,
       Some(g.vertices.select(col("id")).unionAll(Seq(sink).toDF("id"))))
-    var unassigned = g.vertices.select(col("id")).localCheckpoint(true)
-    var acc = Seq.empty[(Long, Long)].toDF("id", "community")
-      .localCheckpoint(true)
+    var unassigned = st.cut(g.vertices.select(col("id")))
+    var acc = st.cut(Seq.empty[(Long, Long)].toDF("id", "community"))
     var nLeft = unassigned.count()
     while (nLeft > 0) {
       val s = unassigned.agg(min(col("id"))).head.getLong(0)
@@ -265,14 +248,12 @@ object MaxFlow {
       val newAssign = cutDf.filter(col("id") =!= sink)
         .join(unassigned, Seq("id"), "left_semi")
         .select(col("id"), lit(s).as("community"))
-      val acc2 = acc.unionAll(newAssign).localCheckpoint(true)
-      val un2 = unassigned.join(newAssign.select("id"), Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      Fixpoint.free(acc); Fixpoint.free(unassigned)
+      val acc2 = st.cut(acc.unionAll(newAssign))
+      val un2 = st.cut(unassigned.join(newAssign.select("id"), Seq("id"), "left_anti"))
+      st.retire(acc, unassigned)
       acc = acc2; unassigned = un2
       nLeft = unassigned.count()
     }
-    augEdges.unpersist(false)
     acc
   }
 

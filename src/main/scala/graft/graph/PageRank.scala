@@ -25,7 +25,7 @@ object PageRank {
     * @return `(id, rank)`, ranks summing to 1
     */
   def run(g: PropertyGraph, damping: Double = 0.85, tol: Double = 1e-8,
-      maxIter: Int = 100, weighted: Boolean = false): DataFrame = {
+      maxIter: Int = 100, weighted: Boolean = false): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val debugT0 = System.nanoTime()
@@ -49,17 +49,15 @@ object PageRank {
     // inferring its own `isnotnull` filter over adj (the last step of a
     // span infers a different one and would broadcast adj again).
     val bySrc = Window.partitionBy("src")
-    val adj = g.adjacency.filter(col("src").isNotNull && col("dst").isNotNull)
+    val adj = st.cut(g.adjacency.filter(col("src").isNotNull && col("dst").isNotNull)
       .repartition(shufflePartitions, col("src"))
       .select(col("src"), col("dst"),
         (if (weighted) col("weight") / sum("weight").over(bySrc)
-         else lit(1.0) / count(lit(1)).over(bySrc)).as("share"))
-      .localCheckpoint(true)
+         else lit(1.0) / count(lit(1)).over(bySrc)).as("share")))
 
-    val nodes = (
+    val nodes = st.cut(
       if (structurallyCovered) adj.select(col("src").as("id")).distinct()
-      else g.vertices.select("id")
-    ).localCheckpoint(true)
+      else g.vertices.select("id"))
     val n = Fixpoint.materialize(nodes).toDouble
     dbg("adj+nodes materialized")
     val init = nodes.select(col("id"), lit(1.0 / n).as("rank"))
@@ -67,8 +65,7 @@ object PageRank {
     // nodes with no out-edges: their rank is redistributed uniformly
     val sinks =
       if (structurallyCovered) null
-      else nodes.join(adj.select(col("src").as("id")), Seq("id"), "left_anti")
-        .localCheckpoint(true)
+      else st.cut(nodes.join(adj.select(col("src").as("id")), Seq("id"), "left_anti"))
     val nSinks = if (structurallyCovered) 0L else Fixpoint.materialize(sinks)
     val hasSinks = nSinks > 0
     // a sink with no in-edges (every sink of an undirected graph is an
@@ -111,7 +108,7 @@ object PageRank {
     // per span — materializing init separately would be pure overhead
     var cur =
       if (tol > 0) {
-        val c = init.localCheckpoint(true); dbg("init materialized"); c
+        val c = st.cut(init); dbg("init materialized"); c
       } else init
     // isolated-sink mass recurrence: s₀ = nSinks/n (initial uniform rank),
     // s_{k+1} = nSinks·((1−d)/n + d·s_k/n)
@@ -133,7 +130,7 @@ object PageRank {
       }
       // localCheckpoint truncates the span's chained lineage each round
       if (i > 0) Fixpoint.dumpLoopPlan("pagerank_span", stepped)
-      val next = stepped.localCheckpoint(false)
+      val next = st.cutLazy(stepped)
       if (tol > 0) {
         val diff = next.select(col("id"), col("rank"))
           .join(cur.select(col("id"), col("rank").as("prev")), "id")
@@ -142,18 +139,14 @@ object PageRank {
       } else Fixpoint.materialize(next)
       if (debug) System.err.println(
         f"[pagerank] iters $i..${i + span} ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      Fixpoint.free(cur) // checkpoint blocks — Dataset.unpersist misses them
+      st.retire(cur)
       cur = next
       i += span
     }
     dbg("loop done")
-    // after a step, cur is a materialized checkpoint that reads none of
-    // these; with maxIter = 0 it is still init, a projection of nodes
-    val result = cur.select("id", "rank")
-    Fixpoint.free(adj)
-    if (i > 0) Fixpoint.free(nodes)
-    if (sinks != null) Fixpoint.free(sinks)
-    result
+    // with maxIter = 0 cur is still init, a projection of nodes, and the
+    // scope keeps nodes for it
+    cur.select("id", "rank")
   }
 
   /** Laplacian centrality (reference `centrality/LaplacianCentrality.hpp:24`,

@@ -36,23 +36,19 @@ object ShortestPaths {
     * union is compacted into ONE checkpoint and the per-hop legs are
     * freed, preserving the round-state hygiene contract (FixpointSpec):
     * the settled table is copied once total, not once per hop. */
-  def bfs(g: PropertyGraph, sources: DataFrame, maxIter: Int = 200): DataFrame = {
-    val adj = g.adjacency.select("src", "dst")
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+  def bfs(g: PropertyGraph, sources: DataFrame, maxIter: Int = 200): DataFrame = Fixpoint.scope { st =>
+    val adj = st.persist(g.adjacency.select("src", "dst").repartition(col("src")))
 
-    var dist = sources.select(col("source"), col("source").as("id"), lit(0L).as("dist"))
-      .localCheckpoint(true)
+    var dist = st.cut(sources.select(col("source"), col("source").as("id"), lit(0L).as("dist")))
     val legs = scala.collection.mutable.ListBuffer(dist)
     // bound the union depth: past `compactEvery` legs the d-ary union's
     // per-hop planning cost is O(d) (O(d²) over the traversal) and the
     // exit compaction scans d legs — fine at diameter ~40, hostile at
     // diameter 10⁴ (road networks). Compacting every K hops keeps the
     // plan O(K) wide for one O(n) copy per K hops; the hop-loop stays
-    // 1 job/hop. The live frontier leg is freed one round late
-    // (pendingFree): the compacted dist holds its ROWS, but the frontier
-    // DataFrame still reads its checkpoint blocks next round.
+    // 1 job/hop. The compacted dist holds the live frontier's ROWS, but
+    // the frontier is still read by the next hop, so it is retired then.
     val compactEvery = 32
-    var pendingFree: List[DataFrame] = Nil
     var frontier = dist
     var i = 0
     var frontierSize = frontier.count()
@@ -62,32 +58,23 @@ object ShortestPaths {
         .groupBy("source", "id").agg(min("dist").as("dist"))
       val hopBody = candidates.join(dist, Seq("source", "id"), "left_anti")
       if (i > 0) Fixpoint.dumpLoopPlan("bfs_hop", hopBody)
-      val newFrontier =
-        hopBody.localCheckpoint(false) // lazy: the count below materializes it
+      val newFrontier = st.cutLazy(hopBody) // the count below materializes it
+      if (!legs.exists(_ eq frontier)) st.retire(frontier) // compacted away
       frontierSize = newFrontier.count()
-      pendingFree.foreach(Fixpoint.free); pendingFree = Nil
       if (frontierSize > 0) {
         dist = dist.unionAll(newFrontier)
         legs += newFrontier
         if (legs.size >= compactEvery) {
-          val compacted = dist.localCheckpoint(true)
-          legs.filterNot(_ eq newFrontier).foreach(Fixpoint.free)
-          pendingFree = List(newFrontier)
+          val compacted = st.cut(dist)
+          st.retire(legs.filterNot(_ eq newFrontier).toSeq: _*)
           legs.clear(); legs += compacted
           dist = compacted
         }
         frontier = newFrontier
-      } else Fixpoint.free(newFrontier)
+      }
       i += 1
     }
-    adj.unpersist(false)
-    pendingFree.foreach(Fixpoint.free)
-    if (legs.size == 1) dist
-    else {
-      val out = dist.localCheckpoint(true)
-      legs.foreach(Fixpoint.free)
-      out
-    }
+    if (legs.size == 1) dist else st.cut(dist)
   }
 
   /** Weighted SSSP (non-negative weights): `(source, id, dist)`.
@@ -103,15 +90,13 @@ object ShortestPaths {
     * full-dist shuffle every round) is gone; the union is compacted into
     * one aggregated checkpoint every `compactEvery` rounds and once at
     * exit, so plan width stays O(K) and the O(n) copy amortizes. */
-  def dijkstra(g: PropertyGraph, sources: DataFrame, maxIter: Int = 200): DataFrame = {
-    val adj = g.adjacency.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+  def dijkstra(g: PropertyGraph, sources: DataFrame, maxIter: Int = 200): DataFrame = Fixpoint.scope { st =>
+    val adj = st.persist(g.adjacency.repartition(col("src")))
     adj.count()
 
-    var union = sources.select(col("source"), col("source").as("id"), lit(0.0).as("dist"))
-      .localCheckpoint(true)
+    var union = st.cut(sources.select(col("source"), col("source").as("id"), lit(0.0).as("dist")))
     val legs = scala.collection.mutable.ListBuffer(union)
     val compactEvery = 16
-    var pendingFree: List[DataFrame] = Nil
     // current settled best per (source, id) — min over the legs
     def best = union.groupBy("source", "id").agg(min("dist").as("dist"))
     var frontier = union
@@ -127,32 +112,23 @@ object ShortestPaths {
         .filter(col("cur").isNull || col("nd") < col("cur"))
         .select(col("source"), col("id"), col("nd").as("dist"))
       if (i > 0) Fixpoint.dumpLoopPlan("dijkstra_round", roundBody)
-      val improved =
-        roundBody.localCheckpoint(false) // lazy: the count below materializes it
+      val improved = st.cutLazy(roundBody) // the count below materializes it
+      if (!legs.exists(_ eq frontier)) st.retire(frontier) // compacted away
       frontierSize = improved.count()
-      pendingFree.foreach(Fixpoint.free); pendingFree = Nil
       if (frontierSize > 0) {
         union = union.unionAll(improved)
         legs += improved
         if (legs.size >= compactEvery) {
-          val compacted = best.localCheckpoint(true)
-          legs.filterNot(_ eq improved).foreach(Fixpoint.free)
-          pendingFree = List(improved) // live frontier: free after next round
+          val compacted = st.cut(best)
+          st.retire(legs.filterNot(_ eq improved).toSeq: _*)
           legs.clear(); legs += compacted
           union = compacted
         }
         frontier = improved
-      } else Fixpoint.free(improved)
+      }
       i += 1
     }
-    adj.unpersist(false)
-    pendingFree.foreach(Fixpoint.free)
-    if (legs.size == 1) union
-    else {
-      val out = best.localCheckpoint(true)
-      legs.foreach(Fixpoint.free)
-      out
-    }
+    if (legs.size == 1) union else st.cut(best)
   }
 
   def sourcesOf(g: PropertyGraph, ids: Seq[Long]): DataFrame = {

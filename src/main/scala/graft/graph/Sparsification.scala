@@ -43,13 +43,6 @@ object Sparsification {
         (col("score") / (col("ds") + col("dd") - col("score"))).as("score"))
   }
 
-  /** Random edge score, seed-deterministic (reference
-    * `RandomEdgeScore`). */
-  def randomScore(g: PropertyGraph, seed: Long = 42): DataFrame =
-    g.edges.select(col("src"), col("dst"), col("weight"),
-      (pmod(xxhash64(lit(seed), col("src"), col("dst")), lit(1L << 40)) /
-        lit((1L << 40).toDouble)).as("score"))
-
   /** Keep edges with score ≥ (or >) threshold (reference
     * `GlobalThresholdFilter.hpp:18` — the canonical filter). */
   def globalThresholdFilter(scored: DataFrame, threshold: Double,

@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.graph.PropertyGraph
+import graft.graph.{Fixpoint, PropertyGraph}
 
 /** Graph file-format readers (SURVEY.md §2.1; reference:
   * `include/networkit/io/EdgeListReader.hpp:24`,
@@ -218,10 +218,10 @@ object GraphReaders {
     * [ id N ] … edge [ source A target B ] ]`, optional `directed 1`
     * header key. GML files are unsplittable interchange fixtures, so
     * each file is parsed in one executor task via `wholeTextFiles`. */
-  def readGml(spark: SparkSession, path: String): PropertyGraph = {
+  def readGml(spark: SparkSession, path: String): PropertyGraph = Fixpoint.scope { st =>
     import spark.implicits._
     val text = spark.sparkContext.wholeTextFiles(path).map(_._2)
-    val parsed = text.flatMap { content =>
+    val parsed = st.persist(text.flatMap { content =>
       val tokens = content.split("[\\s\\[\\]]+").filter(_.nonEmpty)
       val buf = scala.collection.mutable.ArrayBuffer[(String, Long, Long, Double)]()
       var directed = 0L
@@ -255,7 +255,10 @@ object GraphReaders {
         }
       }
       buf.iterator.map { case (k, u, v, w) => (k, u, v, w, directed) }
-    }.toDF("kind", "u", "v", "w", "directed").persist()
+    }.toDF("kind", "u", "v", "w", "directed"))
+    // the read fails here on a missing path, and the scope then drops
+    // the cache entry: an entry over an unreadable input would make every
+    // later `Dataset.unpersist` of the session throw
     val directed = parsed.agg(max("directed")).head.getLong(0) == 1L
     val vertices = parsed.filter(col("kind") === "n").select(col("u").as("id"))
     val edges = parsed.filter(col("kind") === "e")
@@ -469,7 +472,9 @@ object GraphReaders {
     * i lists the member nodes of community i. Returns `(id, community)`
     * rows — one per membership, so overlapping covers surface as
     * multiple rows per id (the relational form of the reference's
-    * `Cover`; `collect_set` by id gives the `(id, communities)` shape). */
+    * `Cover`; `collect_set` by id gives the `(id, communities)` shape).
+    * SNAP community files (`io/SNAPEdgeListPartitionReader.hpp:23`, one
+    * member list per line over arbitrary ids) read the same way. */
   def readCover(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     spark.sparkContext.textFile(path).zipWithIndex()
@@ -519,13 +524,6 @@ object GraphReaders {
         p.drop(1).map(c => (v, c.toLong))
       }.toDF("id", "community")
   }
-
-  /** SNAP community reader (reference
-    * `io/SNAPEdgeListPartitionReader.hpp:23`): like [[readCover]] but
-    * over SNAP's arbitrary (non-contiguous) node ids — each non-comment
-    * line is one community's member list. */
-  def readSnapCommunities(spark: SparkSession, path: String): DataFrame =
-    readCover(spark, path)
 
   /** DGS event-stream writer (reference `dynamics/DGSWriter.hpp:21`):
     * serializes a GraphEvent table `(seq, type, u, v, w)` (the

@@ -88,25 +88,21 @@ object MaxentLayout {
       finalAlpha: Double = 0.008, maxSolvesPerAlpha: Int = 50,
       fastComputation: Boolean = true, seed: Long = 42L,
       solveTol: Double = 1e-6, solveMaxCycles: Int = 12,
-      coarsestN: Int = 64, repulsionExactBelow: Long = 1024L): MaxentResult = {
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val s = knownDistances(g, k).localCheckpoint(true)
+      coarsestN: Int = 64, repulsionExactBelow: Long = 1024L): MaxentResult = Fixpoint.scope { st =>
+    val s = st.cut(knownDistances(g, k))
     val cardinality = s.count()
     val n = g.vertices.count()
     // weighted Laplacian over S, w = 1/d²
-    val wf = s.select(col("i"), col("j"), (lit(1.0) / (col("d") * col("d"))).as("w"))
-      .localCheckpoint(true)
+    val wf = st.cut(s.select(col("i"), col("j"), (lit(1.0) / (col("d") * col("d"))).as("w")))
     val lap = wf.select(col("i"), col("j"), (-col("w")).as("v"))
       .unionAll(wf.groupBy("i").agg(sum("w").as("v")).select(col("i"), col("i").as("j"), col("v")))
     val levels = Multigrid.setup(lap, coarsestN)
     // deterministic pseudo-random init in [-0.5, 0.5)^dim (the
     // reference's randomSphereCoordinates analog, seeded)
-    var coords = g.vertices.select(
+    var coords = st.cut(g.vertices.select(
       col("id") +: (0 until dim).map(dd =>
         ((pmod(xxhash64(col("id"), lit(seed + dd)), lit(100000L))
-          .cast("double") / 100000.0) - 0.5).as(s"c$dd")): _*)
-      .localCheckpoint(true)
+          .cast("double") / 100000.0) - 0.5).as(s"c$dd")): _*))
 
     def ldmeOf(c: DataFrame): Double = {
       val joined = s
@@ -142,29 +138,27 @@ object MaxentLayout {
           .withColumn("wt", (lit(1.0) / (col("d") * col("d"))) * col("d") / col("dist"))
         val rhsCols = (0 until dim).map(dd =>
           sum(col("wt") * (col(s"a$dd") - col(s"b$dd"))).as(s"r$dd"))
-        var rhs = pair.groupBy(col("i").as("id"))
-          .agg(rhsCols.head, rhsCols.tail: _*)
-          .localCheckpoint(true)
+        val rhsCut = st.cut(pair.groupBy(col("i").as("id"))
+          .agg(rhsCols.head, rhsCols.tail: _*))
         // normalize rhs for the first fifth of an alpha round
         // (`MaxentStress.cpp:144-147`)
-        if (numSolves < math.max(maxSolvesPerAlpha / 5, 1)) {
+        val rhs = if (numSolves < math.max(maxSolvesPerAlpha / 5, 1)) {
           val nrmCols = (0 until dim).map(dd =>
             sqrt(sum(col(s"r$dd") * col(s"r$dd"))).as(s"n$dd"))
-          val nrm = rhs.agg(nrmCols.head, nrmCols.tail: _*).first()
+          val nrm = rhsCut.agg(nrmCols.head, nrmCols.tail: _*).first()
           val norms = (0 until dim).map(dd => math.max(nrm.getDouble(dd), 1e-300))
-          rhs = rhs.select(col("id") +: (0 until dim).map(dd =>
+          rhsCut.select(col("id") +: (0 until dim).map(dd =>
             (col(s"r$dd") / norms(dd)).as(s"r$dd")): _*)
-        }
+        } else rhsCut
         // Barnes–Hut octree repulsion (the reference's
         // approxRepulsiveForces shape), normalized then scaled by alpha.
         // The exact-dispatch cutoff is LOWER here than Octree's one-shot
         // default: this call repeats every solve of every alpha round,
         // so the n² exact field would be paid dozens of times in the
         // mid-size band where the O(n log n) interaction lists already win
-        val rep0 = Octree.repulsion(coords, dim, qSign, q2,
+        val rep0 = st.cut(Octree.repulsion(coords, dim, qSign, q2,
             exactBelow = repulsionExactBelow)
-          .drop("cov")
-          .localCheckpoint(true)
+          .drop("cov"))
         val fnCols = (0 until dim).map(dd =>
           sqrt(sum(col(s"f$dd") * col(s"f$dd"))).as(s"n$dd"))
         val fn = rep0.agg(fnCols.head, fnCols.tail: _*).first()
@@ -189,11 +183,9 @@ object MaxentLayout {
         val solved = Multigrid.solvePrepared(levels, rhsVec,
           tol = solveTol, maxCycles = solveMaxCycles, x0 = Some(x0))
         val newWide = widen(solved, dim)
-        val prev = coords
-        coords = g.vertices.select("id").join(newWide, Seq("id"), "left")
+        coords = st.cut(g.vertices.select("id").join(newWide, Seq("id"), "left")
           .select(col("id") +: (0 until dim).map(dd =>
-            coalesce(col(s"c$dd"), lit(0.0)).as(s"c$dd")): _*)
-          .localCheckpoint(true)
+            coalesce(col(s"c$dd"), lit(0.0)).as(s"c$dd")): _*))
         solves += 1
         // convergence: relative coordinate change < 1e-6
         // (`convThreshold = 0.001²`, `MaxentStress.cpp:33`)
@@ -205,7 +197,7 @@ object MaxentLayout {
             sum((0 until dim).map(dd => col(s"a$dd") * col(s"a$dd"))
               .reduce(_ + _)).as("den")).first()
         converged = chg.getDouble(0) / math.max(chg.getDouble(1), 1e-300) < 1e-6
-        Fixpoint.free(prev)
+        st.retire(old, rhsCut, rep0)
         numSolves += 1
         if (converged && !fastComputation) converged = false
       }

@@ -10,12 +10,15 @@ import graft.graph._
   * `localCheckpoint`ed states (their blocks live in RDD storage, not the
   * CacheManager), so per-round states used to pile up until the periodic
   * GC — eviction churn at 10⁸-row scale. These specs pin the fix:
-  * `Fixpoint.free` drops the checkpointed RDD itself, and the iterative
-  * kernels leave no per-round blocks behind. Counting is by DELTA against
-  * the session-wide persistent-RDD set (the shared session memoizes
-  * fixture graphs across suites — never unpersist those). The CC and
-  * PageRank cases also pin their per-round job and broadcast budgets,
-  * counted with a listener.
+  * `Fixpoint.free` drops the checkpointed RDD itself, and
+  * `Fixpoint.scope` — the one owner of what an iterative kernel stores —
+  * holds a retired state while an uncomputed lazy cut still reads it,
+  * frees everything on exit or on a throw except what the result reads,
+  * and so every kernel built on it leaves no per-round blocks behind.
+  * Counting is by DELTA against the session-wide persistent-RDD set (the
+  * shared session memoizes fixture graphs across suites — never unpersist
+  * those). The CC and PageRank cases also pin their per-round job and
+  * broadcast budgets, counted with a listener.
   */
 class FixpointSpec extends SparkSpec {
 
@@ -79,6 +82,82 @@ class FixpointSpec extends SparkSpec {
     assert(persistedRddCount() <= base + 1)
     Fixpoint.free(out)
     assert(persistedRddCount() <= base)
+  }
+
+  test("scope holds a retired state until the lazy cut reading it is computed") {
+    import spark.implicits._
+    val base = persistedRddCount()
+    Fixpoint.scope { st =>
+      val a = st.cut((1 to 100).toDF("x"))
+      val b = st.cutLazy(a.select((col("x") + 1).as("x")))
+      st.retire(a)
+      assert(persistedRddCount() == base + 2) // b still reads a
+      Fixpoint.materialize(b)
+      st.retire(b)
+      assert(persistedRddCount() == base)
+    }
+  }
+
+  test("scope frees what it stored on a throw; an inner result goes to the outer scope") {
+    import spark.implicits._
+    val base = persistedRddCount()
+    val entries = org.apache.spark.sql.CacheEntries(spark)
+    intercept[IllegalStateException](Fixpoint.scope { st =>
+      val c = st.cut((1 to 100).toDF("x"))
+      Fixpoint.materialize(st.persist(c.select((col("x") * 2).as("y"))))
+      assert(persistedRddCount() == base + 2)
+      throw new IllegalStateException("boom")
+    })
+    assert(persistedRddCount() == base)
+    assert(org.apache.spark.sql.CacheEntries(spark) == entries)
+    val rows = Fixpoint.scope { _ =>
+      val inner = Fixpoint.scope(st => st.cut((1 to 10).toDF("x")).select("x"))
+      assert(persistedRddCount() == base + 1) // kept: the result reads it
+      inner.count()
+    }
+    assert(rows == 10)
+    assert(persistedRddCount() == base) // freed when the outer call ended
+  }
+
+  test("readGml of a missing path throws and leaves no cache entry behind") {
+    import spark.implicits._
+    val entries = org.apache.spark.sql.CacheEntries(spark)
+    intercept[Exception](graft.io.GraphReaders.readGml(spark, "/nonexistent/missing.gml"))
+    assert(org.apache.spark.sql.CacheEntries(spark) == entries)
+    // an entry over the unreadable input would make this unpersist throw
+    val other = (1 to 10).toDF("x").persist()
+    assert(other.count() == 10)
+    other.unpersist(true)
+  }
+
+  test("every migrated kernel leaves at most its result behind") {
+    val g = path(300)
+    assert(g.edges.count() == 299) // fixture materialized before the baselines
+    val src = spark.range(1).select(lit(0L).as("source"))
+    def retained[T](name: String)(call: => T): T = {
+      val base = persistedRddCount()
+      val out = call
+      out match {
+        case df: org.apache.spark.sql.Dataset[_] => df.count()
+        case pg: PropertyGraph => pg.edges.count()
+        case _ =>
+      }
+      assert(persistedRddCount() <= base + 1,
+        s"$name retained ${persistedRddCount() - base} RDDs")
+      out
+    }
+    // round caps keep each call near 2 s
+    retained("bfs")(ShortestPaths.bfs(g, src, maxIter = 3))
+    retained("dijkstra")(ShortestPaths.dijkstra(g, src, maxIter = 3))
+    retained("coreDecomposition")(GraphOps.coreDecomposition(g, maxIter = 2))
+    retained("kCore")(GraphOps.kCore(g, 2, maxIter = 5))
+    retained("floydWarshall")(Apsp.floydWarshall(g, maxSquarings = 3))
+    retained("louvainLocalMove")(Community.louvainLocalMove(g, maxRounds = 2))
+    retained("lfmLocal")(Community.lfmLocal(g, seed = 150L, maxSize = 4))
+    retained("eigenvectors")(Coloring.smallestAdjacencyEigenvectors(g, k = 2, iters = 1))
+    val m = retained("suitor")(Matching.suitor(g, maxIter = 3))
+    retained("bSuitor")(Matching.bSuitor(g, b = 2, maxIter = 3))
+    retained("bSuitorInsert")(Matching.bSuitorInsert(g, m, b = 1, maxIter = 3))
   }
 
   test("bfs and coreDecomposition leave no per-round blocks behind") {
