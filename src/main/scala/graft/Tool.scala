@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -131,12 +132,12 @@ object Tool {
     val rows = orHeadline(names).flatMap { n =>
       (1 to 2).flatMap { run =>
         spark.sparkContext.setJobDescription(s"$n run$run")
-        Thread.sleep(300) // settle the previous run's listener events before zeroing
+        ListenerBusDrain(spark.sparkContext) // deliver the previous run's events before zeroing
         Seq(jobs, stages, tasks, shuffleWrite).foreach(_.set(0))
         attempt(spark, "jobs", n) {
           val fn = SparkEntry.queries(n)
           val (c, dt) = timed(fn(spark, sfDir).count())
-          Thread.sleep(300) // let the last job's events drain
+          ListenerBusDrain(spark.sparkContext) // deliver the last job's events
           (c, dt, jobs.get, stages.get, tasks.get, shuffleWrite.get)
         }
       }.drop(1).map { case (c, dt, j, st, tk, sw) =>

@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 
 /** Community detection (reference: `community/PLP.hpp:26` label
   * propagation, `PLM.hpp:19` parallel Louvain,
@@ -23,44 +22,10 @@ object Community {
 
   /** Synchronous PLP: adopt the most frequent neighbor label
     * (ties → smallest label); stop when < `threshold` nodes change.
-    * The per-round changed-count rides a `changed` flag column inside
-    * the step, so convergence costs one aggregate on the state being
-    * materialized anyway — not an extra join+count job per round. */
-  def plp(g: PropertyGraph, maxIter: Int = 30, threshold: Long = 0): DataFrame = {
-    val adj = sym(g).select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    var cur = g.vertices.select(col("id"), col("id").as("community"))
-      .withColumn("changed", lit(1L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val labels = cur.select("id", "community")
-      val freq = labels.join(adj, labels("id") === adj("src"))
-        .groupBy(col("dst").as("id"), col("community"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy("id").orderBy(col("cnt").desc, col("community").asc)
-      val best = freq.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("id"), col("community").as("newCommunity"))
-      val stepped = labels.join(best, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("newCommunity"), col("community")).as("community"),
-          (coalesce(col("newCommunity"), col("community")) =!= col("community"))
-            .cast("long").as("changed"))
-      val next =
-        if ((i + 1) % 4 == 0) stepped.localCheckpoint(false) // lazy cut
-        else stepped.persist(StorageLevel.MEMORY_AND_DISK)
-      // one action: materializes the round AND reads the changed count
-      val changed = next.agg(sum("changed")).head.getLong(0)
-      cur.unpersist(blocking = false)
-      cur = next
-      done = changed <= threshold
-      i += 1
-    }
-    val res = cur.select("id", "community")
-    adj.unpersist(false)
-    res
-  }
+    * [[labelPropagation]] with every sender ranked equal. */
+  def plp(g: PropertyGraph, maxIter: Int = 30, threshold: Long = 0): DataFrame =
+    labelPropagation(g, sym(g).select(col("src"), col("dst"), lit(0L).as("rank")),
+      maxIter, threshold)
 
   /** Degree-ordered label propagation (reference
     * `community/LPDegreeOrdered.hpp:22`): the reference processes nodes
@@ -74,22 +39,31 @@ object Community {
     * partitioning-independent. One extra broadcast-sized join per round
     * (degrees onto the adjacency, computed once). */
   def plpDegreeOrdered(g: PropertyGraph, maxIter: Int = 30,
-      threshold: Long = 0): DataFrame = {
-    val adj = sym(g).select("src", "dst")
-      .join(g.degrees.select(col("id").as("src"), col("degree").as("srcDeg")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var cur = g.vertices.select(col("id"), col("id").as("community"))
-      .withColumn("changed", lit(1L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      threshold: Long = 0): DataFrame =
+    labelPropagation(g, sym(g).select("src", "dst")
+      .join(g.degrees.select(col("id").as("src"), col("degree").as("rank")), "src"),
+      maxIter, threshold)
+
+  /** Synchronous label propagation over `adj = (src, dst, rank)`: each
+    * node adopts the label most frequent among its senders, ties → the
+    * label with the lowest sender `rank`, then the smallest label. The
+    * per-round changed-count rides a `changed` flag column inside the
+    * step, so convergence costs one aggregate on the state being
+    * materialized anyway — not an extra join+count job per round. */
+  private def labelPropagation(g: PropertyGraph, rankedAdj: DataFrame, maxIter: Int,
+      threshold: Long): DataFrame = Fixpoint.scope { st =>
+    val adj = st.persist(rankedAdj)
+    var cur = st.persist(g.vertices.select(col("id"), col("id").as("community"))
+      .withColumn("changed", lit(1L)))
     var i = 0
     var done = false
     while (i < maxIter && !done) {
       val labels = cur.select("id", "community")
       val freq = labels.join(adj, labels("id") === adj("src"))
         .groupBy(col("dst").as("id"), col("community"))
-        .agg(count(lit(1)).as("cnt"), min("srcDeg").as("minDeg"))
+        .agg(count(lit(1)).as("cnt"), min("rank").as("minRank"))
       val w = Window.partitionBy("id")
-        .orderBy(col("cnt").desc, col("minDeg").asc, col("community").asc)
+        .orderBy(col("cnt").desc, col("minRank").asc, col("community").asc)
       val best = freq.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("id"), col("community").as("newCommunity"))
@@ -98,18 +72,15 @@ object Community {
           coalesce(col("newCommunity"), col("community")).as("community"),
           (coalesce(col("newCommunity"), col("community")) =!= col("community"))
             .cast("long").as("changed"))
-      val next =
-        if ((i + 1) % 4 == 0) stepped.localCheckpoint(false)
-        else stepped.persist(StorageLevel.MEMORY_AND_DISK)
+      val next = if ((i + 1) % 4 == 0) st.cutLazy(stepped) else st.persist(stepped)
+      // one action: materializes the round AND reads the changed count
       val changed = next.agg(sum("changed")).head.getLong(0)
-      cur.unpersist(blocking = false)
+      st.retire(cur)
       cur = next
       done = changed <= threshold
       i += 1
     }
-    val res = cur.select("id", "community")
-    adj.unpersist(false)
-    res
+    cur.select("id", "community")
   }
 
   /** Modularity Q of a partition `(id, community)` (reference
@@ -227,13 +198,12 @@ object Community {
     * are matchable (merging a negative-Δmod pair cannot help Q).
     * Returns `(id, community)`. */
   def agglomerative(g: PropertyGraph, maxLevels: Int = 24,
-      relThresh: Double = 5e-3): DataFrame = {
+      relThresh: Double = 5e-3): DataFrame = Fixpoint.scope { st =>
     val debugT0 = System.nanoTime()
     def dbg(what: String): Unit = if (sys.env.contains("GRAFT_FIXPOINT_DEBUG"))
       System.err.println(f"[agglo] $what ${(System.nanoTime() - debugT0) / 1e9}%.2fs")
     var cur = g
-    var labels = g.vertices.select(col("id"), col("id").as("community"))
-      .localCheckpoint(true)
+    var labels = st.cut(g.vertices.select(col("id"), col("id").as("community")))
     var n = cur.vertices.count()
     var repeat = n >= 2
     var level = 0
@@ -257,26 +227,28 @@ object Community {
         // matched pairs (u < v) contract to u; everyone else stays singleton
         val pairMap = matched.select(col("u").as("id"), col("u").as("community"))
           .unionAll(matched.select(col("v").as("id"), col("u").as("community")))
-        val part = cur.vertices.select("id")
+        val part = st.cut(cur.vertices.select("id")
           .join(pairMap, Seq("id"), "left")
           .select(col("id"),
-            coalesce(col("community"), col("id")).as("community"))
-          .localCheckpoint(true)
+            coalesce(col("community"), col("id")).as("community")))
         dbg("part")
         val coarse = coarsen(cur, part)
         val cn = coarse.vertices.count()
         dbg("coarse counted")
         repeat = cn < n && cn >= 2 && (n - cn).toDouble / n > relThresh
         if (repeat) {
-          labels = labels
+          val next = st.cut(labels
             .join(part.select(col("id").as("community"), col("community").as("c2")),
               Seq("community"))
-            .select(col("id"), col("c2").as("community"))
-            .localCheckpoint(true)
-          cur = PropertyGraph(coarse.edges.localCheckpoint(true), directed = false,
-            Some(coarse.vertices.localCheckpoint(true)))
+            .select(col("id"), col("c2").as("community")))
+          val coarseCut = PropertyGraph(st.cut(coarse.edges), directed = false,
+            Some(st.cut(coarse.vertices)))
+          st.retire(labels, cur.edges, cur.vertices)
+          labels = next
+          cur = coarseCut
           n = cn
         }
+        st.retire(part)
       }
       level += 1
     }
@@ -381,31 +353,36 @@ object Community {
     * is a full shuffle). Pass `minMovesFrac = 0` for the reference's
     * exact zero-move convergence. */
   def louvain(g: PropertyGraph, maxLevels: Int = 6, gamma: Double = 1.0,
-      minMovesFrac: Double = 5e-3): DataFrame = {
+      minMovesFrac: Double = 5e-3): DataFrame = Fixpoint.scope { st =>
     val debugT0 = System.nanoTime()
     def dbg(what: String): Unit = if (sys.env.contains("GRAFT_FIXPOINT_DEBUG"))
       System.err.println(f"[louvain] $what ${(System.nanoTime() - debugT0) / 1e9}%.2fs")
     var cur = g
+    var curReads = Seq.empty[DataFrame] // the stored frames cur is built on
     var mapping = g.vertices.select(col("id"), col("id").as("community"))
     var level = 0
     var improved = true
     var lastQ = modularity(g, mapping)
     while (improved && level < maxLevels) {
       dbg(s"level $level start")
-      val part = louvainLocalMove(cur, gamma = gamma,
-        minMovesFrac = minMovesFrac).localCheckpoint(true)
+      val part = st.cut(louvainLocalMove(cur, gamma = gamma,
+        minMovesFrac = minMovesFrac))
       // project: node → its supernode's new community
       val sup = part.select(col("id").as("supernode"),
         col("community").as("nextCommunity"))
-      mapping = mapping.join(sup, mapping("community") === sup("supernode"))
-        .select(col("id"), col("nextCommunity").as("community"))
-        .localCheckpoint(true)
+      val next = st.cut(mapping.join(sup, mapping("community") === sup("supernode"))
+        .select(col("id"), col("nextCommunity").as("community")))
+      st.retire(mapping)
+      mapping = next
       val q = modularity(g, mapping)
       if (q <= lastQ + 1e-9) improved = false
       else {
         lastQ = q
-        cur = coarsen(cur, part)
-        cur = cur.copy(edges = cur.edges.localCheckpoint(true))
+        val coarse = coarsen(cur, part)
+        val edges = st.cut(coarse.edges)
+        st.retire(curReads: _*)
+        cur = coarse.copy(edges = edges)
+        curReads = Seq(edges, part) // the coarse vertices read part
         level += 1
       }
     }
@@ -444,8 +421,9 @@ object Community {
     * passes (same semantics and same deliberate deviation as
     * [[louvain]]; 0 = exact zero-move convergence). */
   def leiden(g: PropertyGraph, maxLevels: Int = 6,
-      gamma: Double = 1.0, minMovesFrac: Double = 5e-3): DataFrame = {
+      gamma: Double = 1.0, minMovesFrac: Double = 5e-3): DataFrame = Fixpoint.scope { st =>
     var cur = g
+    var curReads = Seq.empty[DataFrame] // the stored frames cur is built on
     var mapping = g.vertices.select(col("id"), col("id").as("community"))
     var constraint = Option.empty[DataFrame] // supernode → P-community seed
     var best = mapping
@@ -453,33 +431,34 @@ object Community {
     var level = 0
     var improved = true
     while (improved && level < maxLevels) {
-      val p = louvainLocalMove(cur, gamma = gamma, initPartition = constraint,
-          minMovesFrac = minMovesFrac)
-        .localCheckpoint(true)
+      val p = st.cut(louvainLocalMove(cur, gamma = gamma, initPartition = constraint,
+        minMovesFrac = minMovesFrac))
       // final labels this level = mapping ∘ p
       val supP = p.select(col("id").as("supernode"), col("community").as("cp"))
-      val projected = mapping.join(supP, mapping("community") === supP("supernode"))
-        .select(col("id"), col("cp").as("community"))
-        .localCheckpoint(true)
+      val projected = st.cut(mapping.join(supP, mapping("community") === supP("supernode"))
+        .select(col("id"), col("cp").as("community")))
       val q = modularity(g, projected)
       if (q <= lastQ + 1e-9) improved = false
       else {
         lastQ = q
+        st.retire(best)
         best = projected
         // refinement: connected sub-communities inside P
-        val r = leidenRefine(cur, p, gamma, minMovesFrac = minMovesFrac)
-          .localCheckpoint(true)
+        val r = st.cut(leidenRefine(cur, p, gamma, minMovesFrac = minMovesFrac))
         val supR = r.select(col("id").as("supernode"), col("community").as("cr"))
-        mapping = mapping.join(supR, mapping("community") === supR("supernode"))
-          .select(col("id"), col("cr").as("community"))
-          .localCheckpoint(true)
+        val nextMapping = st.cut(mapping.join(supR, mapping("community") === supR("supernode"))
+          .select(col("id"), col("cr").as("community")))
         // next level: supernode = R-community, seeded with its P-community
-        constraint = Some(r.join(p.withColumnRenamed("community", "cp"), "id")
+        val nextConstraint = st.cut(r.join(p.withColumnRenamed("community", "cp"), "id")
           .select(col("community").as("id"), col("cp").as("community"))
-          .distinct()
-          .localCheckpoint(true))
-        cur = coarsen(cur, r)
-        cur = cur.copy(edges = cur.edges.localCheckpoint(true))
+          .distinct())
+        val coarse = coarsen(cur, r)
+        val edges = st.cut(coarse.edges)
+        st.retire(Seq(mapping, p) ++ constraint ++ curReads: _*)
+        mapping = nextMapping
+        constraint = Some(nextConstraint)
+        cur = coarse.copy(edges = edges)
+        curReads = Seq(edges, r) // the coarse vertices read r
         level += 1
       }
     }
@@ -567,47 +546,10 @@ object Community {
     * a seed (reference `scd/` family — GCE/LFM-style local expansion,
     * `scd/GCE.hpp`): repeatedly absorb the boundary node that minimizes
     * the expanded set's conductance, stop when no candidate improves it
-    * or `maxSize` is reached. Per step: one join + aggregate over the
-    * boundary and a 1-row argmin to the driver. Returns `(id)` members. */
-  def expandSeed(g: PropertyGraph, seed: Long, maxSize: Int = 30): DataFrame = {
-    val spark = g.edges.sparkSession
-    import spark.implicits._
-    val adj = sym(g).filter(col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val degs = adj.groupBy(col("src").as("id")).agg(sum("weight").as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val degOf = degs.filter(col("id") === seed).head(1)
-    if (degOf.isEmpty) { adj.unpersist(false); degs.unpersist(false); return Seq(seed).toDF("id") }
-    var members = Seq(seed)
-    var vol = degOf(0).getDouble(1)
-    var cut = vol
-    var grow = true
-    while (grow && members.size < maxSize) {
-      val sDf = members.toDF("id")
-      // boundary candidates with their weight into S
-      val wIn = adj.join(sDf.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .join(sDf.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-        .groupBy(col("src").as("id")).agg(sum("weight").as("wIn"))
-        .join(degs, "id")
-        .withColumn("newCut", lit(cut) + col("d") - lit(2.0) * col("wIn"))
-        .withColumn("newVol", lit(vol) + col("d"))
-        .withColumn("score", col("newCut") / col("newVol"))
-      val best = wIn.orderBy(col("score").asc, col("id").asc).limit(1).collect()
-      if (best.isEmpty) grow = false
-      else {
-        val row = best(0)
-        val (id, score) = (row.getLong(0), row.getAs[Double]("score"))
-        if (score >= cut / vol - 1e-12) grow = false
-        else {
-          members = members :+ id
-          cut = row.getAs[Double]("newCut")
-          vol = row.getAs[Double]("newVol")
-        }
-      }
-    }
-    adj.unpersist(false); degs.unpersist(false)
-    members.toDF("id")
-  }
+    * or `maxSize` is reached. [[Scd.expandSeedSet]] from the one seed.
+    * Returns `(id)` members. */
+  def expandSeed(g: PropertyGraph, seed: Long, maxSize: Int = 30): DataFrame =
+    Scd.expandSeedSet(g, Seq(seed), maxSize)
 
   /** Compact community ids to 0..k-1 (reference `Partition::compact`,
     * `structures/Partition.hpp:190`). */
@@ -620,22 +562,12 @@ object Community {
       .select(col("id"), col("compactId").as("community"))
   }
 
-  /** Partition-similarity: contingency-based Rand index and Jaccard
-    * measure between two labelings (reference
-    * `AdjustedRandMeasure.hpp:12`, `JaccardMeasure.hpp:18`). */
+  /** Rand index between two labelings: the share of node pairs both
+    * put together or both put apart (reference
+    * `community/AdjustedRandMeasure.hpp:12`). */
   def randIndex(p1: DataFrame, p2: DataFrame): Double = {
-    val joined = p1.select(col("id"), col("community").as("c1"))
-      .join(p2.select(col("id"), col("community").as("c2")), "id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = joined.count().toDouble
-    def s2(df: DataFrame, cols: Seq[String]) =
-      df.groupBy(cols.map(col): _*).agg(count(lit(1)).as("c"))
-        .agg(sum(col("c") * (col("c") - 1) / 2)).head.getDouble(0)
-    val both = s2(joined, Seq("c1", "c2"))
-    val a1 = s2(joined, Seq("c1"))
-    val a2 = s2(joined, Seq("c2"))
+    val (n, both, a1, a2) = pairCounts(p1, p2)
     val total = n * (n - 1) / 2
-    joined.unpersist(false)
     (total + 2 * both - a1 - a2) / total
   }
 
@@ -643,19 +575,15 @@ object Community {
     * (n, Σ_cells C(n_ij,2), Σ_rows C(a_i,2), Σ_cols C(b_j,2)) — the
     * shared skeleton of Rand / AdjustedRand / Jaccard (reference
     * `community/AdjustedRandMeasure.hpp:12`, `JaccardMeasure.hpp:18`). */
-  private def pairCounts(p1: DataFrame, p2: DataFrame): (Double, Double, Double, Double) = {
-    val joined = p1.select(col("id"), col("community").as("c1"))
-      .join(p2.select(col("id"), col("community").as("c2")), "id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private def pairCounts(p1: DataFrame,
+      p2: DataFrame): (Double, Double, Double, Double) = Fixpoint.scope { st =>
+    val joined = st.persist(p1.select(col("id"), col("community").as("c1"))
+      .join(p2.select(col("id"), col("community").as("c2")), "id"))
     val n = joined.count().toDouble
     def s2(cols: Seq[String]) =
       joined.groupBy(cols.map(col): _*).agg(count(lit(1)).as("c"))
         .agg(sum(col("c") * (col("c") - 1) / 2)).head.getDouble(0)
-    val both = s2(Seq("c1", "c2"))
-    val a1 = s2(Seq("c1"))
-    val a2 = s2(Seq("c2"))
-    joined.unpersist(false)
-    (n, both, a1, a2)
+    (n, s2(Seq("c1", "c2")), s2(Seq("c1")), s2(Seq("c2")))
   }
 
   /** Adjusted Rand index (chance-corrected; reference
@@ -682,21 +610,17 @@ object Community {
     * — the reference returns the distance 1 − NMI). Entropies in nats;
     * identical partitions → 1, independent → 0. Cell/marginal counts are
     * one aggregation each — no driver-side contingency materialization. */
-  def nmi(p1: DataFrame, p2: DataFrame): Double = {
-    val joined = p1.select(col("id"), col("community").as("c1"))
-      .join(p2.select(col("id"), col("community").as("c2")), "id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def nmi(p1: DataFrame, p2: DataFrame): Double = Fixpoint.scope { st =>
+    val joined = st.persist(p1.select(col("id"), col("community").as("c1"))
+      .join(p2.select(col("id"), col("community").as("c2")), "id"))
     val n = joined.count().toDouble
-    val cells = joined.groupBy("c1", "c2").agg(count(lit(1)).as("nij"))
-    val out = nmiOfCells(cells, n)
-    joined.unpersist(false)
-    out
+    nmiOfCells(joined.groupBy("c1", "c2").agg(count(lit(1)).as("nij")), n)
   }
 
   /** NMI from an explicit contingency table `(c1, c2, nij)` with total
     * mass `n` — shared by [[nmi]] and the incremental [[dynamicNmi]]. */
-  private def nmiOfCells(cellsIn: DataFrame, n: Double): Double = {
-    val cells = cellsIn.persist(StorageLevel.MEMORY_AND_DISK)
+  private def nmiOfCells(cellsIn: DataFrame, n: Double): Double = Fixpoint.scope { st =>
+    val cells = st.persist(cellsIn)
     val rows = cells.groupBy("c1").agg(sum("nij").as("ai"))
     val cols = cells.groupBy("c2").agg(sum("nij").as("bj"))
     val mi = cells.join(rows, "c1").join(cols, "c2")
@@ -708,7 +632,6 @@ object Community {
         .agg(-sum(col("t"))).head.getDouble(0)
     val h1 = entropy(rows, "ai")
     val h2 = entropy(cols, "bj")
-    cells.unpersist(false)
     if (h1 + h2 == 0.0) 1.0 else 2.0 * mi / (h1 + h2)
   }
 
@@ -729,17 +652,15 @@ object Community {
     * upstream — e.g. `max_by(community, seq)` per (step, id) — before
     * calling; the reference DynamicNMIDistance applies events
     * sequentially and would keep the last. */
-  def dynamicNmi(base: DataFrame, initial: DataFrame, changes: DataFrame): DataFrame = {
+  def dynamicNmi(base: DataFrame, initial: DataFrame,
+      changes: DataFrame): DataFrame = Fixpoint.scope { st =>
     val spark = base.sparkSession
     import spark.implicits._
-    val ref = base.select(col("id"), col("community").as("c1"))
-      .localCheckpoint(true)
+    val ref = st.cut(base.select(col("id"), col("community").as("c1")))
     val n = ref.count().toDouble
-    var labels = initial.select(col("id"), col("community").as("c2"))
-      .localCheckpoint(true)
-    var cells = ref.join(labels, "id")
-      .groupBy("c1", "c2").agg(count(lit(1)).as("nij"))
-      .localCheckpoint(true)
+    var labels = st.cut(initial.select(col("id"), col("community").as("c2")))
+    var cells = st.cut(ref.join(labels, "id")
+      .groupBy("c1", "c2").agg(count(lit(1)).as("nij")))
     val maxStep = changes.agg(coalesce(max("step"), lit(0L))).head.getLong(0)
     val out = scala.collection.mutable.ArrayBuffer[(Long, Double)](
       (0L, nmiOfCells(cells, n)))
@@ -751,20 +672,20 @@ object Community {
       // (max community wins) rather than trusting input uniqueness
       val delta = changes.filter(col("step") === t)
         .groupBy("id").agg(max("community").as("cNew"))
-      val moved = delta.join(labels, "id").join(ref, "id")
-        .select(col("id"), col("c1"), col("c2").as("cOld"), col("cNew"))
-        .localCheckpoint(true)
+      val moved = st.cut(delta.join(labels, "id").join(ref, "id")
+        .select(col("id"), col("c1"), col("c2").as("cOld"), col("cNew")))
       val dec = moved.groupBy(col("c1"), col("cOld").as("c2"))
         .agg((-count(lit(1))).as("nij"))
       val inc = moved.groupBy(col("c1"), col("cNew").as("c2"))
         .agg(count(lit(1)).as("nij"))
-      cells = cells.unionAll(dec).unionAll(inc)
+      val nextCells = st.cut(cells.unionAll(dec).unionAll(inc)
         .groupBy("c1", "c2").agg(sum("nij").as("nij"))
-        .filter(col("nij") > 0)
-        .localCheckpoint(true)
-      labels = labels.join(moved.select("id", "cNew"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("cNew"), col("c2")).as("c2"))
-        .localCheckpoint(true)
+        .filter(col("nij") > 0))
+      val nextLabels = st.cut(labels.join(moved.select("id", "cNew"), Seq("id"), "left")
+        .select(col("id"), coalesce(col("cNew"), col("c2")).as("c2")))
+      st.retire(cells, labels, moved)
+      cells = nextCells
+      labels = nextLabels
       out += ((t, nmiOfCells(cells, n)))
     }
     out.toSeq.toDF("step", "nmi")
@@ -808,18 +729,16 @@ object Community {
     * form from (vol, cut) aggregates. Same alternating-half-moves
     * oscillation guard and fused moved-count action as
     * [[louvainLocalMove]]. Returns `(id, community)`. */
-  def louvainMapEquation(g: PropertyGraph, maxRounds: Int = 24): DataFrame = {
-    val adj = sym(g).filter(col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def louvainMapEquation(g: PropertyGraph,
+      maxRounds: Int = 24): DataFrame = Fixpoint.scope { st =>
+    val adj = st.persist(sym(g).filter(col("src") =!= col("dst")))
     val m2 = adj.agg(sum("weight")).head.getDouble(0)
-    val ku = adj.groupBy(col("src").as("id")).agg(sum("weight").as("ku"))
-      .localCheckpoint(true)
+    val ku = st.cut(adj.groupBy(col("src").as("id")).agg(sum("weight").as("ku")))
     def plogp(c: org.apache.spark.sql.Column) =
       when(c > 0.0, c * log2(c)).otherwise(lit(0.0))
 
-    var cur = g.vertices.select(col("id"), col("id").as("community"))
-      .withColumn("moved", lit(1L))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var cur = st.persist(g.vertices.select(col("id"), col("id").as("community"))
+      .withColumn("moved", lit(1L)))
     var quietRounds = 0
     var round = 0
     while (round < maxRounds && quietRounds < 2) {
@@ -831,10 +750,9 @@ object Community {
         .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("community", "cd"), "dst")
         .filter(col("cs") =!= col("cd"))
         .groupBy(col("cs").as("community")).agg(sum("weight").as("cut"))
-      val stats = vol.join(cut, Seq("community"), "left")
+      val stats = st.cut(vol.join(cut, Seq("community"), "left")
         .select(col("community"), col("vol"),
-          coalesce(col("cut"), lit(0.0)).as("cut"))
-        .localCheckpoint(true)
+          coalesce(col("cut"), lit(0.0)).as("cut")))
       val bigQ = stats.agg(sum("cut")).head.getDouble(0) / m2
 
       val w2c = adj
@@ -880,18 +798,14 @@ object Community {
         .select(col("id"),
           coalesce(col("newCommunity"), col("community")).as("community"),
           col("newCommunity").isNotNull.cast("long").as("moved"))
-      val next =
-        if ((round + 1) % 2 == 0) stepped.localCheckpoint(false)
-        else stepped.persist(StorageLevel.MEMORY_AND_DISK)
+      val next = if ((round + 1) % 2 == 0) st.cutLazy(stepped) else st.persist(stepped)
       val moved = next.agg(sum("moved")).head.getLong(0)
       quietRounds = if (moved == 0) quietRounds + 1 else 0
-      cur.unpersist(blocking = false)
+      st.retire(cur, stats)
       cur = next
       round += 1
     }
-    val res = cur.select("id", "community")
-    adj.unpersist(false)
-    res
+    cur.select("id", "community")
   }
 
   /** LFM fitness-based seed expansion (reference `scd/LFMLocal.hpp:27`,
@@ -948,8 +862,17 @@ object Community {
         .select(col("id"), col("dw").as("wIn"), col("d"), lit(false).as("member"))
         .unionAll(degs.filter(col("id") === seed)
           .select(col("id"), lit(0.0).as("wIn"), col("d"), lit(true).as("member"))))
+      // Every step raises the fitness strictly, so no member set repeats
+      // and the loop ends, but nothing else bounds it: a run of
+      // add/delete pairs can go on for as long as the fitness climbs.
+      // Each member normally enters once and leaves at most once, so
+      // 4·maxSize steps leave twice that slack; past them the current
+      // members are returned.
+      val maxSteps = 4 * maxSize
+      var steps = 0
       var done = false
-      while (!done) {
+      while (!done && steps < maxSteps) {
+        steps += 1
         val addTop = state.filter(!col("member"))
           .withColumn("nkin", lit(kin) + lit(2.0) * col("wIn"))
           .withColumn("nkout", lit(kout) + col("d") - lit(2.0) * col("wIn"))
@@ -998,11 +921,10 @@ object Community {
     * h(a)+h(d) ≥ h(b)+h(c) (the LFK constraint), else H(X_k).
     * NMI = 1 − ½·(H(X|Y)/Σ... normalized per side). All overlap counts
     * are one pairwise groupBy — no cover materialized on the driver. */
-  def overlappingNmi(c1: DataFrame, c2: DataFrame, nNodes: Long): Double = {
-    val x = c1.select(col("id"), col("community").as("cx")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val y = c2.select(col("id"), col("community").as("cy")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def overlappingNmi(c1: DataFrame, c2: DataFrame,
+      nNodes: Long): Double = Fixpoint.scope { st =>
+    val x = st.persist(c1.select(col("id"), col("community").as("cx")).distinct())
+    val y = st.persist(c2.select(col("id"), col("community").as("cy")).distinct())
     val n = nNodes.toDouble
     def h(p: org.apache.spark.sql.Column) =
       when(p > 0.0, -p * log2(p)).otherwise(lit(0.0))
@@ -1010,7 +932,7 @@ object Community {
     val sy = y.groupBy("cy").agg(count(lit(1)).as("ny"))
     val ov = x.join(y, "id").groupBy("cx", "cy").agg(count(lit(1)).as("a11"))
     // per (X_k, Y_l): a = |both|, b = |X only|, c = |Y only|, d = |neither|
-    val cells = ov.join(sx, "cx").join(sy, "cy")
+    val cells = st.cut(ov.join(sx, "cx").join(sy, "cy")
       .withColumn("a", col("a11").cast("double") / n)
       .withColumn("b", (col("nx") - col("a11")).cast("double") / n)
       .withColumn("c", (col("ny") - col("a11")).cast("double") / n)
@@ -1025,8 +947,7 @@ object Community {
       .withColumn("hyx",
         h(col("a")) + h(col("b")) + h(col("c")) + h(col("d"))
           - h((col("nx")).cast("double") / n)
-          - h((lit(n) - col("nx")) / n))
-      .localCheckpoint(true)
+          - h((lit(n) - col("nx")) / n)))
     def hOf(sz: org.apache.spark.sql.Column) =
       h(sz.cast("double") / n) + h((lit(n) - sz) / n)
     // side X: per X_k take min admissible H(X_k|Y_l), else H(X_k);
@@ -1045,7 +966,6 @@ object Community {
     }
     val hx = side("cx", sx, "nx", "hxy")
     val hy = side("cy", sy, "ny", "hyx")
-    x.unpersist(false); y.unpersist(false)
     1.0 - 0.5 * (hx + hy)
   }
 

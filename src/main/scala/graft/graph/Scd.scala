@@ -2,11 +2,11 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Selective-community-detection tail: the remaining expanders of the
-  * reference `scd/` module beyond GCE/LFM/TCE/CliqueDetect (shipped in
-  * [[Community]]).
+  * reference `scd/` module beyond LFM/TCE/CliqueDetect (shipped in
+  * [[Community]]), and the one greedy-conductance (GCE) body,
+  * [[expandSeedSet]], behind [[Community.expandSeed]].
   *
   *   - LocalTightnessExpansion — structural-similarity tightness greedy
   *     (reference `scd/LocalTightnessExpansion.hpp:21`)
@@ -62,10 +62,10 @@ object Scd {
     * Ties broken by node id (the reference's heap order is unspecified).
     * Returns `(id)` members. */
   def localTightnessExpansion(g: PropertyGraph, seed: Long, alpha: Double = 1.0,
-      maxSize: Int = 50): DataFrame = {
+      maxSize: Int = 50): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val simEdges = edgeSimilarity(g).persist(StorageLevel.MEMORY_AND_DISK)
+    val simEdges = st.persist(edgeSimilarity(g))
     simEdges.count()
     var members = Seq(seed)
     var dead = Set.empty[Long]
@@ -111,7 +111,6 @@ object Scd {
       }
       grow = accepted
     }
-    simEdges.unpersist(false)
     members.toDF("id")
   }
 
@@ -122,12 +121,13 @@ object Scd {
     * matches it with strictly fewer external triangles (the reference's
     * tie rule); ties broken by node id. One pass over the triangle list
     * per accepted node. Returns `(id)` members. */
-  def localT(g: PropertyGraph, seed: Long, maxSize: Int = 50): DataFrame = {
+  def localT(g: PropertyGraph, seed: Long,
+      maxSize: Int = 50): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val tri = Triangles.triangles(g).persist(StorageLevel.MEMORY_AND_DISK)
+    val tri = st.persist(Triangles.triangles(g))
     tri.count()
-    val adj = sym(g).select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = st.persist(sym(g).select("src", "dst"))
     var members = Seq(seed)
     var grow = true
     while (grow && members.size < maxSize) {
@@ -135,9 +135,10 @@ object Scd {
       val inS = (c: String) => col(c).isin(members: _*)
       val tagged = tri.withColumn("nIn",
         inS("a").cast("int") + inS("b").cast("int") + inS("c").cast("int"))
+      // count, not sum: a triangle-free graph gives 0, not null
       val globals = tagged.agg(
-        sum(when(col("nIn") === 3, 1L).otherwise(0L)).as("intT"),
-        sum(when(col("nIn") === 1, 1L).otherwise(0L)).as("extT")).head()
+        count(when(col("nIn") === 3, 1L)).as("intT"),
+        count(when(col("nIn") === 1, 1L)).as("extT")).head()
       val intT = globals.getLong(0)
       val extT = globals.getLong(1)
       val curScore = math.max(0L, intT * (intT - extT))
@@ -172,7 +173,6 @@ object Scd {
         case _ => grow = false
       }
     }
-    tri.unpersist(false); adj.unpersist(false)
     members.toDF("id")
   }
 
@@ -182,10 +182,11 @@ object Scd {
     * Lex = cut/#boundary-nodes); phase 2 sweeps members in id order and
     * drops any whose removal would not worsen both Lin and Lex. Returns
     * the empty set when the seed itself is pruned, like the reference. */
-  def twoPhaseL(g: PropertyGraph, seed: Long, maxSize: Int = 50): DataFrame = {
+  def twoPhaseL(g: PropertyGraph, seed: Long,
+      maxSize: Int = 50): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val e = sym(g).select("src", "dst", "weight").persist(StorageLevel.MEMORY_AND_DISK)
+    val e = st.persist(sym(g).select("src", "dst", "weight"))
     e.count()
     var members = Seq(seed)
     var grow = true
@@ -194,8 +195,9 @@ object Scd {
       val inS = (c: String) => col(c).isin(members: _*)
       // member-side totals: internal weight, cut, boundary size, and each
       // member's external weight (for the boundary-change of a candidate)
-      val memberEdges = e.join(mDf.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .withColumn("inDst", inS("dst")).persist(StorageLevel.MEMORY_AND_DISK)
+      val memberEdges = st.persist(
+        e.join(mDf.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+          .withColumn("inDst", inS("dst")))
       val tot = memberEdges.agg(
         (sum(when(col("inDst"), col("weight")).otherwise(lit(0.0))) / 2).as("intW"),
         sum(when(!col("inDst"), col("weight")).otherwise(lit(0.0))).as("cut")).head()
@@ -223,7 +225,7 @@ object Scd {
         .join(mDf.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
         .select(col("src").as("v"), col("dst").as("u"), col("weight"))
         .collect().groupBy(_.getLong(0))
-      memberEdges.unpersist(false)
+      st.retire(memberEdges)
       val scored = cand.iterator.map { r =>
         val (v, intDeg, extDeg) = (r.getLong(0), r.getDouble(1), r.getDouble(2))
         val closedMembers = candAdjToMembers.getOrElse(v, Array.empty)
@@ -269,10 +271,9 @@ object Scd {
         val (nLin, nLex) = (lin(), lex())
         if (curLin > nLin && curLex < nLex) kept += v // removal worsens both: keep
       }
-      e.unpersist(false)
       if (!kept(seed)) spark.emptyDataFrame.select(lit(0L).as("id")).limit(0)
       else kept.toSeq.sorted.toDF("id")
-    } else { e.unpersist(false); members.toDF("id") }
+    } else members.toDF("id")
   }
 
   /** CombinedSCD (reference `scd/CombinedSCD.hpp`): seed with one
@@ -286,47 +287,51 @@ object Scd {
     expandSeedSet(g, if (seedSet.isEmpty) Seq(seed) else seedSet, maxSize)
   }
 
-  /** Multi-seed variant of [[Community.expandSeed]] (greedy conductance,
-    * reference `scd/GCE.hpp`): identical step rule, seeded with a set. */
-  def expandSeedSet(g: PropertyGraph, seeds: Seq[Long], maxSize: Int = 50): DataFrame = {
+  /** Greedy conductance expansion (reference `scd/GCE.hpp`) from a
+    * seed set; [[Community.expandSeed]] is the one-seed call. Repeatedly
+    * absorb the boundary node that minimizes the expanded set's
+    * conductance, stop when no candidate improves it or `maxSize` is
+    * reached. Per step: one join + aggregate over the boundary and a
+    * 1-row argmin to the driver. Returns `(id)` members. */
+  def expandSeedSet(g: PropertyGraph, seeds: Seq[Long],
+      maxSize: Int = 50): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val adj = sym(g).persist(StorageLevel.MEMORY_AND_DISK)
-    val degs = adj.groupBy(col("src").as("id")).agg(sum("weight").as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = st.persist(sym(g))
+    val degs = st.persist(adj.groupBy(col("src").as("id")).agg(sum("weight").as("d")))
     var members = seeds.distinct
     val mDf0 = members.toDF("id")
     val init = adj.join(mDf0.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .withColumn("inDst", col("dst").isin(members: _*))
       .agg(sum("weight").as("vol"),
         sum(when(!col("inDst"), col("weight")).otherwise(lit(0.0))).as("cut")).head()
-    if (init.isNullAt(0)) { adj.unpersist(false); degs.unpersist(false); return members.toDF("id") }
-    var vol = init.getDouble(0)
-    var cut = init.getDouble(1)
-    var grow = true
-    while (grow && members.size < maxSize) {
-      val sDf = members.toDF("id")
-      val wIn = adj.join(sDf.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .join(sDf.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-        .groupBy(col("src").as("id")).agg(sum("weight").as("wIn"))
-        .join(degs, "id")
-        .withColumn("newCut", lit(cut) + col("d") - lit(2.0) * col("wIn"))
-        .withColumn("newVol", lit(vol) + col("d"))
-        .withColumn("score", col("newCut") / col("newVol"))
-      val best = wIn.orderBy(col("score").asc, col("id").asc).limit(1).collect()
-      if (best.isEmpty) grow = false
-      else {
-        val row = best(0)
-        val (id, score) = (row.getLong(0), row.getAs[Double]("score"))
-        if (vol > 0 && score >= cut / vol - 1e-12) grow = false
+    if (!init.isNullAt(0)) { // a seed set without edges stays as it is
+      var vol = init.getDouble(0)
+      var cut = init.getDouble(1)
+      var grow = true
+      while (grow && members.size < maxSize) {
+        val sDf = members.toDF("id")
+        val wIn = adj.join(sDf.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+          .join(sDf.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
+          .groupBy(col("src").as("id")).agg(sum("weight").as("wIn"))
+          .join(degs, "id")
+          .withColumn("newCut", lit(cut) + col("d") - lit(2.0) * col("wIn"))
+          .withColumn("newVol", lit(vol) + col("d"))
+          .withColumn("score", col("newCut") / col("newVol"))
+        val best = wIn.orderBy(col("score").asc, col("id").asc).limit(1).collect()
+        if (best.isEmpty) grow = false
         else {
-          members = members :+ id
-          cut = row.getAs[Double]("newCut")
-          vol = row.getAs[Double]("newVol")
+          val row = best(0)
+          val (id, score) = (row.getLong(0), row.getAs[Double]("score"))
+          if (vol > 0 && score >= cut / vol - 1e-12) grow = false
+          else {
+            members = members :+ id
+            cut = row.getAs[Double]("newCut")
+            vol = row.getAs[Double]("newVol")
+          }
         }
       }
     }
-    adj.unpersist(false); degs.unpersist(false)
     members.toDF("id")
   }
 

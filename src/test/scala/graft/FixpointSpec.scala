@@ -15,15 +15,19 @@ import graft.graph._
   * holds a retired state while an uncomputed lazy cut still reads it,
   * frees everything on exit or on a throw except what the result reads,
   * and so every kernel built on it leaves no per-round blocks behind.
-  * Counting is by DELTA against the session-wide persistent-RDD set (the
-  * shared session memoizes fixture graphs across suites — never unpersist
-  * those). The CC and PageRank cases also pin their per-round job and
+  * Counting is by the ids added to the session-wide persistent-RDD set
+  * since a snapshot (the shared session memoizes fixture graphs across
+  * suites — never unpersist those — and loses unreferenced RDDs of
+  * earlier suites at any GC). The CC and PageRank cases also pin their per-round job and
   * broadcast budgets, counted with a listener.
   */
 class FixpointSpec extends SparkSpec {
 
-  private def persistedRddCount(): Int =
-    spark.sparkContext.getPersistentRDDs.size
+  /** Ids of the RDDs persisted now. The context holds them weakly, so an
+    * RDD nothing references leaves the set at any GC: specs count the ids
+    * added since a snapshot, never the set's size. */
+  private def persistedIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private def added(since: Set[Int]): Int = (persistedIds() -- since).size
 
   /** Spark jobs started, and stages submitted that build a broadcast,
     * while `body` runs. */
@@ -57,18 +61,18 @@ class FixpointSpec extends SparkSpec {
 
   test("free releases a localCheckpoint'd state; Dataset.unpersist does not") {
     import spark.implicits._
-    val base = persistedRddCount()
+    val base = persistedIds()
     val ck = (1 to 1000).toDF("x").localCheckpoint(true)
-    assert(persistedRddCount() == base + 1)
+    assert(added(base) == 1)
     ck.unpersist(true) // the trap: no-op for checkpoint blocks
-    assert(persistedRddCount() == base + 1)
+    assert(added(base) == 1)
     Fixpoint.free(ck)
-    assert(persistedRddCount() == base)
+    assert(added(base) == 0)
   }
 
   test("loopFusedFingerprint retains only the final state") {
     import spark.implicits._
-    val base = persistedRddCount()
+    val base = persistedIds()
     val init = (1 to 64).map(_.toLong).toDF("x")
     var rounds = 0
     val out = Fixpoint.loopFusedFingerprint(init, maxIter = 20) { (df, _) =>
@@ -79,44 +83,44 @@ class FixpointSpec extends SparkSpec {
     assert(out.agg(sum("x")).head.getLong(0) == 0L)
     // every intermediate round's checkpoint was freed; only the final
     // state may remain beyond what was already persisted
-    assert(persistedRddCount() <= base + 1)
+    assert(added(base) <= 1)
     Fixpoint.free(out)
-    assert(persistedRddCount() <= base)
+    assert(added(base) == 0)
   }
 
   test("scope holds a retired state until the lazy cut reading it is computed") {
     import spark.implicits._
-    val base = persistedRddCount()
+    val base = persistedIds()
     Fixpoint.scope { st =>
       val a = st.cut((1 to 100).toDF("x"))
       val b = st.cutLazy(a.select((col("x") + 1).as("x")))
       st.retire(a)
-      assert(persistedRddCount() == base + 2) // b still reads a
+      assert(added(base) == 2) // b still reads a
       Fixpoint.materialize(b)
       st.retire(b)
-      assert(persistedRddCount() == base)
+      assert(added(base) == 0)
     }
   }
 
   test("scope frees what it stored on a throw; an inner result goes to the outer scope") {
     import spark.implicits._
-    val base = persistedRddCount()
+    val base = persistedIds()
     val entries = org.apache.spark.sql.CacheEntries(spark)
     intercept[IllegalStateException](Fixpoint.scope { st =>
       val c = st.cut((1 to 100).toDF("x"))
       Fixpoint.materialize(st.persist(c.select((col("x") * 2).as("y"))))
-      assert(persistedRddCount() == base + 2)
+      assert(added(base) == 2)
       throw new IllegalStateException("boom")
     })
-    assert(persistedRddCount() == base)
+    assert(added(base) == 0)
     assert(org.apache.spark.sql.CacheEntries(spark) == entries)
     val rows = Fixpoint.scope { _ =>
       val inner = Fixpoint.scope(st => st.cut((1 to 10).toDF("x")).select("x"))
-      assert(persistedRddCount() == base + 1) // kept: the result reads it
+      assert(added(base) == 1) // kept: the result reads it
       inner.count()
     }
     assert(rows == 10)
-    assert(persistedRddCount() == base) // freed when the outer call ended
+    assert(added(base) == 0) // freed when the outer call ended
   }
 
   test("readGml of a missing path throws and leaves no cache entry behind") {
@@ -134,16 +138,17 @@ class FixpointSpec extends SparkSpec {
     val g = path(300)
     assert(g.edges.count() == 299) // fixture materialized before the baselines
     val src = spark.range(1).select(lit(0L).as("source"))
-    def retained[T](name: String)(call: => T): T = {
-      val base = persistedRddCount()
+    // a frame may keep the storage it reads (`keeps`), a scalar nothing
+    def retained[T](name: String, keeps: Int = 1)(call: => T): T = {
+      val base = persistedIds()
       val out = call
-      out match {
-        case df: org.apache.spark.sql.Dataset[_] => df.count()
-        case pg: PropertyGraph => pg.edges.count()
-        case _ =>
+      val allowed = out match {
+        case df: org.apache.spark.sql.Dataset[_] => df.count(); keeps
+        case pg: PropertyGraph => pg.edges.count(); keeps
+        case _ => 0
       }
-      assert(persistedRddCount() <= base + 1,
-        s"$name retained ${persistedRddCount() - base} RDDs")
+      assert(added(base) <= allowed,
+        s"$name retained ${added(base)} RDDs")
       out
     }
     // round caps keep each call near 2 s
@@ -158,12 +163,32 @@ class FixpointSpec extends SparkSpec {
     val m = retained("suitor")(Matching.suitor(g, maxIter = 3))
     retained("bSuitor")(Matching.bSuitor(g, b = 2, maxIter = 3))
     retained("bSuitorInsert")(Matching.bSuitorInsert(g, m, b = 1, maxIter = 3))
+    // maxIter 5 puts plp's first lazy cut (round 4) before its last round;
+    // minMovesFrac 0.5 ends each local move after two rounds
+    retained("plp")(Community.plp(g, maxIter = 5))
+    retained("plpDegreeOrdered")(Community.plpDegreeOrdered(g, maxIter = 5))
+    retained("louvainMapEquation")(Community.louvainMapEquation(g, maxRounds = 2))
+    retained("louvain")(Community.louvain(g, maxLevels = 1, minMovesFrac = 0.5))
+    // the result joins the best partition with its connected components
+    retained("leiden", keeps = 2)(Community.leiden(g, maxLevels = 1, minMovesFrac = 0.5))
+    // its suitor matching ran 18 s on the 300-node path, 3 s on 12 nodes
+    val short = path(12)
+    assert(short.edges.count() == 11)
+    retained("agglomerative")(Community.agglomerative(short, maxLevels = 1))
+    retained("expandSeed")(Community.expandSeed(g, seed = 150L, maxSize = 3))
+    retained("twoPhaseL")(Scd.twoPhaseL(g, seed = 150L, maxSize = 3))
+    retained("localT")(Scd.localT(g, seed = 150L, maxSize = 3))
+    val p8 = g.vertices.select(col("id"), pmod(col("id"), lit(8L)).as("community"))
+    val p12 = g.vertices.select(col("id"), pmod(col("id"), lit(12L)).as("community"))
+    retained("nmi")(Community.nmi(p8, p12))
+    retained("randIndex")(Community.randIndex(p8, p12))
+    retained("overlappingNmi")(Community.overlappingNmi(p8, p12, 300L))
   }
 
   test("bfs and coreDecomposition leave no per-round blocks behind") {
     val g = graft.io.GraphReaders.readMetis(spark, "/root/reference/input/karate.graph")
     assert(g.numberOfNodes == 34) // materialize the fixture first
-    val base = persistedRddCount()
+    val base = persistedIds()
     val src = spark.range(1).select(lit(1L).as("source"))
     val d = ShortestPaths.bfs(g, src)
     assert(d.count() == 34)
@@ -171,10 +196,10 @@ class FixpointSpec extends SparkSpec {
     assert(cores.agg(max("core")).head.getInt(0) == 4) // karate's degeneracy
     // retained: the two returned results (bfs dist + kcore out), nothing
     // per-round
-    val leaked = persistedRddCount() - base
+    val leaked = added(base)
     assert(leaked <= 2, s"leaked round states: $leaked")
     Fixpoint.free(d); Fixpoint.free(cores)
-    assert(persistedRddCount() <= base)
+    assert(added(base) == 0)
   }
 
   test("ConnectedComponents.run: at most 4 jobs per star round") {
@@ -210,11 +235,11 @@ class FixpointSpec extends SparkSpec {
       PageRank.run(_, tol = 0.0, maxIter = 6),
       PageRank.run(_, maxIter = 6)
     ).foreach { kernel =>
-      val base = persistedRddCount()
+      val base = persistedIds()
       val out = kernel(g)
       assert(out.count() == 300)
-      assert(persistedRddCount() <= base + 1,
-        s"retained ${persistedRddCount() - base} RDDs")
+      assert(added(base) <= 1,
+        s"retained ${added(base)} RDDs")
     }
   }
 }

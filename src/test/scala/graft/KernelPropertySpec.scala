@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.graph._
 
-/** Connected components and PageRank against tiny sequential references
-  * (union-find, power iteration) on a generated graph, at several
-  * shuffle widths. The graph carries the cases the distributed kernels
+/** Connected components, PageRank, label propagation and greedy
+  * conductance expansion against tiny sequential references (union-find,
+  * power iteration, synchronous relabelling, greedy absorption) on a
+  * generated graph, at several shuffle widths. The graph carries the cases the distributed kernels
   * special-case or could get wrong: self-loops, duplicate and
   * anti-parallel edges, isolated vertices (only in the vertex table), a
   * 100-node path (many star rounds), a random component, and scattered
@@ -75,6 +76,64 @@ class KernelPropertySpec extends SparkSpec {
     rank
   }
 
+  /** Synchronous label propagation over adjacency rows `(src, dst)`:
+    * each node takes the label most frequent among the rows into it,
+    * ties → the lowest `rank` of a sender carrying it, then the smallest
+    * label; a node with no rows into it keeps its own. Stops after a
+    * round that changes no label, or after `maxIter` rounds. */
+  private def labelPropagation(adj: Seq[(Long, Long)], nodes: Seq[Long],
+      rank: Long => Long, maxIter: Int): Map[Long, Long] = {
+    val into = adj.groupBy(_._2)
+    var label = nodes.map(v => v -> v).toMap
+    var round = 0
+    var changed = true
+    while (round < maxIter && changed) {
+      val next = label.map { case (v, own) =>
+        val senders = into.getOrElse(v, Nil).map(_._1).filter(label.contains)
+        v -> (if (senders.isEmpty) own
+          else senders.groupBy(label).toSeq.minBy { case (l, us) =>
+            (-us.size, us.map(rank).min, l) }._1)
+      }
+      changed = next != label
+      label = next
+      round += 1
+    }
+    label
+  }
+
+  /** Greedy conductance expansion over adjacency rows `(src, dst,
+    * weight)` without self-loops: from `seeds`, absorb the boundary node
+    * whose absorption gives the lowest cut/volume (ties → smallest id)
+    * while that beats the current set's, up to `maxSize` members. A seed
+    * set without edges is returned as it is. */
+  private def greedyConductance(adj: Seq[(Long, Long, Double)], seeds: Seq[Long],
+      maxSize: Int): Seq[Long] = {
+    import Ordering.Double.TotalOrdering
+    val deg = adj.groupBy(_._1).map { case (u, rows) => u -> rows.map(_._3).sum }
+    var members = seeds.distinct
+    val out = adj.filter(r => members.contains(r._1))
+    if (out.nonEmpty) {
+      var vol = out.map(_._3).sum
+      var cut = out.filterNot(r => members.contains(r._2)).map(_._3).sum
+      var grow = true
+      while (grow && members.size < maxSize) {
+        val cands = adj.filter(r => members.contains(r._2) && !members.contains(r._1))
+          .groupBy(_._1).toSeq.map { case (v, rows) =>
+            val newCut = cut + deg(v) - 2.0 * rows.map(_._3).sum
+            val newVol = vol + deg(v)
+            (newCut / newVol, v, newCut, newVol)
+          }
+        if (cands.isEmpty) grow = false
+        else {
+          val (score, v, newCut, newVol) = cands.minBy(c => (c._1, c._2))
+          if (vol > 0 && score >= cut / vol - 1e-12) grow = false
+          else { members :+= v; cut = newCut; vol = newVol }
+        }
+      }
+    }
+    members
+  }
+
   /** Run `body` with every shuffle of the session `p` partitions wide
     * (AQE plans ENSURE_REQUIREMENTS exchanges at its own initial width
     * otherwise, so that is pinned too). */
@@ -124,6 +183,39 @@ class KernelPropertySpec extends SparkSpec {
       assert(got.keySet == want.keySet, s"directed = $directed, vertices = $withVertices")
       val worst = want.map { case (v, r) => math.abs(got(v) - r) }.max
       assert(worst <= 1e-9, s"directed = $directed, vertices = $withVertices: max |Δ| = $worst")
+    }
+  }
+
+  for (p <- partitionCounts) test(s"plp and plpDegreeOrdered match sequential label propagation (partitions = $p)") {
+    val g = propertyGraph(graph, directed = false, withVertices = true)
+    val adj = g.adjacency.collect().map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"))).toSeq
+    val degree = g.degrees.collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Number]("degree").longValue).toMap
+    // round 4 is plp's first lazy cut, so 5 rounds run across one
+    val maxIter = 5
+    val (plp, byDegree) = withPartitions(p) {
+      (collectLongs(Community.plp(g, maxIter = maxIter)),
+        collectLongs(Community.plpDegreeOrdered(g, maxIter = maxIter)))
+    }
+    assert(plp == labelPropagation(adj, graph.vertices, _ => 0L, maxIter))
+    assert(byDegree == labelPropagation(adj, graph.vertices, degree, maxIter))
+  }
+
+  for (p <- partitionCounts) test(s"expandSeed and expandSeedSet match greedy conductance (partitions = $p)") {
+    val g = propertyGraph(graph, directed = false, withVertices = true)
+    val adj = g.adjacency.collect()
+      .map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"), r.getAs[Double]("weight")))
+      .filter(r => r._1 != r._2).toSeq
+    val ids = graph.vertices // 100 path nodes (the 8th has a self-loop), 40 random, 5 isolated
+    def members(df: DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq
+    val maxSize = 4
+    withPartitions(p) {
+      for (seed <- Seq(ids(7), ids(144)))
+        assert(members(Community.expandSeed(g, seed, maxSize)) ==
+          greedyConductance(adj, Seq(seed), maxSize), s"seed $seed")
+      val seeds = Seq(ids(50), ids(110), ids(50))
+      assert(members(Scd.expandSeedSet(g, seeds, maxSize)) ==
+        greedyConductance(adj, seeds, maxSize))
     }
   }
 }
