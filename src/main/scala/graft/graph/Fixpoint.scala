@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -70,10 +71,17 @@ object Fixpoint {
     *     persist before its first scan) still reads it — the caller
     *     retires a state as soon as it moves on, the scope holds the
     *     blocks until the next round's action has consumed them;
+    *   - a retired cut is also held while a re-run of an unretired
+    *     persist's plan would read it: a later plan may miss a cache and
+    *     re-run the plan behind it (with AQE off, a self-join over a
+    *     state persisted after a lazy cut swaps only one side for the
+    *     cache), and a freed persist re-runs its plan too. A cut never
+    *     re-runs its plan, so it holds nothing once computed;
     *   - on exit, normal or by a throw, everything registered is freed,
     *     except the storage the returned value's plan still reads (a
-    *     `cur.select(…)`, a single leg). That storage passes to the
-    *     enclosing scope, if any, so it is freed when that call ends.
+    *     `cur.select(…)`, a single leg) and the cuts a re-run of that
+    *     would read. That storage passes to the enclosing scope, if
+    *     any, so it is freed when that call ends.
     * A registered state counts as computed once its own blocks are all
     * stored, or once a computed state has read it. */
   final class Scope private[Fixpoint] () {
@@ -91,7 +99,7 @@ object Fixpoint {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
       withCache(p).collectFirst { case im: InMemoryRelation =>
         register(new Entry(p, im.cacheBuilder, reads,
-          () => im.cacheBuilder.isCachedColumnBuffersLoaded))
+          () => im.cacheBuilder.isCachedColumnBuffersLoaded, cached = true))
       }
       p
     }
@@ -107,11 +115,16 @@ object Fixpoint {
       val rdd = c.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
       // the cut ran df's own plan, so its cache substitution is at hand
       register(new Entry(c, rdd, storageIn(df.queryExecution.withCachedData),
-        () => rdd.isCheckpointed))
+        () => rdd.isCheckpointed, cached = false))
       c
     }
 
-    private def register(e: Entry): Unit = { entries :+= e; sweep() }
+    private def register(e: Entry): Unit = {
+      e.reach = e.reads ++ entries.filter(q => q.cached && e.reads.exists(_ eq q.key))
+        .flatMap(_.reach)
+      entries :+= e
+      sweep()
+    }
 
     /** A state reads only states registered before it, so one pass
       * from the newest settles whether each is computed. */
@@ -123,8 +136,10 @@ object Fixpoint {
     private def sweep(): Unit = {
       settle()
       val pending = entries.filterNot(_.computed)
-      val (dead, live) = entries.partition(e =>
-        e.retired && !pending.exists(_.reads.exists(_ eq e.key)))
+      val rerun = entries.filter(e => e.cached && !e.retired).flatMap(_.reach)
+      val (dead, live) = entries.partition(e => e.retired &&
+        !pending.exists(_.reads.exists(_ eq e.key)) &&
+        (e.cached || !rerun.exists(_ eq e.key)))
       entries = live
       dead.foreach(e => free(e.df))
     }
@@ -135,8 +150,11 @@ object Fixpoint {
       var keep = framesIn(result).flatMap(storageRead).toSeq
       var grown = true
       while (grown) {
-        val more = entries.filter(e => keep.exists(_ eq e.key) && !e.computed)
-          .flatMap(_.reads).filterNot(k => keep.exists(_ eq k))
+        val more = entries.filter(e => keep.exists(_ eq e.key)).flatMap(e =>
+            if (!e.computed) e.reads
+            else if (e.cached) e.reach.filter(_.isInstanceOf[RDD[_]])
+            else Nil)
+          .filterNot(k => keep.exists(_ eq k))
         grown = more.nonEmpty
         keep ++= more
       }
@@ -156,10 +174,13 @@ object Fixpoint {
     }
   }
 
-  /** One registered state: `key` is its storage (checkpointed RDD or
-    * cache builder), `reads` the storage its plan scans. */
+  /** One registered state: `key` is its storage (checkpointed RDD or,
+    * when `cached`, cache builder), `reads` the storage its plan scans,
+    * `reach` that plus what a re-run of each cached state it reads
+    * would scan. */
   private final class Entry(val df: DataFrame, val key: AnyRef,
-      val reads: Seq[AnyRef], val stored: () => Boolean) {
+      val reads: Seq[AnyRef], val stored: () => Boolean, val cached: Boolean) {
+    var reach = Seq.empty[AnyRef]
     var retired = false
     var computed = false
   }

@@ -300,14 +300,13 @@ object Scd {
     val adj = st.persist(sym(g))
     val degs = st.persist(adj.groupBy(col("src").as("id")).agg(sum("weight").as("d")))
     var members = seeds.distinct
-    val mDf0 = members.toDF("id")
-    val init = adj.join(mDf0.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-      .withColumn("inDst", col("dst").isin(members: _*))
-      .agg(sum("weight").as("vol"),
-        sum(when(!col("inDst"), col("weight")).otherwise(lit(0.0))).as("cut")).head()
-    if (!init.isNullAt(0)) { // a seed set without edges stays as it is
-      var vol = init.getDouble(0)
-      var cut = init.getDouble(1)
+    // vol = the seeds' degrees (their aggregation is the steps' too),
+    // cut = vol − the weight among the seeds
+    val seedDegs = degs.filter(col("id").isin(members: _*)).select("d").collect()
+    if (seedDegs.nonEmpty) { // a seed set without edges stays as it is
+      var vol = seedDegs.map(_.getDouble(0)).sum
+      var cut = vol - adj.filter(col("src").isin(members: _*) && col("dst").isin(members: _*))
+        .select("weight").collect().map(_.getDouble(0)).sum
       var grow = true
       while (grow && members.size < maxSize) {
         val sDf = members.toDF("id")

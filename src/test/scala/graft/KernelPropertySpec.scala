@@ -186,19 +186,24 @@ class KernelPropertySpec extends SparkSpec {
     }
   }
 
-  for (p <- partitionCounts) test(s"plp and plpDegreeOrdered match sequential label propagation (partitions = $p)") {
-    val g = propertyGraph(graph, directed = false, withVertices = true)
-    val adj = g.adjacency.collect().map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"))).toSeq
-    val degree = g.degrees.collect()
+  private lazy val undirected = propertyGraph(graph, directed = false, withVertices = true)
+  private lazy val adjacency =
+    undirected.adjacency.collect().map(r => (r.getAs[Long]("src"), r.getAs[Long]("dst"))).toSeq
+  // round 4 is plp's first lazy cut, so 5 rounds run across one
+  private val plpRounds = 5
+
+  for (p <- partitionCounts) test(s"plp matches sequential label propagation (partitions = $p)") {
+    val plp = withPartitions(p)(collectLongs(Community.plp(undirected, maxIter = plpRounds)))
+    assert(plp == labelPropagation(adjacency, graph.vertices, _ => 0L, plpRounds))
+  }
+
+  // the same loop as plp, so one width checks the degree tie-break
+  test("plpDegreeOrdered matches sequential label propagation by sender degree") {
+    val degree = undirected.degrees.collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Number]("degree").longValue).toMap
-    // round 4 is plp's first lazy cut, so 5 rounds run across one
-    val maxIter = 5
-    val (plp, byDegree) = withPartitions(p) {
-      (collectLongs(Community.plp(g, maxIter = maxIter)),
-        collectLongs(Community.plpDegreeOrdered(g, maxIter = maxIter)))
-    }
-    assert(plp == labelPropagation(adj, graph.vertices, _ => 0L, maxIter))
-    assert(byDegree == labelPropagation(adj, graph.vertices, degree, maxIter))
+    val byDegree = withPartitions(partitionCounts.last)(
+      collectLongs(Community.plpDegreeOrdered(undirected, maxIter = plpRounds)))
+    assert(byDegree == labelPropagation(adjacency, graph.vertices, degree, plpRounds))
   }
 
   for (p <- partitionCounts) test(s"expandSeed and expandSeedSet match greedy conductance (partitions = $p)") {
