@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,10 +36,15 @@ object ConnectedComponents {
   }
 
   /** Alternating large-star / small-star. State is a symmetric pair set;
-    * at fixpoint it is a star forest rooted at each component's min id. */
+    * at fixpoint it is a star forest rooted at each component's min id.
+    * The size switch ([[Fixpoint.loopOrFinishLocally]]) hands the first
+    * state small enough for the driver to [[unionFind]]: a small graph
+    * runs no round, a large one only its shrunken tail there. */
   def run(g: PropertyGraph, maxIter: Int = 50): DataFrame = {
+    // self-loops stay in the initial state, so a driver finish of it sees
+    // every endpoint; the rounds drop them (both stars filter u = v)
     val base = g.edges.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull)
 
     // duplicates are harmless to the min-aggregations, so the symmetric
     // view skips its distinct and only each round's final output dedups
@@ -74,17 +79,6 @@ object ConnectedComponents {
       moved.unionAll(self).filter(col("u") =!= col("v")).distinct()
     }
 
-    // lineage cut every round: each round references its input several
-    // times (sym, both stars), so the plan grows exponentially without
-    // truncation. Fused loop: the one-job (count, xor) edge-set
-    // fingerprint IS the materializing action.
-    val stars = Fixpoint.loopFusedFingerprint(base, maxIter) {
-      (e, i) =>
-        val round = smallStar(largeStar(e))
-        if (i > 0) Fixpoint.dumpLoopPlan("cc_star_round", round)
-        round
-    } { e => Fixpoint.hashFingerprint(e, "u", "v") }
-
     // star forest: every non-root points at its root. Roots and isolated
     // vertices are covered by seeding EVERY vertex with itself as a
     // candidate label — min() then picks the root for members (the root
@@ -100,9 +94,47 @@ object ConnectedComponents {
         .unionAll(g.edges.select(col("dst").as("id")))
         .select(col("id"), col("id").as("component"))
     }
-    stars.select(col("u").as("id"), col("v").as("component"))
-      .unionAll(selfSeed)
-      .groupBy("id").agg(min("component").as("component"))
+    def label(stars: DataFrame): DataFrame =
+      stars.select(col("u").as("id"), col("v").as("component"))
+        .unionAll(selfSeed)
+        .groupBy("id").agg(min("component").as("component"))
+
+    // lineage cut every round: each round references its input several
+    // times (sym, both stars), so the plan grows exponentially without
+    // truncation. Fused loop: the one-job (count, xor) edge-set
+    // fingerprint IS the materializing action, and its count sizes the
+    // state for the switch.
+    Fixpoint.loopOrFinishLocally(base, maxIter) { (e, i) =>
+      val round = smallStar(largeStar(e))
+      if (i > 0) Fixpoint.dumpLoopPlan("cc_star_round", round)
+      round
+    }(label, { (pairs, rounds) =>
+      val comps = unionFind(pairs)
+      // the initial state holds every edge: without a vertex table its
+      // endpoints are all the vertices, and the driver labels them all
+      val spark = g.edges.sparkSession
+      if (rounds == 0 && g.verticesOpt.isEmpty) Fixpoint.localRelation(spark, label(base).schema, comps)
+      else label(Fixpoint.localRelation(spark, base.schema, comps))
+    })
+  }
+
+  /** Union-find (reference `UnionFind.hpp:26`) over collected `(u, v)`
+    * pairs: a `(node, component)` row per endpoint, the component being
+    * the smallest id of its set, so roots label themselves. */
+  private def unionFind(pairs: Array[Row]): Seq[Row] = {
+    val g = LocalGraph(pairs.map(_.getLong(0)), pairs.map(_.getLong(1)))
+    val parent = Array.range(0, g.n)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (u <- 0 until g.n; k <- g.rows(u)) {
+      val (a, b) = (find(u), find(g.targets(k)))
+      // index order is id order: the smaller root stays the root
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    g.ids.indices.map(i => Row(g.ids(i), g.ids(find(i))))
   }
 
   /** Component sizes `(component, size)`. */

@@ -1,12 +1,14 @@
 package graft.graph
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Iterative fixpoint driver — the engine's real "execution engine"
@@ -245,6 +247,32 @@ object Fixpoint {
         (acc, h) => (acc._1 + 1, acc._2 ^ h),
         (a, b) => (a._1 + b._1, a._2 ^ b._2))
 
+  /** Sum of `df`'s one double column with one job over its final stage,
+    * folded per partition like [[hashFingerprint]]; `df.agg(sum(…))` is
+    * two jobs under AQE. */
+  def sumOf(df: DataFrame): Double =
+    df.queryExecution.toRdd.map(_.getDouble(0)).fold(0.0)(_ + _)
+
+  /** The session conf of the size switch: a state that comes to fewer
+    * bytes than this (rows × its schema's default row size) finishes on
+    * the driver ([[LocalGraph]]). `0` keeps every state distributed, a
+    * huge value finishes every sized state locally. */
+  val LocalFinishBytes = "spark.graft.localFinishBytes"
+  val DefaultLocalFinishBytes: Long = 1L << 20
+
+  /** The size switch: `rows` rows of `df`'s schema come to under the
+    * session's [[LocalFinishBytes]]. `rows` is a count the caller's
+    * distributed path already took, so sizing costs no job. */
+  def fitsDriver(df: DataFrame, rows: Long): Boolean =
+    rows * df.schema.defaultSize < df.sparkSession.conf.getOption(LocalFinishBytes)
+      .fold(DefaultLocalFinishBytes)(_.toLong)
+
+  /** Driver-built `rows` as a local relation of `schema`. One partition:
+    * the rows are on the driver, and a consumer's aggregate then needs no
+    * exchange. */
+  def localRelation(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+
   /** Run `step` until `stop(prev, next, i)` is true or `maxIter` reached.
     * Returns the final state. The initial state is persisted and
     * materialized; every later one is an eager checkpoint, stored before
@@ -271,13 +299,14 @@ object Fixpoint {
     cur
   }
 
-  /** The state is lineage-cut lazily and the fingerprint action doubles
-    * as the materializing action, so a round costs no separate count
-    * job: one job per shuffle stage of the step plus the fingerprint's
-    * own. That is one job when the fingerprint folds partitions
-    * ([[hashFingerprint]], [[materialize]]); a global `agg` fingerprint
-    * is two under AQE. `fingerprint` may return any equality-comparable
-    * value (a Long, a tuple…); the loop stops when it repeats.
+  /** Every state, the initial one included, is lineage-cut lazily and
+    * the fingerprint action doubles as its materializing action, so a
+    * round costs no separate count job: one job per shuffle stage of the
+    * step plus the fingerprint's own. That is one job when the
+    * fingerprint folds partitions ([[hashFingerprint]], [[materialize]]);
+    * a global `agg` fingerprint is two under AQE. `fingerprint` may
+    * return any equality-comparable value (a Long, a tuple…); the loop
+    * stops when it repeats.
     *
     * `span` > 1 chains that many lazy steps between fingerprints — one
     * job per span instead of per round. Only safe when `step` references
@@ -287,26 +316,52 @@ object Fixpoint {
   def loopFusedFingerprint(init: DataFrame, maxIter: Int, span: Int = 1)(
       step: (DataFrame, Int) => DataFrame)(
       fingerprint: DataFrame => Any): DataFrame = scope { st =>
+    fused(st, init, maxIter, span, step, fingerprint, (_: Any) => false)._1
+  }
+
+  /** [[loopFusedFingerprint]] (span 1) with the size switch. The
+    * fingerprint is [[hashFingerprint]] over all columns, and its count
+    * half sizes each state: the first state, the initial one included,
+    * that [[fitsDriver]] while rounds remain is collected, and
+    * `local(rows, rounds)` finishes on the driver in place of those
+    * rounds (the driver finish runs to the fixpoint; `maxIter` caps the
+    * distributed rounds). A loop that reaches its fixpoint or `maxIter`
+    * first ends in `distributed(state)`. */
+  def loopOrFinishLocally(init: DataFrame, maxIter: Int)(
+      step: (DataFrame, Int) => DataFrame)(
+      distributed: DataFrame => DataFrame,
+      local: (Array[Row], Int) => DataFrame): DataFrame = scope { st =>
+    val cols = init.columns.toSeq
+    val (state, rounds, small) = fused[(Long, Long)](st, init, maxIter, 1, step,
+      hashFingerprint(_, cols: _*), f => fitsDriver(init, f._1))
+    if (small) local(state.collect(), rounds) else distributed(state)
+  }
+
+  /** The fused loop: returns the last state, the rounds run, and whether
+    * it stopped because `small` held with rounds left. */
+  private def fused[F](st: Scope, init: DataFrame, maxIter: Int, span: Int,
+      step: (DataFrame, Int) => DataFrame, fingerprint: DataFrame => F,
+      small: F => Boolean): (DataFrame, Int, Boolean) = {
     val debug = sys.env.contains("GRAFT_FIXPOINT_DEBUG")
-    var cur = st.cut(init)
-    var prev = Option.empty[Any]
+    var cur = st.cutLazy(init)
+    var f = fingerprint(cur)
+    var prev = Option.empty[F]
     var i = 0
-    var done = false
-    while (i < maxIter && !done) {
+    def settled = i >= maxIter || prev.contains(f)
+    while (!settled && !small(f)) {
       val t0 = System.nanoTime()
       val w = math.min(span, maxIter - i)
       var stepped = cur
       for (k <- 0 until w) stepped = step(stepped, i + k)
       val next = st.cutLazy(stepped)
-      val f = fingerprint(next) // materializes the checkpoint + aggregates
+      prev = Some(f)
+      f = fingerprint(next) // materializes the checkpoint + aggregates
       if (debug) System.err.println(
         f"[fixpoint-fused] iter $i span=$w ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      done = prev.contains(f)
-      prev = Some(f)
       st.retire(cur)
       cur = next
       i += w
     }
-    cur
+    (cur, i, !settled)
   }
 }

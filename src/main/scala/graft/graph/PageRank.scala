@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** PageRank by power iteration (reference:
   * `include/networkit/centrality/PageRank.hpp:38-90`,
@@ -28,9 +29,6 @@ object PageRank {
       maxIter: Int = 100, weighted: Boolean = false): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val debugT0 = System.nanoTime()
-    def dbg(what: String): Unit = if (sys.env.contains("GRAFT_FIXPOINT_DEBUG"))
-      System.err.println(f"[pagerank] $what ${(System.nanoTime() - debugT0) / 1e9}%.2fs")
 
     // an undirected graph whose vertex set is derived from its endpoints
     // has, structurally, no sinks and no in-uncovered nodes — skip the
@@ -40,7 +38,7 @@ object PageRank {
     // ONE exchange of the edge table: the out-degree is a window over
     // src on that same repartition (a groupBy(src) joined back has its
     // input pruned to `src` alone and plans a second exchange). The loop
-    // invariants (adj, nodes, sinks) are eager localCheckpoints, not
+    // invariants (adj, nodes, sinks) are localCheckpoints, not
     // persists: AQE does not reuse a broadcast across separate
     // TableCacheQueryStages, so a persisted adj is re-broadcast at every
     // step of a span, while the broadcasts of one checkpointed RDD in a
@@ -49,11 +47,81 @@ object PageRank {
     // inferring its own `isnotnull` filter over adj (the last step of a
     // span infers a different one and would broadcast adj again).
     val bySrc = Window.partitionBy("src")
-    val adj = st.cut(g.adjacency.filter(col("src").isNotNull && col("dst").isNotNull)
+    val adj = st.cutLazy(g.adjacency.filter(col("src").isNotNull && col("dst").isNotNull)
       .repartition(shufflePartitions, col("src"))
       .select(col("src"), col("dst"),
         (if (weighted) col("weight") / sum("weight").over(bySrc)
          else lit(1.0) / count(lit(1)).over(bySrc)).as("share")))
+
+    // the size switch: the count that materializes adj sizes the whole
+    // adjacency, and a small one is iterated on the driver
+    if (Fixpoint.fitsDriver(adj, Fixpoint.materialize(adj))) {
+      val nodes = if (structurallyCovered) None
+        else Some(g.vertices.select("id").collect().map(_.getLong(0)))
+      val (ranks, inCovered) = onDriver(adj.collect(), nodes, damping, tol, maxIter)
+      // the distributed result's schema: ids as the node table has them,
+      // or from adjacency rows (never null) once every node has an in-edge
+      val idNullable = nodes.isDefined && g.vertices.schema("id").nullable &&
+        (maxIter == 0 || !inCovered)
+      Fixpoint.localRelation(spark, StructType(Seq(StructField("id", LongType, idNullable),
+        StructField("rank", DoubleType, nullable = false))), ranks)
+    } else iterate(st, g, adj, structurallyCovered, damping, tol, maxIter)
+  }
+
+  /** [[iterate]] on the driver over the collected `(src, dst, share)`
+    * rows of adj and the node ids (`None`: the adjacency's sources): the
+    * same node set per step, sink mass (the isolated-sink recurrence
+    * included), spans and L1 stop. Returns the `(id, rank)` rows and
+    * whether every node has an in-edge. */
+  private def onDriver(adj: Array[Row], nodeIds: Option[Array[Long]], damping: Double,
+      tol: Double, maxIter: Int): (Seq[Row], Boolean) = {
+    val g = LocalGraph(adj.map(_.getLong(0)), adj.map(_.getLong(1)), adj.map(_.getDouble(2)),
+      nodeIds.getOrElse(Array.emptyLongArray))
+    val all = 0 until g.n
+    val isNode = nodeIds.fold(all.map(g.rows(_).nonEmpty).toArray) { ids =>
+      val b = new Array[Boolean](g.n); ids.foreach(v => b(g.index(v)) = true); b }
+    val n = nodeIds.fold(isNode.count(identity))(_.length).toDouble
+    val hasIn = new Array[Boolean](g.n)
+    g.targets.foreach(hasIn(_) = true)
+    val sinks = all.filter(v => isNode(v) && g.rows(v).isEmpty)
+    val sinksIsolated = !sinks.exists(hasIn)
+    val inCovered = all.forall(v => !isNode(v) || hasIn(v))
+    val span = if (sinksIsolated) 4 else 1
+    var present = isNode
+    var rank = Array.tabulate(g.n)(v => if (present(v)) 1.0 / n else 0.0)
+    var isoMass = sinks.size / n
+    var i = 0
+    var done = false
+    while (i < maxIter && !done) {
+      val w = math.min(span, maxIter - i)
+      val (start, startPresent) = (rank, present)
+      for (_ <- 0 until w) {
+        val sinkMass = if (sinksIsolated) isoMass else sinks.filter(present).map(rank).sum
+        val contrib = new Array[Double](g.n)
+        val got = new Array[Boolean](g.n)
+        for (u <- all if present(u); k <- g.rows(u)) {
+          contrib(g.targets(k)) += rank(u) * g.weights(k)
+          got(g.targets(k)) = true
+        }
+        present = if (inCovered) got else isNode
+        rank = Array.tabulate(g.n)(v =>
+          if (present(v)) (1.0 - damping) / n + damping * (contrib(v) + sinkMass / n) else 0.0)
+        isoMass = sinks.size * ((1.0 - damping) / n + damping * isoMass / n)
+      }
+      done = tol > 0 && all.filter(v => present(v) && startPresent(v))
+        .map(v => math.abs(rank(v) - start(v))).sum < tol
+      i += w
+    }
+    (all.filter(present).map(v => Row(g.ids(v), rank(v))), inCovered)
+  }
+
+  /** The power iteration of [[run]] over the cut adjacency `adj`. */
+  private def iterate(st: Fixpoint.Scope, g: PropertyGraph, adj: DataFrame,
+      structurallyCovered: Boolean, damping: Double, tol: Double,
+      maxIter: Int): DataFrame = {
+    val debugT0 = System.nanoTime()
+    def dbg(what: String): Unit = if (sys.env.contains("GRAFT_FIXPOINT_DEBUG"))
+      System.err.println(f"[pagerank] $what ${(System.nanoTime() - debugT0) / 1e9}%.2fs")
 
     val nodes = st.cut(
       if (structurallyCovered) adj.select(col("src").as("id")).distinct()
@@ -131,10 +199,11 @@ object PageRank {
       // localCheckpoint truncates the span's chained lineage each round
       if (i > 0) Fixpoint.dumpLoopPlan("pagerank_span", stepped)
       val next = st.cutLazy(stepped)
+      // the span's one action: the L1 diff (a per-partition fold over
+      // the join) or a count materializes the lazy cut
       if (tol > 0) {
-        val diff = next.select(col("id"), col("rank"))
-          .join(cur.select(col("id"), col("rank").as("prev")), "id")
-          .agg(sum(abs(col("rank") - col("prev")))).head.getDouble(0)
+        val diff = Fixpoint.sumOf(next.join(cur.select(col("id"), col("rank").as("prev")), "id")
+          .select(abs(col("rank") - col("prev"))))
         done = diff < tol
       } else Fixpoint.materialize(next)
       if (debug) System.err.println(

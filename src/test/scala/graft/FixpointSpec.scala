@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import graft.graph._
 
@@ -19,7 +16,9 @@ import graft.graph._
   * since a snapshot (the shared session memoizes fixture graphs across
   * suites — never unpersist those — and loses unreferenced RDDs of
   * earlier suites at any GC). The CC and PageRank cases also pin their per-round job and
-  * broadcast budgets, counted with a listener.
+  * broadcast budgets, counted with a listener: on the distributed path
+  * (size switch at 0) per round and span, and on the driver path (the
+  * default switch) per call.
   */
 class FixpointSpec extends SparkSpec {
 
@@ -28,27 +27,6 @@ class FixpointSpec extends SparkSpec {
     * added since a snapshot, never the set's size. */
   private def persistedIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
   private def added(since: Set[Int]): Int = (persistedIds() -- since).size
-
-  /** Spark jobs started, and stages submitted that build a broadcast,
-    * while `body` runs. */
-  private def events[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val broadcasts = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        if (s.stageInfo.rddInfos.exists(_.scope.exists(_.name == "BroadcastExchange")))
-          broadcasts.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, jobs.get, broadcasts.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Undirected path 0 – 1 – … – (n−1): star contraction needs several
     * rounds on it, and PageRank's adjacency is small enough to broadcast. */
@@ -195,11 +173,8 @@ class FixpointSpec extends SparkSpec {
     // it over the result, whose plan reaches back to the round-4 lazy cut
     val g = path(12)
     assert(g.edges.count() == 11)
-    val key = "spark.sql.adaptive.enabled"
-    val was = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try assert(!Community.modularity(g, Community.plp(g, maxIter = 6)).isNaN)
-    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    withConf("spark.sql.adaptive.enabled", "false")(
+      assert(!Community.modularity(g, Community.plp(g, maxIter = 6)).isNaN))
   }
 
   test("bfs and coreDecomposition leave no per-round blocks behind") {
@@ -219,7 +194,10 @@ class FixpointSpec extends SparkSpec {
     assert(added(base) == 0)
   }
 
-  test("ConnectedComponents.run: at most 4 jobs per star round") {
+  /** The distributed kernels: no state finishes on the driver. */
+  private def distributed[T](body: => T): T = withConf(Fixpoint.LocalFinishBytes, "0")(body)
+
+  test("ConnectedComponents.run: at most 4 jobs per star round") (distributed {
     val g = path(300)
     // the loop runs eagerly inside run(); the result's final aggregate is
     // lazy, so each call's jobs are its setup plus its rounds. Capping
@@ -232,9 +210,9 @@ class FixpointSpec extends SparkSpec {
     val perTwoRounds = jobs4 - jobs2
     assert(perTwoRounds > 0 && perTwoRounds <= 8,
       s"jobs: 2 rounds $jobs2, 4 rounds $jobs4")
-  }
+  })
 
-  test("PageRank.run: adjacency broadcast at most once per span") {
+  test("PageRank.run: adjacency broadcast at most once per span") (distributed {
     val g = path(300)
     // tol = 0 runs maxIter steps in spans of 4, so maxIter 8 adds one
     // span to maxIter 4; its steps re-read one broadcast of adj
@@ -242,9 +220,9 @@ class FixpointSpec extends SparkSpec {
     val (_, _, bc2) = events(PageRank.run(g, tol = 0.0, maxIter = 8))
     assert(bc2 - bc1 <= 1, s"broadcast stages: 1 span $bc1, 2 spans $bc2")
     assert(bc1 >= 1) // the adjacency is broadcast at all
-  }
+  })
 
-  test("CC and PageRank leave no registered RDD behind but their result") {
+  test("CC and PageRank leave no registered RDD behind but their result") (distributed {
     val g = path(300)
     assert(g.edges.count() == 299) // fixture materialized before the baseline
     Seq[PropertyGraph => org.apache.spark.sql.DataFrame](
@@ -257,6 +235,21 @@ class FixpointSpec extends SparkSpec {
       assert(out.count() == 300)
       assert(added(base) <= 1,
         s"retained ${added(base)} RDDs")
+    }
+  })
+
+  test("small CC and PageRank finish on the driver: at most 4 jobs, no RDD left") {
+    val g = path(300)
+    assert(g.edges.count() == 299) // fixture materialized before the baseline
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "cc" -> (() => ConnectedComponents.run(g)),
+      "pagerank" -> (() => PageRank.run(g, tol = 0.0, maxIter = 10))
+    ).foreach { case (name, kernel) =>
+      val base = persistedIds()
+      // the call and one action over its result, as a caller pays them
+      val (_, jobs, _) = events(Fixpoint.hashFingerprint(kernel(), "id"))
+      assert(jobs <= 4, s"$name ran $jobs jobs")
+      assert(added(base) == 0, s"$name retained ${added(base)} RDDs")
     }
   }
 }

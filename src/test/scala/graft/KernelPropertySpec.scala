@@ -57,21 +57,30 @@ class KernelPropertySpec extends SparkSpec {
 
   /** The engine's PageRank semantics, sequentially: rank flows along
     * adjacency rows (an undirected edge both ways, so a self-loop counts
-    * twice), sinks spread their rank uniformly. */
+    * twice), sinks spread their rank uniformly. With `tol > 0` it stops
+    * after the first span whose L1 change is under `tol`, a span being 4
+    * steps when no sink has an in-edge and 1 otherwise. */
   private def powerIteration(gr: Graph, directed: Boolean, withVertices: Boolean,
-      damping: Double, iters: Int): Map[Long, Double] = {
+      damping: Double, iters: Int, tol: Double = 0.0): Map[Long, Double] = {
     val adj = if (directed) gr.edges else gr.edges ++ gr.edges.map(_.swap)
     val nodes = ((if (withVertices) gr.vertices else Nil) ++ adj.map(_._1)).distinct
     val n = nodes.size.toDouble
     val out = adj.groupBy(_._1).map { case (u, rows) => u -> rows.size.toDouble }
     val sinks = nodes.filterNot(out.contains)
+    val span = if (sinks.exists(s => adj.exists(_._2 == s))) 1 else 4
     var rank = nodes.map(_ -> 1.0 / n).toMap
-    for (_ <- 0 until iters) {
+    var spanStart = rank
+    var done = false
+    for (i <- 0 until iters if !done) {
       val sinkMass = sinks.map(rank).sum
       val contrib = adj.groupBy(_._2).map { case (v, rows) =>
         v -> rows.map { case (u, _) => rank(u) / out(u) }.sum }
       rank = nodes.map(v => v ->
         ((1.0 - damping) / n + damping * (contrib.getOrElse(v, 0.0) + sinkMass / n))).toMap
+      if (tol > 0 && ((i + 1) % span == 0 || i + 1 == iters)) {
+        done = nodes.map(v => math.abs(rank(v) - spanStart(v))).sum < tol
+        spanStart = rank
+      }
     }
     rank
   }
@@ -149,6 +158,21 @@ class KernelPropertySpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` with the size switch at `bytes` (`None`: the default). */
+  private def withThreshold[T](bytes: Option[Long])(body: => T): T = bytes match {
+    case Some(b) => withConf(Fixpoint.LocalFinishBytes, b.toString)(body)
+    case None =>
+      val was = spark.conf.getOption(Fixpoint.LocalFinishBytes)
+      spark.conf.unset(Fixpoint.LocalFinishBytes)
+      try body finally was.foreach(spark.conf.set(Fixpoint.LocalFinishBytes, _))
+  }
+
+  /** Every width runs the distributed kernels (threshold 0); the widest
+    * also runs them at the default threshold and at `Long.MaxValue`,
+    * where this graph finishes on the driver. */
+  private def thresholds(p: Int): Seq[Option[Long]] =
+    if (p == partitionCounts.last) Seq(Some(0L), None, Some(Long.MaxValue)) else Seq(Some(0L))
+
   private def collectLongs(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -166,24 +190,58 @@ class KernelPropertySpec extends SparkSpec {
   for (p <- partitionCounts) test(s"ConnectedComponents.run matches union-find (partitions = $p)") {
     for (withVertices <- Seq(true, false)) {
       val g = propertyGraph(graph, directed = false, withVertices)
-      val got = withPartitions(p)(collectLongs(ConnectedComponents.run(g)))
-      assert(got == unionFind(graph, withVertices), s"withVertices = $withVertices")
+      val runs = thresholds(p).map(t => t -> withThreshold(t)(withPartitions(p)(ConnectedComponents.run(g))))
+      for ((t, out) <- runs) {
+        assert(collectLongs(out) == unionFind(graph, withVertices), s"withVertices = $withVertices, threshold $t")
+        assert(out.schema == runs.head._2.schema, s"threshold $t")
+      }
     }
+  }
+
+  test("ConnectedComponents.run finishes a shrunken tail on the driver after distributed rounds") {
+    val g = propertyGraph(graph, directed = false, withVertices = true)
+    // the initial state (every edge, 16 bytes a row) just misses the
+    // threshold, a later, contracted one fits
+    val between = Some(graph.edges.size * 16L)
+    val jobs = Seq(Some(0L), between, Some(Long.MaxValue)).map { t =>
+      val (out, n, _) = events(withThreshold(t)(ConnectedComponents.run(g)))
+      assert(collectLongs(out) == unionFind(graph, withVertices = true), s"threshold $t")
+      n
+    }
+    // a round (4 jobs) ran before the tail, and the tail saved rounds
+    assert(jobs(1) >= jobs(2) + 4 && jobs(1) < jobs(0), s"jobs at 0, between, max: $jobs")
   }
 
   for (p <- partitionCounts) test(s"PageRank.run(tol = 0) matches power iteration (partitions = $p)") {
     val iters = 12
     for ((directed, withVertices) <- Seq((false, false), (false, true), (true, true))) {
       val g = propertyGraph(graph, directed, withVertices)
-      val got = withPartitions(p) {
-        PageRank.run(g, damping = 0.85, tol = 0.0, maxIter = iters)
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      }
       val want = powerIteration(graph, directed, withVertices, 0.85, iters)
-      assert(got.keySet == want.keySet, s"directed = $directed, vertices = $withVertices")
-      val worst = want.map { case (v, r) => math.abs(got(v) - r) }.max
-      assert(worst <= 1e-9, s"directed = $directed, vertices = $withVertices: max |Δ| = $worst")
+      val runs = thresholds(p).map(t => t -> withThreshold(t)(withPartitions(p)(
+        PageRank.run(g, damping = 0.85, tol = 0.0, maxIter = iters))))
+      for ((t, out) <- runs) {
+        val what = s"directed = $directed, vertices = $withVertices, threshold $t"
+        assertRanks(out, want, what)
+        assert(out.schema == runs.head._2.schema, what)
+      }
     }
+  }
+
+  // the isolated vertices are sinks without in-edges: 4-step spans, and
+  // the stop is judged once per span
+  test("PageRank.run(tol = 1e-6) stops after the reference's span on both paths") {
+    val g = propertyGraph(graph, directed = false, withVertices = true)
+    val want = powerIteration(graph, directed = false, withVertices = true, 0.85, 100, tol = 1e-6)
+    for (t <- Seq(0L, Long.MaxValue)) withThreshold(Some(t)) {
+      assertRanks(PageRank.run(g, damping = 0.85, tol = 1e-6, maxIter = 100), want, s"threshold $t")
+    }
+  }
+
+  private def assertRanks(out: DataFrame, want: Map[Long, Double], what: String): Unit = {
+    val got = out.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(got.keySet == want.keySet, what)
+    val worst = want.map { case (v, r) => math.abs(got(v) - r) }.max
+    assert(worst <= 1e-9, s"$what: max |Δ| = $worst")
   }
 
   private lazy val undirected = propertyGraph(graph, directed = false, withVertices = true)
