@@ -39,7 +39,13 @@ object ConnectedComponents {
     * at fixpoint it is a star forest rooted at each component's min id.
     * The size switch ([[Fixpoint.loopOrFinishLocally]]) hands the first
     * state small enough for the driver to [[unionFind]]: a small graph
-    * runs no round, a large one only its shrunken tail there. */
+    * runs no round, a large one only its shrunken tail there.
+    *
+    * @param maxIter caps the distributed star rounds only. A state that
+    *                reaches the driver is finished to the fixpoint, so on
+    *                a graph small enough for the driver every `maxIter`
+    *                gives the complete components; a larger graph capped
+    *                before its fixpoint gives partial ones. */
   def run(g: PropertyGraph, maxIter: Int = 50): DataFrame = {
     // self-loops stay in the initial state, so a driver finish of it sees
     // every endpoint; the rounds drop them (both stars filter u = v)

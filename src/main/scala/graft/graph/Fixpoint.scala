@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
+import scala.util.DynamicVariable
 import scala.util.control.NonFatal
 
 /** Iterative fixpoint driver — the engine's real "execution engine"
@@ -253,19 +254,24 @@ object Fixpoint {
   def sumOf(df: DataFrame): Double =
     df.queryExecution.toRdd.map(_.getDouble(0)).fold(0.0)(_ + _)
 
-  /** The session conf of the size switch: a state that comes to fewer
-    * bytes than this (rows × its schema's default row size) finishes on
-    * the driver ([[LocalGraph]]). `0` keeps every state distributed, a
-    * huge value finishes every sized state locally. */
-  val LocalFinishBytes = "spark.graft.localFinishBytes"
+  /** The size switch's bound: a state that comes to fewer bytes than
+    * this (rows × its schema's default row size, see [[bytes]]) finishes
+    * on the driver ([[LocalGraph]]). 1 MiB holds the sf0.01 part graph's
+    * adjacency (about 165 KB) and not RMAT 13's (about 4.9 MB). */
   val DefaultLocalFinishBytes: Long = 1L << 20
 
-  /** The size switch: `rows` rows of `df`'s schema come to under the
-    * session's [[LocalFinishBytes]]. `rows` is a count the caller's
-    * distributed path already took, so sizing costs no job. */
-  def fitsDriver(df: DataFrame, rows: Long): Boolean =
-    rows * df.schema.defaultSize < df.sparkSession.conf.getOption(LocalFinishBytes)
-      .fold(DefaultLocalFinishBytes)(_.toLong)
+  /** Pins the bound for specs that drive one path: `0` keeps every
+    * state distributed, `Long.MaxValue` finishes every sized state on
+    * the driver. */
+  private[graft] val localFinishBytes = new DynamicVariable[Long](DefaultLocalFinishBytes)
+
+  /** The driver size of `rows` rows of `df`'s schema. */
+  def bytes(df: DataFrame, rows: Long): Long = rows * df.schema.defaultSize
+
+  /** The size switch: `bytes` of state come to under the bound. The rows
+    * behind them are a count the caller's distributed path already took,
+    * so sizing costs no job. */
+  def fitsDriver(bytes: Long): Boolean = bytes < localFinishBytes.value
 
   /** Driver-built `rows` as a local relation of `schema`. One partition:
     * the rows are on the driver, and a consumer's aggregate then needs no
@@ -333,7 +339,7 @@ object Fixpoint {
       local: (Array[Row], Int) => DataFrame): DataFrame = scope { st =>
     val cols = init.columns.toSeq
     val (state, rounds, small) = fused[(Long, Long)](st, init, maxIter, 1, step,
-      hashFingerprint(_, cols: _*), f => fitsDriver(init, f._1))
+      hashFingerprint(_, cols: _*), f => fitsDriver(bytes(init, f._1)))
     if (small) local(state.collect(), rounds) else distributed(state)
   }
 

@@ -53,28 +53,31 @@ object PageRank {
         (if (weighted) col("weight") / sum("weight").over(bySrc)
          else lit(1.0) / count(lit(1)).over(bySrc)).as("share")))
 
-    // the size switch: the count that materializes adj sizes the whole
-    // adjacency, and a small one is iterated on the driver
-    if (Fixpoint.fitsDriver(adj, Fixpoint.materialize(adj))) {
-      val nodes = if (structurallyCovered) None
-        else Some(g.vertices.select("id").collect().map(_.getLong(0)))
-      val (ranks, inCovered) = onDriver(adj.collect(), nodes, damping, tol, maxIter)
-      // the distributed result's schema: ids as the node table has them,
-      // or from adjacency rows (never null) once every node has an in-edge
-      val idNullable = nodes.isDefined && g.vertices.schema("id").nullable &&
-        (maxIter == 0 || !inCovered)
-      Fixpoint.localRelation(spark, StructType(Seq(StructField("id", LongType, idNullable),
+    // the node table, when it is not the adjacency's sources, is cut and
+    // counted here for either path
+    val vertexIds = if (structurallyCovered) None else {
+      val v = st.cut(g.vertices.select("id"))
+      Some(v -> Fixpoint.materialize(v))
+    }
+    // the size switch: the counts that materialize adj and the node table
+    // size what the driver would hold. A nullable id column may carry a
+    // null node, which only the distributed loop ranks.
+    val adjBytes = Fixpoint.bytes(adj, Fixpoint.materialize(adj))
+    val nodeBytes = vertexIds.fold(0L) { case (v, rows) => Fixpoint.bytes(v, rows) }
+    if (!vertexIds.exists(_._1.schema("id").nullable) && Fixpoint.fitsDriver(adjBytes + nodeBytes)) {
+      val ranks = onDriver(adj.collect(), vertexIds.map(_._1.collect().map(_.getLong(0))),
+        damping, tol, maxIter)
+      Fixpoint.localRelation(spark, StructType(Seq(StructField("id", LongType, nullable = false),
         StructField("rank", DoubleType, nullable = false))), ranks)
-    } else iterate(st, g, adj, structurallyCovered, damping, tol, maxIter)
+    } else iterate(st, g, adj, vertexIds, damping, tol, maxIter)
   }
 
   /** [[iterate]] on the driver over the collected `(src, dst, share)`
     * rows of adj and the node ids (`None`: the adjacency's sources): the
     * same node set per step, sink mass (the isolated-sink recurrence
-    * included), spans and L1 stop. Returns the `(id, rank)` rows and
-    * whether every node has an in-edge. */
+    * included), spans and L1 stop. Returns the `(id, rank)` rows. */
   private def onDriver(adj: Array[Row], nodeIds: Option[Array[Long]], damping: Double,
-      tol: Double, maxIter: Int): (Seq[Row], Boolean) = {
+      tol: Double, maxIter: Int): Seq[Row] = {
     val g = LocalGraph(adj.map(_.getLong(0)), adj.map(_.getLong(1)), adj.map(_.getDouble(2)),
       nodeIds.getOrElse(Array.emptyLongArray))
     val all = 0 until g.n
@@ -112,21 +115,24 @@ object PageRank {
         .map(v => math.abs(rank(v) - start(v))).sum < tol
       i += w
     }
-    (all.filter(present).map(v => Row(g.ids(v), rank(v))), inCovered)
+    all.filter(present).map(v => Row(g.ids(v), rank(v)))
   }
 
-  /** The power iteration of [[run]] over the cut adjacency `adj`. */
+  /** The power iteration of [[run]] over the cut adjacency `adj` and the
+    * cut node table with its row count (`None`: the adjacency's sources). */
   private def iterate(st: Fixpoint.Scope, g: PropertyGraph, adj: DataFrame,
-      structurallyCovered: Boolean, damping: Double, tol: Double,
+      vertexIds: Option[(DataFrame, Long)], damping: Double, tol: Double,
       maxIter: Int): DataFrame = {
     val debugT0 = System.nanoTime()
     def dbg(what: String): Unit = if (sys.env.contains("GRAFT_FIXPOINT_DEBUG"))
       System.err.println(f"[pagerank] $what ${(System.nanoTime() - debugT0) / 1e9}%.2fs")
 
-    val nodes = st.cut(
-      if (structurallyCovered) adj.select(col("src").as("id")).distinct()
-      else g.vertices.select("id"))
-    val n = Fixpoint.materialize(nodes).toDouble
+    val structurallyCovered = vertexIds.isEmpty
+    val (nodes, nodeRows) = vertexIds.getOrElse {
+      val v = st.cut(adj.select(col("src").as("id")).distinct())
+      v -> Fixpoint.materialize(v)
+    }
+    val n = nodeRows.toDouble
     dbg("adj+nodes materialized")
     val init = nodes.select(col("id"), lit(1.0 / n).as("rank"))
 

@@ -195,7 +195,7 @@ class FixpointSpec extends SparkSpec {
   }
 
   /** The distributed kernels: no state finishes on the driver. */
-  private def distributed[T](body: => T): T = withConf(Fixpoint.LocalFinishBytes, "0")(body)
+  private def distributed[T](body: => T): T = Fixpoint.localFinishBytes.withValue(0L)(body)
 
   test("ConnectedComponents.run: at most 4 jobs per star round") (distributed {
     val g = path(300)

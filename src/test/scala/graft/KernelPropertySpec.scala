@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.graph._
 
 /** Connected components, PageRank, label propagation and greedy
@@ -159,13 +161,8 @@ class KernelPropertySpec extends SparkSpec {
   }
 
   /** Runs `body` with the size switch at `bytes` (`None`: the default). */
-  private def withThreshold[T](bytes: Option[Long])(body: => T): T = bytes match {
-    case Some(b) => withConf(Fixpoint.LocalFinishBytes, b.toString)(body)
-    case None =>
-      val was = spark.conf.getOption(Fixpoint.LocalFinishBytes)
-      spark.conf.unset(Fixpoint.LocalFinishBytes)
-      try body finally was.foreach(spark.conf.set(Fixpoint.LocalFinishBytes, _))
-  }
+  private def withThreshold[T](bytes: Option[Long])(body: => T): T =
+    bytes.fold(body)(Fixpoint.localFinishBytes.withValue(_)(body))
 
   /** Every width runs the distributed kernels (threshold 0); the widest
     * also runs them at the default threshold and at `Long.MaxValue`,
@@ -235,6 +232,31 @@ class KernelPropertySpec extends SparkSpec {
     for (t <- Seq(0L, Long.MaxValue)) withThreshold(Some(t)) {
       assertRanks(PageRank.run(g, damping = 0.85, tol = 1e-6, maxIter = 100), want, s"threshold $t")
     }
+  }
+
+  /** `out` is a relation built on the driver, not a distributed state. */
+  private def builtOnDriver(out: DataFrame): Boolean =
+    out.queryExecution.logical.collectFirst { case _: LocalRelation => () }.nonEmpty
+
+  // an adjacency far under the switch, but a node table that alone comes
+  // to the default bound, and a nullable id column at any bound: neither
+  // is collected
+  test("PageRank.run stays distributed for a large node table or nullable ids") {
+    import spark.implicits._
+    val isolated = (0L until Fixpoint.DefaultLocalFinishBytes / 8).map(_ + 2000000L)
+    val big = graph.copy(vertices = graph.vertices ++ isolated)
+    val e = propertyGraph(graph, directed = false, withVertices = false).edges
+    val out = PageRank.run(PropertyGraph(e, directed = false, Some(big.vertices.toDF("id"))),
+      damping = 0.85, tol = 0.0, maxIter = 4)
+    assert(!builtOnDriver(out))
+    assertRanks(out, powerIteration(big, directed = false, withVertices = true, 0.85, 4), "large node table")
+
+    val nullable = spark.createDataFrame(spark.sparkContext.parallelize(graph.vertices.map(Row(_))),
+      StructType(Seq(StructField("id", LongType, nullable = true))))
+    val out2 = Fixpoint.localFinishBytes.withValue(Long.MaxValue)(PageRank.run(
+      PropertyGraph(e, directed = false, Some(nullable)), damping = 0.85, tol = 0.0, maxIter = 4))
+    assert(!builtOnDriver(out2))
+    assertRanks(out2, powerIteration(graph, directed = false, withVertices = true, 0.85, 4), "nullable ids")
   }
 
   private def assertRanks(out: DataFrame, want: Map[Long, Double], what: String): Unit = {
