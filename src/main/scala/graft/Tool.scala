@@ -236,9 +236,9 @@ object Tool {
     val tBfs = kernel(spark, "bfs")(ShortestPaths.bfs(g, bfsSource(spark)).count())
     val tDeg = kernel(spark, "degree")(g.degrees.count())
     val tCore = kernel(spark, "kcore")(GraphOps.coreDecomposition(g).count())
-    // exact triangle counting materializes the wedge set, ~m^1.5 shuffle
-    // rows (~10^10 on a scale-21 skewed RMAT): disk-infeasible on one box,
-    // so it is opt-in (arg "tri")
+    // exact triangle counting ships every oriented edge with both ends'
+    // out-lists, ~m^1.5 list elements (~10^10 on a scale-21 skewed
+    // RMAT): disk-infeasible on one box, so it is opt-in (arg "tri")
     val tTri = if (args.lift(2).contains("tri"))
       kernel(spark, "triangles")(Triangles.triangleCount(g).count()) else -1.0
     // blocked subspace iteration (Fiedler block, k = 4), a fixed 60 rounds:

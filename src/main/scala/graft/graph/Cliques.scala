@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * degeneracy-ordered Bron-Kerbosch; here the Spark-natural fixed-k
   * variant: orient every edge by (degree, id) and extend cliques one
   * ordered join per level, the same O(m·α)-style fan-out bound that
-  * makes the triangle join skew-safe at scale, `Triangles.scala:32`).
+  * bounds the triangle out-lists at scale, `Triangles`).
   */
 object Cliques {
 

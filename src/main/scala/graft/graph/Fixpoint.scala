@@ -254,6 +254,10 @@ object Fixpoint {
   def sumOf(df: DataFrame): Double =
     df.queryExecution.toRdd.map(_.getDouble(0)).fold(0.0)(_ + _)
 
+  /** [[sumOf]] for a long column; an overflow throws, as ANSI `sum` does. */
+  def sumOfLongs(df: DataFrame): Long =
+    df.queryExecution.toRdd.map(_.getLong(0)).fold(0L)(Math.addExact)
+
   /** The size switch's bound: a state that comes to fewer bytes than
     * this (rows × its schema's default row size, see [[bytes]]) finishes
     * on the driver ([[LocalGraph]]). 1 MiB holds the sf0.01 part graph's

@@ -197,8 +197,7 @@ object PageRank {
         val sinkMass =
           if (!hasSinks) 0.0
           else if (sinksIsolated) isoMass
-          else cur.join(sinks, Seq("id"), "left_semi")
-            .agg(coalesce(sum("rank"), lit(0.0))).head.getDouble(0)
+          else Fixpoint.sumOf(cur.join(sinks, Seq("id"), "left_semi").select("rank"))
         stepped = step(stepped, sinkMass)
         isoMass = nSinks * ((1.0 - damping) / n + damping * isoMass / n)
       }

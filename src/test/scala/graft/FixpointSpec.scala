@@ -158,6 +158,10 @@ class FixpointSpec extends SparkSpec {
     retained("expandSeed")(Community.expandSeed(g, seed = 150L, maxSize = 3))
     retained("twoPhaseL")(Scd.twoPhaseL(g, seed = 150L, maxSize = 3))
     retained("localT")(Scd.localT(g, seed = 150L, maxSize = 3))
+    // the triangle kernels store nothing
+    retained("triangleCount", keeps = 0)(Triangles.triangleCount(g))
+    retained("perNode", keeps = 0)(Triangles.perNode(g))
+    retained("localClusteringCoefficient", keeps = 0)(Triangles.localClusteringCoefficient(g))
     val p8 = g.vertices.select(col("id"), pmod(col("id"), lit(8L)).as("community"))
     val p12 = g.vertices.select(col("id"), pmod(col("id"), lit(12L)).as("community"))
     retained("nmi")(Community.nmi(p8, p12))

@@ -5,10 +5,11 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.graph._
 
-/** Connected components, PageRank, label propagation and greedy
-  * conductance expansion against tiny sequential references (union-find,
-  * power iteration, synchronous relabelling, greedy absorption) on a
-  * generated graph, at several shuffle widths. The graph carries the cases the distributed kernels
+/** Connected components, PageRank, label propagation, greedy
+  * conductance expansion and triangles against tiny sequential references
+  * (union-find, power iteration, synchronous relabelling, greedy
+  * absorption, adjacency sets) on a generated graph, at several shuffle
+  * widths. The graph carries the cases the distributed kernels
   * special-case or could get wrong: self-loops, duplicate and
   * anti-parallel edges, isolated vertices (only in the vertex table), a
   * 100-node path (many star rounds), a random component, and scattered
@@ -284,6 +285,79 @@ class KernelPropertySpec extends SparkSpec {
     val byDegree = withPartitions(partitionCounts.last)(
       collectLongs(Community.plpDegreeOrdered(undirected, maxIter = plpRounds)))
     assert(byDegree == labelPropagation(adjacency, graph.vertices, degree, plpRounds))
+  }
+
+  /** The triangles of the simple undirected graph under `edges` (loops
+    * and repeats in either direction dropped), each as its sorted
+    * nodes, and its neighbour sets. */
+  private def triangleSets(edges: Seq[(Long, Long)]): (Set[Seq[Long]], Map[Long, Set[Long]]) = {
+    val nbrs = edges.filter { case (u, v) => u != v }.flatMap(e => Seq(e, e.swap))
+      .groupBy(_._1).map { case (u, rows) => u -> rows.map(_._2).toSet }
+    val tris = for ((u, nu) <- nbrs.toSeq; v <- nu if u < v; w <- nu
+      if v < w && nbrs(v).contains(w)) yield Seq(u, v, w)
+    (tris.toSet, nbrs)
+  }
+
+  /** `triangleCount`, `triangles`, `perNode` and
+    * `localClusteringCoefficient` of `g` against [[triangleSets]]. */
+  private def assertTriangles(g: PropertyGraph, edges: Seq[(Long, Long)], what: String): Int = {
+    val (want, nbrs) = triangleSets(edges)
+    val count = Triangles.triangleCount(g)
+    assert(count.schema == StructType(Seq(StructField("triangles", LongType, nullable = false))), what)
+    assert(count.collect().map(_.getLong(0)).toSeq == Seq(want.size.toLong), what)
+    // each triangle once, its nodes in the (degree, id) orientation order
+    val rank = (v: Long) => (nbrs(v).size, v)
+    val listed = Triangles.triangles(g).collect().map(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(listed.map(_.sorted).toSet == want && listed.length == want.size, what)
+    assert(listed.forall { case Seq(a, b, c) =>
+      Ordering[(Int, Long)].lt(rank(a), rank(b)) && Ordering[(Int, Long)].lt(rank(b), rank(c)) }, what)
+    val perNode = want.toSeq.flatten.groupBy(identity).map { case (v, ts) => v -> ts.size.toLong }
+    assert(collectLongs(Triangles.perNode(g)) == perNode, what)
+    val lcc = Triangles.localClusteringCoefficient(g).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(lcc.keySet == nbrs.keySet, what)
+    for ((v, ns) <- nbrs) {
+      val d = ns.size
+      val ref = if (d < 2) 0.0 else 2.0 * perNode.getOrElse(v, 0L) / (d * (d - 1.0))
+      assert(math.abs(lcc(v) - ref) <= 1e-12, s"$what: lcc of $v ${lcc(v)}, reference $ref")
+    }
+    want.size
+  }
+
+  for (p <- partitionCounts) test(s"triangle kernels match adjacency sets (partitions = $p)") {
+    val g = propertyGraph(graph, directed = false, withVertices = true)
+    val found = withPartitions(p)(assertTriangles(g, graph.edges, s"partitions = $p"))
+    assert(found > 0)
+  }
+
+  test("triangle kernels on a directed multigraph with loops and an isolated vertex") {
+    import spark.implicits._
+    // triangle 1-2-3 given twice over and a loop, K4 on 4..7 with
+    // reversed edges, a pendant 3-8, the isolated vertex 9
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (3L, 3L), (3L, 8L),
+      (4L, 5L), (6L, 4L), (4L, 7L), (5L, 6L), (7L, 5L), (6L, 7L), (7L, 6L))
+    val e = edges.map { case (u, v) => (u, v, 1.0) }.toDF("src", "dst", "weight")
+    val g = PropertyGraph(e, directed = true, Some((1L to 9L).toDF("id")))
+    assert(assertTriangles(g, edges, "directed") == 5)
+  }
+
+  test("global and average clustering coefficients in closed form") {
+    import spark.implicits._
+    def simpleGraph(edges: (Long, Long)*) = PropertyGraph(
+      edges.map { case (u, v) => (u, v, 1.0) }.toDF("src", "dst", "weight"), directed = false)
+    def scalar(df: DataFrame) = df.collect().map(_.getDouble(0)).toSeq
+    val k4 = simpleGraph((1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4))
+    val diamond = simpleGraph((1, 2), (1, 3), (2, 3), (2, 4), (3, 4)) // K4 without 1-4
+    val star = simpleGraph((0, 1), (0, 2), (0, 3), (0, 4))
+    def near(got: Seq[Double], want: Double) = got.size == 1 && math.abs(got.head - want) <= 1e-12
+    assert(Triangles.triangleCount(k4).head.getLong(0) == 4)
+    assert(near(scalar(Triangles.globalClusteringCoefficient(k4)), 1.0))
+    assert(near(scalar(Triangles.averageClusteringCoefficient(k4)), 1.0))
+    assert(Triangles.triangleCount(diamond).head.getLong(0) == 2)
+    assert(near(scalar(Triangles.globalClusteringCoefficient(diamond)), 0.75)) // 3·2 / 8 wedges
+    assert(near(scalar(Triangles.averageClusteringCoefficient(diamond)), 5.0 / 6)) // 2/3, 2/3, 1, 1
+    assert(Triangles.triangleCount(star).head.getLong(0) == 0)
+    assert(near(scalar(Triangles.globalClusteringCoefficient(star)), 0.0))
+    assert(near(scalar(Triangles.averageClusteringCoefficient(star)), 0.0))
   }
 
   for (p <- partitionCounts) test(s"expandSeed and expandSeedSet match greedy conductance (partitions = $p)") {
