@@ -23,7 +23,10 @@ import graft.viz.{MaxentLayout, Octree}
   *    query to `<outDir>/<q>_<tag>.txt` (the plans/rNN evidence).
   *  - `jobs <sfDir> [q…]`: Spark job / stage / task counts and shuffle
   *    bytes written, from each query's second run, so one-time setup
-  *    (the DerivedGraphs memo, JIT) is excluded. One JSON line at the end.
+  *    (the DerivedGraphs memo, JIT) is excluded. Each run executes the
+  *    query's full plan ([[graft.graph.Fixpoint.materialize]]), as writing
+  *    its result does; `count()` would let the optimizer drop the columns
+  *    and joins the count does not need. One JSON line at the end.
   *  - `planprobe [n1,n2,…]`: plan-shape invariants (default n = 5000).
   *  - `scale [scale] [edgeFactor] [tri]`: graph kernels on an RMAT graph.
   *  - `baseline <metis.graph…>`: the reference baseline's six kernels.
@@ -136,7 +139,7 @@ object Tool {
         Seq(jobs, stages, tasks, shuffleWrite).foreach(_.set(0))
         attempt(spark, "jobs", n) {
           val fn = SparkEntry.queries(n)
-          val (c, dt) = timed(fn(spark, sfDir).count())
+          val (c, dt) = timed(Fixpoint.materialize(fn(spark, sfDir)))
           ListenerBusDrain(spark.sparkContext) // deliver the last job's events
           (c, dt, jobs.get, stages.get, tasks.get, shuffleWrite.get)
         }

@@ -2,6 +2,7 @@ package graft.algebra
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.Fixpoint
 
 /** Gauss–Seidel relaxation for COO systems `A x = b` — the engine's
   * port of the reference smoother
@@ -30,8 +31,9 @@ import org.apache.spark.sql.functions._
   * smooths: ≤ Δ+1, typically ≤ 8 after Jones–Plassmann). Vectors ride
   * `(rhs, i, v)` so batched right-hand sides advance through one sweep
   * together; the residual stop is one `groupBy("rhs")` aggregate per
-  * sweep (a k-row collect). State is `localCheckpoint`ed per sweep so
-  * lineage stays O(1) across sweeps.
+  * sweep (a k-row collect). State is cut per sweep so lineage stays
+  * O(1) across sweeps, and each call runs in a [[Fixpoint.scope]] that
+  * frees every sweep but the result.
   */
 object GaussSeidel {
 
@@ -44,15 +46,12 @@ object GaussSeidel {
     * pattern is symmetrized first: if either `a_ij` or `a_ji` is
     * nonzero, rows i and j may not share a color (one's update reads
     * the other's value). */
-  def colorMatrix(a: DataFrame, seed: Long = 42, maxRounds: Int = 64): DataFrame = {
-    val nodes = a.select(col("i")).distinct().localCheckpoint(true)
+  def colorMatrix(a: DataFrame, seed: Long = 42, maxRounds: Int = 64): DataFrame = Fixpoint.scope { st =>
+    val nodes = st.cut(a.select(col("i")).distinct())
     val off = a.filter(col("i") =!= col("j")).select("i", "j")
-    val adj = off.unionAll(off.select(col("j").as("i"), col("i").as("j")))
-      .distinct().localCheckpoint(true)
-    val prio = nodes.select(col("i"), xxhash64(col("i"), lit(seed)).as("p"))
-      .localCheckpoint(true)
+    val adj = st.cut(off.unionAll(off.select(col("j").as("i"), col("i").as("j"))).distinct())
+    val prio = st.cut(nodes.select(col("i"), xxhash64(col("i"), lit(seed)).as("p")))
     var colored = nodes.select(col("i"), lit(0).as("color")).limit(0)
-      .localCheckpoint(true)
     var uncolored = prio
     var round = 0
     while (round < maxRounds && !uncolored.isEmpty) {
@@ -75,57 +74,50 @@ object GaussSeidel {
           when(col("used").isNull, lit(0)).otherwise(
             element_at(filter(sequence(lit(0), size(col("used"))),
               c => !array_contains(col("used"), c)), 1)).as("color"))
-      colored = colored.unionAll(assigned).localCheckpoint(true)
-      uncolored = uncolored.join(assigned.select("i"), Seq("i"), "left_anti")
-        .localCheckpoint(true)
+      val (c0, u0) = (colored, uncolored)
+      colored = st.cut(colored.unionAll(assigned))
+      uncolored = st.cut(uncolored.join(assigned.select("i"), Seq("i"), "left_anti"))
+      st.retire(c0, u0)
       round += 1
     }
     require(uncolored.isEmpty, s"colorMatrix did not finish in $maxRounds rounds")
     colored
   }
 
-  /** `nu` multi-color Gauss–Seidel sweeps on `A x = b` from `x0` — the
-    * fixed-iteration smoother form (no residual stop; used as the
-    * Multigrid smoother). `colors` is a proper coloring `(i, color)` of
-    * the off-diagonal pattern; `colorIds` its distinct values in sweep
+  /** One multi-color Gauss–Seidel sweep on `A x = b` from `x0`, cut in
+    * `st` — the fixed-iteration smoother form (no residual stop; used as
+    * the Multigrid smoother). `colors` is a proper coloring `(i, color)`
+    * of the off-diagonal pattern; `colorIds` its distinct values in sweep
     * order. Vectors are sparse multi-rhs `(rhs, i, v)` (absent = 0). */
-  private[graft] def sweeps(a: DataFrame, b: DataFrame, x0: DataFrame,
-      colors: DataFrame, colorIds: Seq[Int], nu: Int): DataFrame = {
+  private[graft] def sweep(st: Fixpoint.Scope, a: DataFrame, b: DataFrame, x0: DataFrame,
+      colors: DataFrame, colorIds: Seq[Int]): DataFrame = {
     val off = a.filter(col("i") =!= col("j"))
     val diag = a.filter(col("i") === col("j"))
       .select(col("i"), col("v").as("d"))
     // rows to update each color step: EVERY matrix row of that color,
     // per rhs (b is sparse — a zero-rhs row still updates, its new
-    // value is −sigma/d). Lazy: each frame is consumed once per sweep.
+    // value is −sigma/d)
     val rhsSet = b.select("rhs").distinct()
-    val rowsByColor = colorIds.map { c =>
-      c -> diag.join(colors.filter(col("color") === c).select("i"), Seq("i"))
+    st.cut(colorIds.foldLeft(x0) { (x, c) =>
+      val rows = diag.join(colors.filter(col("color") === c).select("i"), Seq("i"))
         .crossJoin(rhsSet)
         .join(b.select(col("rhs"), col("i"), col("v").as("b0")), Seq("rhs", "i"), "left")
         .select(col("rhs"), col("i"),
           coalesce(col("b0"), lit(0.0)).as("bv"), col("d"))
-    }.toMap
-    var x = x0
-    for (_ <- 1 to nu) {
-      for (c <- colorIds) {
-        val rows = rowsByColor(c)
-        // restrict sigma to this color's rows via the (distinct) color
-        // node set — NOT rows.select("i"), which repeats each id once
-        // per rhs and would multiply every off-diagonal contribution
-        val sigma = off.join(colors.filter(col("color") === c).select("i"), Seq("i"))
-          .join(x.select(col("rhs"), col("i").as("j"), col("v").as("xv")), Seq("j"))
-          .groupBy("rhs", "i").agg(sum(col("v") * col("xv")).as("sigma"))
-        val updated = rows.join(sigma, Seq("rhs", "i"), "left")
-          .select(col("rhs"), col("i"),
-            ((col("bv") - coalesce(col("sigma"), lit(0.0))) / col("d")).as("v"))
-        val keep = x.join(colors.filter(col("color") === c).select("i"),
-            Seq("i"), "left_anti")
-          .select(col("rhs"), col("i"), col("v")) // anti-join reorders: re-fix positions
-        x = keep.unionAll(updated)
-      }
-      x = x.localCheckpoint(true)
-    }
-    x
+      // restrict sigma to this color's rows via the (distinct) color
+      // node set — NOT rows.select("i"), which repeats each id once
+      // per rhs and would multiply every off-diagonal contribution
+      val sigma = off.join(colors.filter(col("color") === c).select("i"), Seq("i"))
+        .join(x.select(col("rhs"), col("i").as("j"), col("v").as("xv")), Seq("j"))
+        .groupBy("rhs", "i").agg(sum(col("v") * col("xv")).as("sigma"))
+      val updated = rows.join(sigma, Seq("rhs", "i"), "left")
+        .select(col("rhs"), col("i"),
+          ((col("bv") - coalesce(col("sigma"), lit(0.0))) / col("d")).as("v"))
+      val keep = x.join(colors.filter(col("color") === c).select("i"),
+          Seq("i"), "left_anti")
+        .select(col("rhs"), col("i"), col("v")) // anti-join reorders: re-fix positions
+      keep.unionAll(updated)
+    })
   }
 
   /** Reference-shaped entry point (`GaussSeidelRelaxation::relax`):
@@ -138,31 +130,23 @@ object GaussSeidel {
     * otherwise [[colorMatrix]] builds one. */
   def relax(a: DataFrame, b: DataFrame, x0: Option[DataFrame] = None,
       maxIterations: Int = 1000, tolerance: Double = 1e-15,
-      colors: Option[DataFrame] = None): DataFrame = {
-    val cols = colors.getOrElse(colorMatrix(a)).localCheckpoint(true)
+      colors: Option[DataFrame] = None): DataFrame = Fixpoint.scope { st =>
+    val cols = colors.map(st.cut).getOrElse(colorMatrix(a))
     val colorIds = cols.select("color").distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    val zero = b.select(col("rhs"), col("i"), lit(0.0).as("v")).limit(0)
-    var x = x0.getOrElse(zero)
-    val bNorm = b.groupBy("rhs").agg(sum(col("v") * col("v")).as("n2"))
-      .collect().map(r => r.getLong(0) -> math.sqrt(r.getDouble(1))).toMap
+    var x = x0.getOrElse(b.select(col("rhs"), col("i"), lit(0.0).as("v")).limit(0))
+    val bNorm = Coo.norm2(b)
     var it = 0
     var done = false
     while (it < maxIterations && !done) {
-      x = sweeps(a, b, x, cols, colorIds, 1)
+      val prev = x
+      x = sweep(st, a, b, x, cols, colorIds)
+      st.retire(prev)
       it += 1
       if (tolerance > 0 && it < maxIterations) {
-        // residual b − Ax, per rhs
-        val ax = a.join(x.select(col("rhs"), col("i").as("j"), col("v").as("xv")), Seq("j"))
-          .groupBy("rhs", "i").agg(sum(col("v") * col("xv")).as("av"))
-        val res = b.select(col("rhs"), col("i"), col("v").as("bv"))
-          .join(ax, Seq("rhs", "i"), "full")
-          .select(col("rhs"),
-            (coalesce(col("bv"), lit(0.0)) - coalesce(col("av"), lit(0.0))).as("rv"))
-          .groupBy("rhs").agg(sum(col("rv") * col("rv")).as("n2"))
-          .collect().map(r2 => r2.getLong(0) -> math.sqrt(r2.getDouble(1))).toMap
+        val res = Coo.norm2(Coo.residual(a, b, x))
         done = bNorm.forall { case (rhs, bn) =>
-          res.getOrElse(rhs, 0.0) <= tolerance * math.max(bn, 1e-300)
+          math.sqrt(res.getOrElse(rhs, 0.0)) <= tolerance * math.max(math.sqrt(bn), 1e-300)
         }
       }
     }

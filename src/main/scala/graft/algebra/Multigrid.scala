@@ -2,6 +2,7 @@ package graft.algebra
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.graph.Fixpoint
 
 /** Multilevel (algebraic-multigrid) solver for graph Laplacian systems
   * `L x = b` — the engine's answer to the reference's LAMG solver
@@ -13,30 +14,25 @@ import org.apache.spark.sql.functions._
   * constant prolongator, one damped-Jacobi sweep smooths it
   * (`P = (I − ω D⁻¹A) P_tent`, ω = 2/3), and the Galerkin product
   * `Pᵀ L P` — a COO [[Coo.mxm]] — forms each coarse operator. As in
-  * LAMG itself, the cycle is KRYLOV-ACCELERATED: `solve` runs conjugate
-  * gradient preconditioned by one V(1,1)-cycle per iteration. A bare
+  * LAMG itself, the cycle is KRYLOV-ACCELERATED: `solve` runs the
+  * engine's one conjugate gradient, [[Coo.conjugateGradient]], with one
+  * V(1,1)-cycle per iteration as its preconditioner. A bare
   * piecewise-constant V-cycle was measured to stall on long rings
   * (error contraction degrades with level count — the known UA-AMG
   * failure mode); the SA + PCG combination is the standard repair and
-  * converges in an n-independent handful of iterations.
-  *
-  * Why this exists when [[Coo.conjugateGradient]] is already there:
-  * plain CG's iteration count grows with √cond(L) — on a ring or path
-  * of n nodes that is Θ(n) iterations (= Θ(n) shuffles). The multigrid
-  * preconditioner makes the iteration count O(1) in n, so long-diameter
-  * graphs converge in ~10–25 iterations where CG needs thousands of
-  * rounds. That flat-round property is exactly what survives a 100×
-  * scale-up.
+  * converges in an n-independent handful of iterations, where plain
+  * CG's iteration count grows with √cond(L) — Θ(n) rounds on a ring or
+  * path of n nodes.
   *
   * Scale design: every level's operator/prolongator is a COO DataFrame
   * built with joins + aggregations ([[Coo.mxm]] Galerkin products) and
-  * materialized once at setup; vectors ride `(rhs, i, v)` so k
-  * right-hand sides advance through one V-cycle together (the
-  * [[graft.graph.Electrical]] batching discipline). Per-rhs CG scalars
-  * (α, β, residual norms) are one `groupBy("rhs")` aggregate each — a
-  * k-row collect, not a data-sized one. The only driver work is the
-  * O(coarsestN²) dense solve at the coarsest level — a constant-size
-  * object by construction, the standard multigrid coarse-grid bound.
+  * stored once at setup; vectors ride `(rhs, i, v)` so k right-hand
+  * sides advance through one V-cycle together. The only driver work is
+  * the O(coarsestN²) dense solve at the coarsest level — a
+  * constant-size object by construction, the standard multigrid
+  * coarse-grid bound. Setup, each V-cycle and each solve run in a
+  * [[Fixpoint.scope]]: a hierarchy keeps only its levels' storage, a
+  * solve only its solution's.
   */
 object Multigrid {
 
@@ -51,30 +47,28 @@ object Multigrid {
       p: Option[DataFrame], n: Long,
       gsColors: Option[(DataFrame, Seq[Int])] = None)
 
-  /** Pairwise aggregation `(i, agg)` for one coarsening step: each node
-    * points at its strongest off-diagonal neighbor (|v|, symmetric-hash
-    * jitter to break ties deterministically), mutual pairs merge
-    * (aggregate id = smaller member), and unmatched nodes attach to
-    * their best neighbor's aggregate when it has one. Guard: if the
-    * step coarsens by < 10 %, fall back to blind id-halving (⌊i/2⌋
-    * pairing) so setup always terminates. */
-  private[graft] def aggregate(a: DataFrame): DataFrame = {
+  /** Pairwise aggregation `(i, agg)` for one coarsening step, stored:
+    * each node points at its strongest off-diagonal neighbor (|v|,
+    * symmetric-hash jitter to break ties deterministically), mutual
+    * pairs merge (aggregate id = smaller member), and unmatched nodes
+    * attach to their best neighbor's aggregate when it has one. Guard:
+    * if the step coarsens by < 10 %, fall back to blind id-halving
+    * (⌊i/2⌋ pairing) so setup always terminates. */
+  private[graft] def aggregate(a: DataFrame): DataFrame = Fixpoint.scope { st =>
     val off = a.filter(col("i") =!= col("j"))
       .select(col("i"), col("j"),
         (abs(col("v")) * (lit(1.0) + lit(1e-6) *
           (pmod(xxhash64(least(col("i"), col("j")),
             greatest(col("i"), col("j"))), lit(1000L)).cast("double") / 1000.0)))
           .as("s"))
-    val best = off.groupBy("i")
+    val best = st.cut(off.groupBy("i")
       .agg(max(struct(col("s"), (-col("j")).as("nj"))).as("m"))
-      .select(col("i"), (-col("m.nj")).as("b"))
-      .localCheckpoint(true)
+      .select(col("i"), (-col("m.nj")).as("b")))
     val nNodes = a.select(col("i")).distinct().count()
-    val mutual = best.as("x")
+    val mutual = st.cut(best.as("x")
       .join(best.as("y"), col("x.b") === col("y.i") && col("y.b") === col("x.i"))
       .filter(col("x.i") < col("x.b"))
-      .select(col("x.i").as("root"), col("x.b").as("mate"))
-      .localCheckpoint(true)
+      .select(col("x.i").as("root"), col("x.b").as("mate")))
     val members = mutual.select(col("root").as("i"), col("root").as("agg"))
       .unionAll(mutual.select(col("mate").as("i"), col("root").as("agg")))
     val unmatched = best.join(members.select(col("i")), Seq("i"), "left_anti")
@@ -86,9 +80,9 @@ object Multigrid {
       .select(col("i"), col("i").as("agg"))
     val agg = members.unionAll(attached).unionAll(leftover)
     val nAgg = agg.select("agg").distinct().count()
-    if (nAgg <= nNodes * 0.9) agg
-    else a.select(col("i")).distinct()
-      .select(col("i"), (col("i") - pmod(col("i"), lit(2L))).as("agg"))
+    st.cut(if (nAgg <= nNodes * 0.9) agg
+      else a.select(col("i")).distinct()
+        .select(col("i"), (col("i") - pmod(col("i"), lit(2L))).as("agg")))
   }
 
   /** Build the level hierarchy. `smoother` picks the relaxation used by
@@ -98,17 +92,17 @@ object Multigrid {
     * one join per color class per sweep; colorings are computed here,
     * once per level, and reused by every later solve). */
   def setup(a0: DataFrame, coarsestN: Int = 64, maxLevels: Int = 25,
-      smoother: String = "jacobi"): Seq[Level] = {
-    var a = a0.select(col("i"), col("j"), col("v")).localCheckpoint(true)
+      smoother: String = "jacobi"): Seq[Level] = Fixpoint.scope { st =>
+    var a = st.cut(a0.select(col("i"), col("j"), col("v")))
     var n = a.select("i").distinct().count()
     val levels = scala.collection.mutable.ArrayBuffer.empty[Level]
     var p: Option[DataFrame] = None
     var done = false
     while (!done) {
-      val dinv = a.filter(col("i") === col("j")).filter(col("v") =!= 0.0)
-        .select(col("i"), (lit(1.0) / col("v")).as("v")).localCheckpoint(true)
+      val dinv = st.cut(a.filter(col("i") === col("j")).filter(col("v") =!= 0.0)
+        .select(col("i"), (lit(1.0) / col("v")).as("v")))
       val gs = if (smoother == "gauss-seidel") {
-        val cols = GaussSeidel.colorMatrix(a).localCheckpoint(true)
+        val cols = GaussSeidel.colorMatrix(a)
         val ids = cols.select("color").distinct()
           .collect().map(_.getInt(0)).sorted.toSeq
         Some((cols, ids))
@@ -116,23 +110,20 @@ object Multigrid {
       levels += Level(a, dinv, p, n, gs)
       if (n <= coarsestN || levels.size >= maxLevels) done = true
       else {
-        val agg = aggregate(a).localCheckpoint(true)
-        val pTent = agg.select(col("i"), col("agg").as("j"), lit(1.0).as("v"))
+        val pTent = aggregate(a).select(col("i"), col("agg").as("j"), lit(1.0).as("v"))
         // smoothed-aggregation prolongator: P = (I − ω D⁻¹A) P_tent,
         // ω = 2/3 (λmax(D⁻¹L) ≤ 2). Row sums stay 1 (A·1 = 0), so the
         // Galerkin coarse operator remains a Laplacian.
         val da = a.join(dinv.select(col("i"), col("v").as("dv")), "i")
           .select(col("i"), col("j"), (col("v") * col("dv")).as("v"))
         val dap = Coo.mxm(da, pTent)
-        val pNew = pTent
+        val pNew = st.cut(pTent
           .unionAll(dap.select(col("i"), col("j"), (col("v") * (-2.0 / 3.0)).as("v")))
           .groupBy("i", "j").agg(sum("v").as("v"))
-          .filter(abs(col("v")) > 1e-300)
-          .localCheckpoint(true)
+          .filter(abs(col("v")) > 1e-300))
         // Galerkin: A_c = Pᵀ A P — two COO products
         val ap = Coo.mxm(a, pNew)
-        val ac = Coo.mxm(Coo.transpose(pNew), ap)
-          .filter(col("v") =!= 0.0).localCheckpoint(true)
+        val ac = st.cut(Coo.mxm(Coo.transpose(pNew), ap).filter(col("v") =!= 0.0))
         val nc = ac.select("i").distinct().count()
         if (nc >= n) done = true // safety: no progress, stop here
         else { a = ac; n = nc; p = Some(pNew) }
@@ -141,42 +132,19 @@ object Multigrid {
     levels.toSeq
   }
 
-  // ---- batched vector helpers: vectors are (rhs, i, v), sparse = 0 ----
-
-  private def vAdd(x: DataFrame, y: DataFrame): DataFrame =
-    x.select(col("rhs"), col("i"), col("v"))
-      .unionAll(y.select(col("rhs"), col("i"), col("v")))
-      .groupBy("rhs", "i").agg(sum("v").as("v"))
-
-  private def vScale(x: DataFrame, c: Double): DataFrame =
-    x.select(col("rhs"), col("i"), (col("v") * c).as("v"))
-
-  /** y = A x per rhs (A is rhs-agnostic). */
-  private def amxv(a: DataFrame, x: DataFrame): DataFrame =
-    a.join(x.select(col("rhs"), col("i").as("j"), col("v").as("xv")), "j")
-      .groupBy(col("rhs"), col("i")).agg(sum(col("v") * col("xv")).as("v"))
-
-  private def residual(a: DataFrame, b: DataFrame, x: DataFrame): DataFrame =
-    vAdd(b, vScale(amxv(a, x), -1.0))
-
-  /** nu damped-Jacobi sweeps on A x = b from x0 (ω = 2/3). */
-  private def jacobi(l: Level, b: DataFrame, x0: DataFrame, nu: Int): DataFrame = {
-    var x = x0
-    for (_ <- 1 to nu) {
-      val r = residual(l.a, b, x)
-      val corr = r.join(l.dinv.select(col("i"), col("v").as("dv")), "i")
-        .select(col("rhs"), col("i"), (col("v") * col("dv") * (2.0 / 3.0)).as("v"))
-      x = vAdd(x, corr).localCheckpoint(true)
-    }
-    x
+  /** One damped-Jacobi sweep on A x = b from x0 (ω = 2/3). */
+  private def jacobi(st: Fixpoint.Scope, l: Level, b: DataFrame, x0: DataFrame): DataFrame = {
+    val corr = Coo.residual(l.a, b, x0).join(l.dinv.select(col("i"), col("v").as("dv")), "i")
+      .select(col("rhs"), col("i"), (col("v") * col("dv") * (2.0 / 3.0)).as("v"))
+    st.cut(Coo.axpy(x0, lit(1.0), corr))
   }
 
-  /** Smoothing dispatch: multi-color Gauss–Seidel when the hierarchy
+  /** One smoothing sweep: multi-color Gauss–Seidel when the hierarchy
     * was set up with it, damped Jacobi otherwise. */
-  private def smooth(l: Level, b: DataFrame, x0: DataFrame, nu: Int): DataFrame =
+  private def smooth(st: Fixpoint.Scope, l: Level, b: DataFrame, x0: DataFrame): DataFrame =
     l.gsColors match {
-      case Some((cols, ids)) => GaussSeidel.sweeps(l.a, b, x0, cols, ids, nu)
-      case None => jacobi(l, b, x0, nu)
+      case Some((cols, ids)) => GaussSeidel.sweep(st, l.a, b, x0, cols, ids)
+      case None => jacobi(st, l, b, x0)
     }
 
   /** Dense coarsest-level solve on the driver: Laplacian pinned at the
@@ -222,54 +190,18 @@ object Multigrid {
     spark.createDataset(out.toSeq).toDF("rhs", "i", "v")
   }
 
-  private def zeroVec(b: DataFrame): DataFrame =
-    b.select(col("rhs"), col("i"), lit(0.0).as("v")).limit(0)
-
-  /** One V(nu1, nu2)-cycle for the error equation A e = r at `levels(d)`. */
-  private def vcycle(levels: Seq[Level], d: Int, r: DataFrame,
-      nu1: Int, nu2: Int): DataFrame = {
+  /** One V(1,1)-cycle for the error equation A e = r at `levels(d)`:
+    * a stored frame, or the coarsest level's driver-built one. */
+  private def vcycle(levels: Seq[Level], d: Int, r: DataFrame): DataFrame = Fixpoint.scope { st =>
     val l = levels(d)
     if (d == levels.size - 1) coarseSolve(l, r)
     else {
-      var x = smooth(l, r, zeroVec(r), nu1)
+      val x = smooth(st, l, r, r.select(col("rhs"), col("i"), lit(0.0).as("v")).limit(0))
       val pc = levels(d + 1).p.get // prolongator INTO level d+1's parent = d
-      val res = residual(l.a, r, x)
-      val rc = Coo.transpose(pc)
-        .join(res.select(col("rhs"), col("i").as("j"), col("v").as("rv")), "j")
-        .groupBy(col("rhs"), col("i")).agg(sum(col("v") * col("rv")).as("v"))
-        .localCheckpoint(true)
-      val xc = vcycle(levels, d + 1, rc, nu1, nu2)
-      val corr = pc
-        .join(xc.select(col("rhs"), col("i").as("j"), col("v").as("xv")), "j")
-        .groupBy(col("rhs"), col("i")).agg(sum(col("v") * col("xv")).as("v"))
-      x = vAdd(x, corr).localCheckpoint(true)
-      smooth(l, r, x, nu2)
+      val rc = st.cut(Coo.mxvBatch(Coo.transpose(pc), Coo.residual(l.a, r, x)))
+      val xc = vcycle(levels, d + 1, rc)
+      smooth(st, l, r, st.cut(Coo.axpy(x, lit(1.0), Coo.mxvBatch(pc, xc))))
     }
-  }
-
-  /** Per-rhs squared norm `Σ v²`. */
-  private def norm2(x: DataFrame): Map[Long, Double] =
-    x.groupBy("rhs").agg(sum(col("v") * col("v")).as("d"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-
-  /** Per-rhs dot product of two DISTINCT vector frames (sparse: a
-    * missing row is 0, so the inner join is exact). */
-  private def dot(x: DataFrame, y: DataFrame): Map[Long, Double] =
-    x.select(col("rhs"), col("i"), col("v").as("vx"))
-      .join(y.select(col("rhs"), col("i"), col("v").as("vy")), Seq("rhs", "i"))
-      .groupBy("rhs").agg(sum(col("vx") * col("vy")).as("d"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-
-  /** x + c(rhs)·y with a per-rhs scalar map (broadcast k-row join). */
-  private def axpy(x: DataFrame, y: DataFrame,
-      c: Map[Long, Double]): DataFrame = {
-    val spark = x.sparkSession
-    import spark.implicits._
-    val cDf = org.apache.spark.sql.functions.broadcast(
-      c.toSeq.toDF("rhs", "c"))
-    val scaled = y.join(cDf, "rhs")
-      .select(col("rhs"), col("i"), (col("v") * col("c")).as("v"))
-    vAdd(x, scaled)
   }
 
   /** Solve `L x = b` for every rhs in `b` (`(rhs, i, v)`, each rhs
@@ -280,7 +212,7 @@ object Multigrid {
     * rhs's relative residual ≤ `tol` or after `maxCycles` iterations. */
   def solve(a: DataFrame, b0: DataFrame, tol: Double = 1e-10,
       maxCycles: Int = 40, coarsestN: Int = 64): DataFrame =
-    solvePrepared(setup(a, coarsestN), b0, tol, maxCycles)
+    Fixpoint.scope(_ => solvePrepared(setup(a, coarsestN), b0, tol, maxCycles))
 
   /** [[solve]] against a hierarchy built once with [[setup]] — the
     * reference solver's `setupConnected` + repeated-solve pattern
@@ -289,53 +221,16 @@ object Multigrid {
     * MaxentStress passes the previous coordinates, so late solves need
     * only a correction). */
   def solvePrepared(levels: Seq[Level], b0: DataFrame, tol: Double = 1e-10,
-      maxCycles: Int = 40, x0: Option[DataFrame] = None): DataFrame = {
+      maxCycles: Int = 40, x0: Option[DataFrame] = None): DataFrame = Fixpoint.scope { st =>
     val top = levels.head
-    val b = b0.select(col("rhs"), col("i"), col("v")).localCheckpoint(true)
-    val bNorm = norm2(b).map { case (k, v) =>
-      k -> math.max(math.sqrt(v), 1e-300) }
-    var x = x0.map(_.select(col("rhs"), col("i"), col("v"))
-      .localCheckpoint(true)).getOrElse(zeroVec(b))
-    var r = x0.map(_ => residual(top.a, b, x).localCheckpoint(true)).getOrElse(b)
-    var iter = 0
-    var doneSolve = {
-      val rn0 = norm2(r)
-      bNorm.map { case (k, nb) =>
-        math.sqrt(rn0.getOrElse(k, 0.0)) / nb }.max <= tol
-    }
-    var z = if (doneSolve) r
-      else vcycle(levels, 0, r, nu1 = 1, nu2 = 1).localCheckpoint(true)
-    var p = z
-    var rz = if (doneSolve) Map.empty[Long, Double] else dot(r, z)
-    while (!doneSolve && iter < maxCycles) {
-      val ap = amxv(top.a, p).localCheckpoint(true)
-      val pap = dot(p, ap)
-      val alpha = rz.map { case (k, v) =>
-        val d = pap.getOrElse(k, 0.0)
-        k -> (if (math.abs(d) > 1e-300) v / d else 0.0)
-      }
-      x = axpy(x, p, alpha).localCheckpoint(true)
-      r = axpy(r, ap, alpha.map { case (k, v) => k -> -v }).localCheckpoint(true)
-      val rn = norm2(r)
-      val worst = bNorm.map { case (k, nb) =>
-        math.sqrt(rn.getOrElse(k, 0.0)) / nb }.max
-      if (worst <= tol) doneSolve = true
-      else {
-        z = vcycle(levels, 0, r, nu1 = 1, nu2 = 1).localCheckpoint(true)
-        val rzNew = dot(r, z)
-        val beta = rzNew.map { case (k, v) =>
-          val d = rz.getOrElse(k, 0.0)
-          k -> (if (math.abs(d) > 1e-300) v / d else 0.0)
-        }
-        p = axpy(z, p, beta).localCheckpoint(true)
-        rz = rzNew
-      }
-      iter += 1
-    }
+    val b = st.cut(b0.select(col("rhs"), col("i"), col("v")))
+    // ‖r‖/‖b‖ ≤ tol as a bound on ‖r‖² per rhs
+    val bound = Coo.norm2(b).map { case (k, v) =>
+      k -> math.pow(tol * math.max(math.sqrt(v), 1e-300), 2) }
+    val x = Coo.conjugateGradient(top.a, b, maxCycles, bound,
+      x0.map(_.select(col("rhs"), col("i"), col("v"))), Some(vcycle(levels, 0, _)))
     // project each solution mean-zero over the full node set
-    val nodes = top.a.select(col("i")).distinct()
-    val nN = nodes.count()
-    val means = x.groupBy("rhs").agg((sum("v") / nN).as("mean"))
+    val means = x.groupBy("rhs").agg((sum("v") / top.n).as("mean"))
     x.join(means, "rhs")
       .select(col("rhs"), col("i"), (col("v") - col("mean")).as("v"))
   }

@@ -14,71 +14,15 @@ import graft.algebra.Coo
   *
   * Where the reference samples uniform spanning trees to estimate the
   * diagonals, this implementation solves the corresponding linear
-  * systems with a BATCHED conjugate gradient: all right-hand sides ride
-  * one distributed iteration keyed by `rhs`, so k systems cost the same
+  * systems with the engine's batched conjugate gradient
+  * ([[Coo.conjugateGradient]]): all right-hand sides ride one
+  * distributed iteration keyed by `rhs`, so k systems cost the same
   * number of Spark rounds as one (documented deviation: CG in place of
   * UST sampling; same quantities, different estimator). Trace terms use
-  * Hutchinson probing with hash-sign Rademacher vectors.
+  * Hutchinson probing with hash-sign Rademacher vectors. Each call runs
+  * in a [[Fixpoint.scope]].
   */
 object Electrical {
-
-  /** Batched CG for SPD systems A x_r = b_r: `b` is `(rhs, i, v)`; all
-    * systems advance together — per iteration one MxV join + two
-    * per-rhs aggregates; the driver holds only the k scalar pairs. */
-  def conjugateGradientBatch(aIn: DataFrame, bIn: DataFrame, maxIter: Int = 40,
-      tol: Double = 1e-10): DataFrame = {
-    // break lineage up front: a is re-joined every iteration (cache it),
-    // and a/b often derive from the same scan — fresh attribute ids keep
-    // Catalyst's constraint propagation out of self-join territory
-    val a = aIn.localCheckpoint(true)
-    val b = bIn.localCheckpoint(true)
-    // constraint propagation trips over the per-iteration union-of-
-    // aggregates shape (UnionBase.rewriteConstraints key-not-found) and
-    // buys nothing for these one-row-per-node plans — off while iterating
-    val spark = a.sparkSession
-    val constraintsKey = "spark.sql.constraintPropagation.enabled"
-    val prevConstraints = spark.conf.get(constraintsKey, "true")
-    spark.conf.set(constraintsKey, "false")
-    try {
-    def dots(x: DataFrame, y: DataFrame): Map[Long, Double] =
-      x.select(col("rhs"), col("i"), col("v").as("xv"))
-        .join(y.select(col("rhs"), col("i"), col("v").as("yv")), Seq("rhs", "i"))
-        .groupBy("rhs").agg(sum(col("xv") * col("yv")).as("d"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    def scaleAdd(coef: Map[Long, Double], x: DataFrame, y: DataFrame): DataFrame = {
-      // y + coef(rhs) * x; the k per-rhs coefficients are inlined as a
-      // literal CASE chain (k is small — one scalar per system)
-      val coefExpr = coef.foldLeft(lit(0.0)) { case (acc, (k, v)) =>
-        when(col("rhs") === k, lit(v)).otherwise(acc)
-      }
-      x.select(col("rhs"), col("i"), (col("v") * coefExpr).as("v"))
-        .unionAll(y.select(col("rhs"), col("i"), col("v")))
-        .groupBy("rhs", "i").agg(sum("v").as("v"))
-    }
-    def mxvBatch(p: DataFrame): DataFrame =
-      a.join(p.select(col("rhs"), col("i").as("j"), col("v").as("pv")), "j")
-        .groupBy(col("rhs"), col("i")).agg(sum(col("v") * col("pv")).as("v"))
-
-    var x = b.select(col("rhs"), col("i"), lit(0.0).as("v")).localCheckpoint(true)
-    var r = b.localCheckpoint(true)
-    var p = r
-    var rs = dots(r, r)
-    var it = 0
-    while (it < maxIter && rs.values.exists(_ > tol)) {
-      val ap = mxvBatch(p).localCheckpoint(true)
-      val pap = dots(p, ap)
-      val alpha = rs.map { case (k, v) => k -> (if (pap.getOrElse(k, 0.0) == 0) 0.0 else v / pap(k)) }
-      x = scaleAdd(alpha, p, x).localCheckpoint(true)
-      r = scaleAdd(alpha.map { case (k, v) => k -> -v }, ap, r).localCheckpoint(true)
-      val rsNew = dots(r, r)
-      val beta = rsNew.map { case (k, v) => k -> (if (rs.getOrElse(k, 0.0) == 0) 0.0 else v / rs(k)) }
-      p = scaleAdd(beta, p, r).localCheckpoint(true)
-      rs = rsNew
-      it += 1
-    }
-    x
-    } finally spark.conf.set(constraintsKey, prevConstraints)
-  }
 
   /** Effective resistance for the queried node pairs: solve
     * L x = e_u − e_v per pair (batched), r(u,v) = x_u − x_v (reference
@@ -86,7 +30,7 @@ object Electrical {
     * spanning-edge centrality, the probability it appears in a uniform
     * spanning tree). `(u, v, resistance)`. */
   def effectiveResistance(g: PropertyGraph, pairs: Seq[(Long, Long)],
-      maxIter: Int = 40, solver: String = "cg"): DataFrame = {
+      maxIter: Int = 40, solver: String = "cg"): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
     val lap = Coo.laplacianMatrix(g)
@@ -99,7 +43,7 @@ object Electrical {
     val x =
       if (solver == "multigrid")
         graft.algebra.Multigrid.solve(lap, b, tol = 1e-12, maxCycles = maxIter)
-      else conjugateGradientBatch(lap, b, maxIter)
+      else Coo.conjugateGradient(st.cut(lap), b, maxIter)
     val pairDf = pairs.zipWithIndex.map { case ((u, v), k) => (k.toLong, u, v) }
       .toDF("rhs", "u", "v")
     val xu = x.select(col("rhs"), col("i").as("u"), col("v").as("xu"))
@@ -121,45 +65,55 @@ object Electrical {
     effectiveResistance(g, edges.toSeq, maxIter)
   }
 
+  /** The targets' diagonal entries of A⁻¹ and a Hutchinson estimate of
+    * its trace, from one batched solve of `a` (stored): rhs k is the
+    * unit vector of `targets(k)`, rhs 1000 + p the p-th hash-sign
+    * Rademacher probe (none when `probes` is 0). With `center` every rhs
+    * is shifted ⊥ 1, the solvable subspace of the singular Laplacian.
+    * The diagonal is one collect; the trace is mean_p z_pᵀ x_p. */
+  private def diagonalAndTrace(st: Fixpoint.Scope, a: DataFrame, g: PropertyGraph,
+      n: Long, targets: Seq[Long], probes: Int, seed: Long, maxIter: Int,
+      center: Boolean): (Map[Long, Double], Double) = {
+    val spark = a.sparkSession
+    import spark.implicits._
+    val tgt = targets.zipWithIndex.map { case (v, k) => (k.toLong, v) }.toDF("rhs", "tgt")
+    val unit =
+      if (center) g.vertices.join(tgt).select(col("rhs"), col("id").as("i"),
+        (when(col("id") === col("tgt"), 1.0).otherwise(0.0) - lit(1.0 / n)).as("v"))
+      else tgt.select(col("rhs"), col("tgt").as("i"), lit(1.0).as("v"))
+    val z = g.vertices.select(
+      explode(array((0 until probes).map(p => lit(1000L + p)): _*)).as("rhs"),
+      col("id").as("i"),
+      (lit(1.0) - lit(2.0) * pmod(xxhash64(lit(seed), col("rhs"), col("id")), lit(2L))).as("v"))
+    val zc = if (!center) z else z.join(z.groupBy("rhs").agg(avg("v").as("mu")), "rhs")
+      .select(col("rhs"), col("i"), (col("v") - col("mu")).as("v"))
+    val b = st.cut(if (probes == 0) unit else unit.unionByName(zc))
+    val x = Coo.conjugateGradient(a, b, maxIter)
+    val diag = x.join(tgt, "rhs").filter(col("i") === col("tgt"))
+      .select("tgt", "v").as[(Long, Double)].collect().toMap
+    val trace = if (probes == 0) 0.0 else x
+      .join(b.filter(col("rhs") >= 1000L).select(col("rhs"), col("i"), col("v").as("zv")),
+        Seq("rhs", "i"))
+      .agg(coalesce(sum(col("v") * col("zv")), lit(0.0))).head.getDouble(0) / probes
+    (diag, trace)
+  }
+
   /** Forest closeness for the candidate nodes (reference
     * `ForestCentrality.hpp:24`, van der Grinten et al. SDM 2021):
     * with Ω = (I+L)⁻¹, forest farness(v) = n·Ω_vv + tr(Ω) − 2 (Ω·1 = 1),
     * closeness = n / farness. Diagonal entries come from batched e_v
     * solves; tr(Ω) from `probes` Hutchinson vectors. `(id, closeness)`. */
   def forestCloseness(g: PropertyGraph, candidates: Seq[Long], probes: Int = 4,
-      maxIter: Int = 40, seed: Long = 42): DataFrame = {
+      maxIter: Int = 40, seed: Long = 42): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
     val n = g.vertices.count()
-    val lap = Coo.laplacianMatrix(g)
     val eye = g.vertices.select(col("id").as("i"), col("id").as("j"), lit(1.0).as("v"))
-    val a = Coo.eWiseAdd(lap, eye)
-    // rhs 0..k-1: e_v for candidates; rhs 1000+p: Rademacher probes
-    val eb = candidates.zipWithIndex.map { case (v, k) => (k.toLong, v, 1.0) }.toDF("rhs", "i", "v")
-    val zb = g.vertices.select(
-      explode(array((0 until probes).map(p => lit(1000L + p)): _*)).as("rhs"),
-      col("id").as("i"),
-      (lit(1.0) - lit(2.0) * pmod(xxhash64(lit(seed), col("rhs"), col("id")), lit(2L))).as("v"))
-    val x = conjugateGradientBatch(a,
-      eb.localCheckpoint(true).unionByName(zb.localCheckpoint(true)), maxIter)
-      .persist()
-    x.count()
-    val diag = candidates.zipWithIndex.map { case (v, k) =>
-      val d = x.filter(col("rhs") === k.toLong && col("i") === v)
-        .select("v").collect().headOption.map(_.getDouble(0)).getOrElse(0.0)
-      v -> d
-    }.toMap
-    // tr(Ω) ≈ mean_p z_pᵀ Ω z_p ; z re-derived by the same hash
-    val z = g.vertices.select(
-      explode(array((0 until probes).map(p => lit(1000L + p)): _*)).as("rhs"),
-      col("id").as("i"),
-      (lit(1.0) - lit(2.0) * pmod(xxhash64(lit(seed), col("rhs"), col("id")), lit(2L))).as("zv"))
-    val traceEst = x.join(z, Seq("rhs", "i"))
-      .filter(col("rhs") >= 1000L)
-      .agg(coalesce(sum(col("v") * col("zv")), lit(0.0))).head.getDouble(0) / probes
-    x.unpersist(false)
-    diag.toSeq.map { case (v, d) =>
-      val farness = n * d + traceEst - 2.0
+    val a = st.cut(Coo.eWiseAdd(Coo.laplacianMatrix(g), eye))
+    val (diag, trace) = diagonalAndTrace(st, a, g, n, candidates, probes, seed, maxIter,
+      center = false)
+    candidates.distinct.map { v =>
+      val farness = n * diag.getOrElse(v, 0.0) + trace - 2.0
       (v, if (farness <= 0) 0.0 else n / farness)
     }.toDF("id", "closeness")
   }
@@ -177,56 +131,19 @@ object Electrical {
     * for exactness gates / small graphs). `(id, closeness)`. */
   def electricalCloseness(g: PropertyGraph, candidates: Seq[Long], probes: Int = 4,
       maxIter: Int = 40, seed: Long = 42,
-      exactTrace: Boolean = false): DataFrame = {
+      exactTrace: Boolean = false): DataFrame = Fixpoint.scope { st =>
     val spark = g.edges.sparkSession
     import spark.implicits._
     val n = g.vertices.count()
-    val lap = Coo.laplacianMatrix(g)
-    if (exactTrace) {
-      val ids = g.vertices.select(col("id")).as[Long].collect().sorted
-      val all = ids.zipWithIndex.toSeq.map { case (v, k) => (k.toLong, v) }
-        .toDF("rhs", "tgt")
-      val eb = g.vertices.join(all)
-        .select(col("rhs"), col("id").as("i"),
-          (when(col("id") === col("tgt"), 1.0).otherwise(0.0) - lit(1.0 / n)).as("v"))
-      val x = conjugateGradientBatch(lap, eb.localCheckpoint(true), maxIter)
-      val diagAll = x.join(all, Seq("rhs")).filter(col("i") === col("tgt"))
-        .select(col("tgt").as("id"), col("v").as("d")).persist()
-      val trace = diagAll.agg(coalesce(sum("d"), lit(0.0))).head.getDouble(0)
-      val out = diagAll
-        .join(candidates.toDF("id"), Seq("id"), "left_semi")
-        .select(col("id"),
-          when(col("d") * n + trace <= 0, 0.0)
-            .otherwise(lit(n - 1.0) / (col("d") * n + lit(trace))).as("closeness"))
-        .localCheckpoint(true)
-      diagAll.unpersist(false)
-      return out
-    }
-    val cand = candidates.zipWithIndex.map { case (v, k) => (k.toLong, v) }.toDF("rhs", "tgt")
-    val eb = g.vertices.join(cand)
-      .select(col("rhs"), col("id").as("i"),
-        (when(col("id") === col("tgt"), 1.0).otherwise(0.0) - lit(1.0 / n)).as("v"))
-    // centered Rademacher probes: z − mean(z) stays ⊥ 1
-    val zRaw = g.vertices.select(
-      explode(array((0 until probes).map(p => lit(1000L + p)): _*)).as("rhs"),
-      col("id").as("i"),
-      (lit(1.0) - lit(2.0) * pmod(xxhash64(lit(seed), col("rhs"), col("id")), lit(2L))).as("v"))
-    val zMeans = zRaw.groupBy("rhs").agg(avg("v").as("mu"))
-    val zb = zRaw.join(zMeans, "rhs").select(col("rhs"), col("i"), (col("v") - col("mu")).as("v"))
-    val x = conjugateGradientBatch(lap,
-      eb.localCheckpoint(true).unionByName(zb.localCheckpoint(true)), maxIter).persist()
-    x.count()
-    val diag = candidates.zipWithIndex.map { case (v, k) =>
-      val d = x.filter(col("rhs") === k.toLong && col("i") === v)
-        .select("v").collect().headOption.map(_.getDouble(0)).getOrElse(0.0)
-      v -> d
-    }.toMap
-    val traceEst = x.join(zb.select(col("rhs"), col("i"), col("v").as("zv")), Seq("rhs", "i"))
-      .filter(col("rhs") >= 1000L)
-      .agg(coalesce(sum(col("v") * col("zv")), lit(0.0))).head.getDouble(0) / probes
-    x.unpersist(false)
-    diag.toSeq.map { case (v, d) =>
-      val farness = n * d + traceEst
+    val lap = st.cut(Coo.laplacianMatrix(g))
+    val targets =
+      if (exactTrace) g.vertices.select(col("id")).as[Long].collect().sorted.toSeq
+      else candidates
+    val (diag, hutchinson) = diagonalAndTrace(st, lap, g, n, targets,
+      if (exactTrace) 0 else probes, seed, maxIter, center = true)
+    val trace = if (exactTrace) diag.values.sum else hutchinson
+    candidates.distinct.map { v =>
+      val farness = n * diag.getOrElse(v, 0.0) + trace
       (v, if (farness <= 0) 0.0 else (n - 1.0) / farness)
     }.toDF("id", "closeness")
   }

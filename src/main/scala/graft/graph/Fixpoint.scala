@@ -220,10 +220,12 @@ object Fixpoint {
 
   private def storageRead(df: Dataset[_]): Seq[AnyRef] = storageIn(withCache(df))
 
-  /** The frames in a returned value: the value itself, or the fields of
-    * a tuple or case class (`(flow, cut)`, a `PropertyGraph`). */
+  /** The frames in a returned value: the value itself, the elements of a
+    * collection (a multigrid hierarchy's levels), or the fields of a
+    * tuple or case class (`(flow, cut)`, a `PropertyGraph`). */
   private def framesIn(x: Any): Iterator[Dataset[_]] = x match {
     case d: Dataset[_] => Iterator(d)
+    case it: Iterable[_] => it.iterator.flatMap(framesIn)
     case p: Product => p.productIterator.flatMap(framesIn)
     case _ => Iterator.empty
   }

@@ -154,12 +154,14 @@ object UstDiagonal {
     val (rhat, root) = sampleResistance(l, nSamples, seed)
     val n = l.ids.length
     // one CG solve for the root's L⁺ column (centered rhs ⊥ 1)
-    val lap = graft.algebra.Coo.laplacianMatrix(g)
     val rootId = l.ids(root)
-    val b = g.vertices.select(lit(0L).as("rhs"), col("id").as("i"),
-      (when(col("id") === rootId, 1.0).otherwise(0.0) - lit(1.0 / n)).as("v"))
-    val sol = Electrical.conjugateGradientBatch(lap, b, maxIter)
-      .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
+    val sol = Fixpoint.scope { st =>
+      val lap = st.cut(graft.algebra.Coo.laplacianMatrix(g))
+      val b = st.cut(g.vertices.select(lit(0L).as("rhs"), col("id").as("i"),
+        (when(col("id") === rootId, 1.0).otherwise(0.0) - lit(1.0 / n)).as("v")))
+      graft.algebra.Coo.conjugateGradient(lap, b, maxIter)
+        .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
+    }
     val solRoot = sol.getOrElse(rootId, 0.0)
     l.ids.zipWithIndex.map { case (id, i) =>
       val d =

@@ -468,10 +468,10 @@ object ExtendedQueries {
         .unionAll(ring.select(col("j").as("i"), col("j").as("j"), col("w").as("v")))
         .groupBy("i", "j").agg(sum("v").as("v"))
       val t1 = n / 2
-      val b = Seq((0L, 1.0), (t1.toLong, -1.0)).toDF("i", "v")
-      val x = Coo.conjugateGradient(lap, b, maxIter = 300, tol = 1e-18)
+      val b = Seq((0L, 0L, 1.0), (0L, t1.toLong, -1.0)).toDF("rhs", "i", "v")
+      val x = Coo.conjugateGradient(lap, b, maxIter = 300, tol = _ => 1e-18)
         .filter(col("i").isin(0L, t1.toLong))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
       val rCg = x.getOrElse(0L, 0.0) - x.getOrElse(t1.toLong, 0.0)
       val inv = ring.select(col("i"), (lit(1.0) / col("w")).as("r"))
       val total = inv.agg(sum("r")).first().getDouble(0)

@@ -35,7 +35,7 @@ class ElectricalSpec extends SparkSpec {
     assert(cc.keySet == Set(0L, 3L, 17L))
   }
 
-  test("batched CG solves k systems together and matches single-solve CG") {
+  test("batched CG solves k systems together and matches a dense solve") {
     val g = PropertyGraph.fromEdges(
       Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst"),
       directed = false)
@@ -44,13 +44,26 @@ class ElectricalSpec extends SparkSpec {
     val eye = g.vertices.select(col("id").as("i"), col("id").as("j"), lit(1.0).as("v"))
     val a = Coo.eWiseAdd(lap, eye)
     val b = Seq((0L, 0L, 1.0), (1L, 3L, 1.0)).toDF("rhs", "i", "v")
-    val batch = Electrical.conjugateGradientBatch(a, b, maxIter = 60)
+    val batch = Coo.conjugateGradient(a, b, maxIter = 60)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val single = Coo.conjugateGradient(a, Seq((0L, 1.0)).toDF("i", "v"), maxIter = 60)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    single.foreach { case (i, v) =>
-      assert(math.abs(batch.getOrElse((0L, i), 0.0) - v) < 1e-8)
+    // Gauss–Jordan elimination on the dense 5×5 system, one column per rhs
+    val n = 5
+    val m = Array.ofDim[Double](n, n + 2)
+    a.collect().foreach(r => m(r.getLong(0).toInt)(r.getLong(1).toInt) += r.getDouble(2))
+    m(0)(n) = 1.0; m(3)(n + 1) = 1.0
+    for (c <- 0 until n) {
+      val piv = (c until n).maxBy(r => math.abs(m(r)(c)))
+      val t = m(c); m(c) = m(piv); m(piv) = t
+      val d = m(c)(c)
+      for (k <- c until n + 2) m(c)(k) /= d
+      for (r <- 0 until n if r != c) {
+        val f = m(r)(c)
+        for (k <- c until n + 2) m(r)(k) -= f * m(c)(k)
+      }
     }
+    for (rhs <- 0 to 1; i <- 0 until n)
+      assert(math.abs(batch.getOrElse((rhs.toLong, i.toLong), 0.0) - m(i)(n + rhs)) < 1e-8,
+        s"rhs $rhs row $i: cg ${batch.get((rhs.toLong, i.toLong))} dense ${m(i)(n + rhs)}")
   }
 
   test("forest closeness ranks the karate hub above the periphery") {

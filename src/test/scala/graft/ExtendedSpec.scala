@@ -66,8 +66,8 @@ class ExtendedSpec extends SparkSpec {
     import spark.implicits._
     // A = [[4,1],[1,3]], b = [1,2] → x = [1/11, 7/11]
     val a = Seq((0L, 0L, 4.0), (0L, 1L, 1.0), (1L, 0L, 1.0), (1L, 1L, 3.0)).toDF("i", "j", "v")
-    val b = Seq((0L, 1.0), (1L, 2.0)).toDF("i", "v")
-    val x = Coo.conjugateGradient(a, b).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val b = Seq((0L, 0L, 1.0), (0L, 1L, 2.0)).toDF("rhs", "i", "v")
+    val x = Coo.conjugateGradient(a, b).collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
     assert(math.abs(x(0L) - 1.0 / 11) < 1e-6)
     assert(math.abs(x(1L) - 7.0 / 11) < 1e-6)
   }

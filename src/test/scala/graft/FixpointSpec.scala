@@ -167,6 +167,31 @@ class FixpointSpec extends SparkSpec {
     retained("nmi")(Community.nmi(p8, p12))
     retained("randIndex")(Community.randIndex(p8, p12))
     retained("overlappingNmi")(Community.overlappingNmi(p8, p12, 300L))
+    // the Laplacian solvers on the 12-node path; coarsestN 4 gives
+    // multigrid three levels
+    import spark.implicits._
+    import graft.algebra.{Coo, GaussSeidel, Multigrid}
+    val lap = Coo.laplacianMatrix(short)
+    val sdd = Coo.eWiseAdd(lap,
+      short.vertices.select(col("id").as("i"), col("id").as("j"), lit(1.0).as("v")))
+    val b = Seq((0L, 0L, 1.0), (0L, 11L, -1.0)).toDF("rhs", "i", "v")
+    retained("conjugateGradient")(Coo.conjugateGradient(sdd, b, maxIter = 4))
+    retained("conjugateGradient x0")(Coo.conjugateGradient(sdd, b, maxIter = 4,
+      x0 = Some(b.select(col("rhs"), col("i"), lit(0.5).as("v")))))
+    retained("multigrid")(Multigrid.solve(lap, b, maxCycles = 2, coarsestN = 4))
+    retained("gaussSeidel")(GaussSeidel.relax(sdd, b, maxIterations = 3))
+    retained("effectiveResistance")(Electrical.effectiveResistance(short, Seq((0L, 11L)), maxIter = 4))
+    retained("forestCloseness")(Electrical.forestCloseness(short, Seq(0L, 5L), probes = 2, maxIter = 4))
+    retained("electricalCloseness")(
+      Electrical.electricalCloseness(short, Seq(0L, 5L), probes = 2, maxIter = 4))
+    // a hierarchy keeps its levels' storage and nothing else; a solve
+    // reads it after setup's scope has closed
+    val base = persistedIds()
+    val levels = Multigrid.setup(lap, coarsestN = 4)
+    val stored = levels.flatMap(l => Seq(l.a, l.dinv) ++ l.p).size
+    assert(levels.size == 3 && added(base) <= stored,
+      s"setup retained ${added(base)} RDDs for $stored level frames")
+    retained("solvePrepared")(Multigrid.solvePrepared(levels, b, maxCycles = 2))
   }
 
   test("a persist / lazy-cut loop runs when a plan misses a cached state (AQE off)") {

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.algebra.{Coo, Multigrid}
-import graft.graph.PropertyGraph
-import graft.io.GraphReaders
+import graft.graph.{Generators, PropertyGraph}
 
 /** Multigrid Laplacian solver: closed-form effective resistance on
   * rings (series–parallel), agreement with CG where CG converges, and
@@ -28,6 +27,10 @@ class MultigridSpec extends SparkSpec {
     import spark.implicits._
     Seq((rhs, s, 1.0), (rhs, t, -1.0)).toDF("rhs", "i", "v")
   }
+
+  /** A seeded connected graph of karate's size: nodes 0..33, each
+    * attached to two earlier ones. */
+  private def generated: PropertyGraph = Generators.barabasiAlbert(spark, 34, 2, seed = 7)
 
   private def diff(x: DataFrame, s: Long, t: Long): Double = {
     val m = x.filter(col("i").isin(s, t)).collect()
@@ -74,23 +77,18 @@ class MultigridSpec extends SparkSpec {
     assert(math.abs(d(2, 10, 11) - 1.0 * 127 / 128) < 1e-6)
   }
 
-  test("karate Laplacian: multigrid agrees with converged CG") {
-    import spark.implicits._
-    val karate = GraphReaders.readMetis(spark, "/root/reference/input/karate.graph")
-    val a = Coo.laplacianMatrix(karate)
+  test("generated Laplacian: multigrid agrees with converged CG") {
+    val a = Coo.laplacianMatrix(generated)
     val x = Multigrid.solve(a, pairRhs(0, 33), tol = 1e-11)
-    val cg = Coo.conjugateGradient(a,
-      Seq((0L, 1.0), (33L, -1.0)).toDF("i", "v"), maxIter = 200, tol = 1e-22)
-    val cgM = cg.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val cg = Coo.conjugateGradient(a, pairRhs(0, 33), maxIter = 200, tol = _ => 1e-22)
+    val cgM = cg.collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
     val rMg = diff(x, 0, 33)
     val rCg = cgM(0L) - cgM(33L)
     assert(math.abs(rMg - rCg) < 1e-6, s"mg=$rMg cg=$rCg")
   }
 
   test("Electrical.effectiveResistance multigrid path matches CG") {
-    import spark.implicits._
-    val karate = GraphReaders.readMetis(spark, "/root/reference/input/karate.graph")
-    val g = graft.graph.PropertyGraph(karate.edges, directed = false)
+    val g = generated
     val pairs = Seq((0L, 33L), (5L, 16L), (2L, 8L))
     val cg = graft.graph.Electrical.effectiveResistance(g, pairs, maxIter = 200)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -102,7 +100,6 @@ class MultigridSpec extends SparkSpec {
   }
 
   test("long ring: V-cycles converge where 40-iteration CG is far off") {
-    import spark.implicits._
     val n = 4096
     val a = ringLaplacian(n, _ => 1.0).localCheckpoint(true)
     val b = pairRhs(0, n / 2)
@@ -114,10 +111,8 @@ class MultigridSpec extends SparkSpec {
     // rounds (= 40 shuffles) its answer is nowhere near — the iteration
     // count scales with the diameter, which is the scale argument for
     // keeping a multilevel solver
-    val cg = Coo.conjugateGradient(a,
-      Seq((0L, 1.0), (n / 2.toLong, -1.0)).toDF("i", "v"),
-      maxIter = 40, tol = 1e-22)
-    val cgM = cg.collect().map(r2 => r2.getLong(0) -> r2.getDouble(1)).toMap
+    val cg = Coo.conjugateGradient(a, b, maxIter = 40, tol = _ => 1e-22)
+    val cgM = cg.collect().map(r2 => r2.getLong(1) -> r2.getDouble(2)).toMap
     val rCg = cgM.getOrElse(0L, 0.0) - cgM.getOrElse(n / 2.toLong, 0.0)
     assert(math.abs(rCg - want) > 100.0,
       s"CG(40) unexpectedly converged ($rCg) — the multigrid rationale spec is stale")

@@ -19,8 +19,9 @@ class UstDiagonalSpec extends SparkSpec {
     val b = g.vertices.join(all)
       .select(col("rhs"), col("id").as("i"),
         (when(col("id") === col("tgt"), 1.0).otherwise(0.0) - lit(1.0 / n)).as("v"))
-    val x = Electrical.conjugateGradientBatch(
-      graft.algebra.Coo.laplacianMatrix(g), b.localCheckpoint(true), maxIter = 80)
+    val x = graft.algebra.Coo.conjugateGradient(
+      graft.algebra.Coo.laplacianMatrix(g).localCheckpoint(true), b.localCheckpoint(true),
+      maxIter = 80)
     x.join(all, Seq("rhs")).filter(col("i") === col("tgt"))
       .select(col("tgt"), col("v"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
